@@ -128,7 +128,7 @@ object PlanAudit {
         Seq("ExistingRDD", "BroadcastHashJoin", "HashAggregate"),
         Seq("FileScan parquet", "CartesianProduct", "BroadcastNestedLoopJoin",
           "Window", "SortAggregate")),
-      ("j8_asof", "the as-of join reads the events table ONCE (round 20: clicks and purchases are a tagged single pass — the click collapse is a conditional max whose group key carries each purchase's own event id, so purchases never merge), and the as-of lookup is the running last-non-null Window — no self-join, no second scan",
+      ("j8_asof", "the as-of join reads the events table ONCE (clicks and purchases are a tagged single pass — the click collapse is a conditional max whose group key carries each purchase's own event id, and a per-group row count re-expands identical or NULL-id purchases after the window as a Generate, so every purchase row comes out once), and the as-of lookup is the running last-non-null Window — no self-join, no second scan",
         Seq("Window", "HashAggregate"),
         Seq("SortMergeJoin", "CartesianProduct", "BroadcastNestedLoopJoin")),
       ("t30_alpha_mixture", "the α-temperature sampler keeps t18's plan shape exactly: one map-side-combined totals aggregate, ONE one-row broadcast carrying BOTH scalars (min and the Σ T^α normalizer) on the zero key, and one corpus pass for the ppm-integer keep predicate — the temperature knob adds per-source column arithmetic, never a new shuffle or pairing",

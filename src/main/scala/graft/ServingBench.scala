@@ -305,7 +305,7 @@ object ServingBench {
         (i, (0 until 64).map(d => math.sin(i * 0.31 + d).toFloat)))
         .toDF("vec_id", "embedding").write.parquet(fpath)
       val fhosts = (0 until nInst).map(i => s"i$i")
-      val insts = fhosts.map(h => new graft.streaming.FederatedVectorServing(
+      val insts = fhosts.map(h => new graft.streaming.VectorRestServing(
         if (h == fhosts.head) spark else spark.newSession(), fpath, 16, fhosts, h))
       val urls = fhosts.zip(insts).map { case (h, inst) =>
         h -> s"http://127.0.0.1:${inst.start(0, stride = 45, lloydIters = 1)}" }.toMap
@@ -336,7 +336,7 @@ object ServingBench {
       "k", 16, kvStore)
     val kvFleet: Seq[(Int, Seq[Double], Seq[Double])] = Seq(2, 8).map { nInst =>
       val fhosts = (0 until nInst).map(i => s"k$i")
-      val insts = fhosts.map(h => new graft.streaming.FederatedRestServing(
+      val insts = fhosts.map(h => new graft.streaming.RestServing(
         if (h == fhosts.head) spark else spark.newSession(),
         kvStore, "k", 16, fhosts, h))
       val urls = fhosts.zip(insts).map { case (h, inst) =>
@@ -374,7 +374,7 @@ object ServingBench {
       .toDF("doc_id", "text").write.parquet(dedupCorpus)
     val dedupFleet: Seq[(Int, Seq[Double])] = Seq(2, 8).map { nInst =>
       val fhosts = (0 until nInst).map(i => s"d$i")
-      val insts = fhosts.map(h => new graft.streaming.FederatedDedupServing(
+      val insts = fhosts.map(h => new graft.streaming.DedupRestServing(
         if (h == fhosts.head) spark else spark.newSession(),
         dedupCorpus, 16, fhosts, h))
       val urls = fhosts.zip(insts).map { case (h, inst) =>

@@ -147,29 +147,31 @@ object Joins {
     * user_id, event_type) columns — lets specs drive the real operator
     * with in-memory data. */
   def asOfJoinFrame(e: DataFrame): DataFrame = {
-    // ONE scan for both sides (round 20): the click and purchase views
-    // used to be two filters of the same events scan — Catalyst does not
-    // share scans across union branches, so the table was read (and
-    // fanned out) twice. One tagged pass groups clicks to one row per
-    // (user, ts) — max event_id wins, so the as-of result is unique and
-    // deterministic, exactly the old clicks collapse — while each
-    // purchase row keeps its own group (its unique event_id is part of
-    // the key), i.e. purchases pass through ungrouped as before.
+    // ONE scan for both sides: Catalyst does not share scans across
+    // union branches, so the click and purchase views are one tagged
+    // pass. Clicks group to one row per (user, ts) — max event_id wins,
+    // so the as-of result is unique and deterministic. Purchases group
+    // on their own event_id too; `n` counts the rows of a group, so
+    // identical purchase rows (or NULL-id purchases at one (user, ts))
+    // come back out one row each after the window, as the oracle emits
+    // them — a Generate over the filtered rows, no extra scan or shuffle.
     val kind = when(col("event_type") === "click", 0).otherwise(1)
     val tagged = e.filter(col("event_type").isin("click", "purchase"))
       .select(col("user_id"), col("ts"), kind.as("kind"),
         col("event_id"),
         when(kind === 1, col("event_id")).cast(LongType).as("pe"))
       .groupBy(col("user_id"), col("ts"), col("kind"), col("pe"))
-      .agg(max(when(col("kind") === 0, col("event_id"))).as("click_id"))
+      .agg(max(when(col("kind") === 0, col("event_id"))).as("click_id"),
+        count(lit(1)).cast(IntegerType).as("n"))
       .select(col("user_id"), col("ts"), col("kind"), col("click_id"),
-        col("pe").as("purchase_id"))
+        col("pe").as("purchase_id"), col("n"))
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("kind"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     tagged
       .withColumn("asof_click_id", last(col("click_id"), ignoreNulls = true).over(w))
       .filter(col("kind") === 1)
-      .select(col("purchase_id"), col("user_id"), col("asof_click_id"))
+      .select(explode(array_repeat(col("purchase_id"), col("n"))).as("purchase_id"),
+        col("user_id"), col("asof_click_id"))
   }
 }

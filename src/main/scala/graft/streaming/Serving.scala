@@ -53,11 +53,13 @@ object Serving {
   def hostFor(partition: Int, hosts: Seq[String]): String =
     hosts(partition % hosts.size)
 
-  /** `metadataForStoreAndKey` analog: which host serves this key. */
-  def metadataForKey(key: Any, numPartitions: Int, hosts: Seq[String]): (Int, String) = {
-    val p = partitionOf(key, numPartitions)
-    (p, hostFor(p, hosts))
-  }
+  /** The partitions [[hostFor]] assigns to `host`, ascending. */
+  def ownedBy(host: String, numPartitions: Int, hosts: Seq[String]): Seq[Int] =
+    (0 until numPartitions).filter(p => hostFor(p, hosts) == host)
+
+  /** The name a single serving instance, which owns every partition,
+    * reports for itself. */
+  val LocalHost = "local"
 
   /** Materialize a keyed store laid out by hosting partition: one
     * directory per state partition, so a key lookup reads exactly one
@@ -97,14 +99,6 @@ object Serving {
     df.where(col("p").isin(ps: _*) && col(keyCol).isin(keys: _*))
   }
 
-  /** All-entries scan (the reference's `allForStore`,
-    * WordCountInteractiveQueriesRestService.java:125-133): every partition
-    * directory is read — an all-entries read is by definition the full
-    * store. Key-ordered so iteration is deterministic like a RocksDB
-    * store's key-ordered cursor. */
-  def all(s: SparkSession, path: String, keyCol: String): DataFrame =
-    s.read.parquet(path).orderBy(col(keyCol))
-
   /** Key-RANGE scan (the reference's `rangeForKeyValueStore`,
     * WordCountInteractiveQueriesRestService.java:135-143). The store is
     * HASH-partitioned — that is exactly what routes point lookups to one
@@ -114,16 +108,16 @@ object Serving {
     * min/max pruning still applies within each file). A range-partitioned
     * store would prune directories here but lose O(1) point routing; the
     * reference makes the same trade (RocksDB range iterates the whole
-    * local shard). Bounds are inclusive, hashed/cast as the stored column
-    * type; an absent bound means unbounded on that side. */
-  def range(s: SparkSession, path: String, keyCol: String,
+    * local shard). `store` is the store's read, or the subset of its
+    * partitions an instance owns. Bounds are inclusive, cast as the stored
+    * column type; an absent bound means unbounded on that side. */
+  def range(store: DataFrame, keyCol: String,
       from: Option[String], to: Option[String]): DataFrame = {
-    val df = s.read.parquet(path)
-    val kt = df.schema(keyCol).dataType
+    val kt = store.schema(keyCol).dataType
     val lower = from.map(f => col(keyCol) >= boundLit(f, kt))
     val upper = to.map(t => col(keyCol) <= boundLit(t, kt))
     (lower ++ upper).reduceOption(_ && _)
-      .map(df.where).getOrElse(df)
+      .map(store.where).getOrElse(store)
       .orderBy(col(keyCol))
   }
 
@@ -169,9 +163,8 @@ object Serving {
       numPartitions: Int, valueCol: String, keyCol: String, k: Int): DataFrame = {
     val rank = Seq(col(valueCol).desc, col(keyCol).asc)
     val perHost = hosts.map { h =>
-      val owned = (0 until numPartitions).filter(p => hostFor(p, hosts) == h)
       s.read.parquet(path)
-        .where(col("p").isin(owned: _*))          // the host's partition subset
+        .where(col("p").isin(ownedBy(h, numPartitions, hosts): _*)) // the host's partitions
         .orderBy(rank: _*).limit(k)               // local top-k on that host
     }
     perHost.reduce(_ unionByName _)               // gather

@@ -69,20 +69,28 @@ class OpsSpec extends SparkSpec {
     // the tagged single-pass groups by (user, ts, kind, purchase event_id):
     // clicks at one (user, ts) collapse to max event_id, purchases never
     // collapse — two same-timestamp purchases must BOTH come out, matched
-    // to the same as-of click
+    // to the same as-of click; so must two IDENTICAL purchase rows, and
+    // two NULL-id purchases at one (user, ts) (one oracle row per raw row)
     val events = Seq(
-      (1L, 10L, 100L, "click", 0.0),
-      (2L, 10L, 100L, "click", 0.0),   // same (user, ts) click — collapses with 1
-      (3L, 20L, 100L, "purchase", 5.0),
-      (4L, 20L, 100L, "purchase", 6.0), // same (user, ts) purchase — must survive
-      (5L, 15L, 100L, "view", 0.0)      // other event types are ignored
+      (Some(1L), 10L, 100L, "click", 0.0),
+      (Some(2L), 10L, 100L, "click", 0.0),   // same (user, ts) click — collapses with 1
+      (Some(3L), 20L, 100L, "purchase", 5.0),
+      (Some(4L), 20L, 100L, "purchase", 6.0), // same (user, ts) purchase — must survive
+      (Some(5L), 15L, 100L, "view", 0.0),     // other event types are ignored
+      (Some(6L), 10L, 200L, "click", 0.0),
+      (Some(7L), 20L, 200L, "purchase", 5.0), // duplicated row: both copies out
+      (Some(7L), 20L, 200L, "purchase", 5.0),
+      (Some(8L), 10L, 300L, "click", 0.0),
+      (None, 20L, 300L, "purchase", 5.0),     // NULL ids at one (user, ts): both out
+      (None, 20L, 300L, "purchase", 6.0)
     ).map { case (id, t, u, ty, v) => (id, new java.sql.Timestamp(t), u, ty, v) }
       .toDF("event_id", "ts", "user_id", "event_type", "value")
     val got = Joins.asOfJoinFrame(events)
       .select("purchase_id", "asof_click_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got === Map(3L -> 2L, 4L -> 2L),
-      "both same-ts purchases out, matched to the collapsed (max id) click")
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1))).toSeq
+    assert(got.sortBy(_.toString) === Seq(Some(3L) -> 2L, Some(4L) -> 2L,
+      Some(7L) -> 6L, Some(7L) -> 6L, None -> 8L, None -> 8L).sortBy(_.toString),
+      "every purchase row out once, matched to the collapsed (max id) click")
   }
 
   test("dailyWindowStart handles the Paris DST transition (CustomWindowTest golden)") {

@@ -112,10 +112,10 @@ class DailyCycleSpec extends SparkSpec {
     val sparkB = spark.newSession()
     sparkB.conf.set("spark.graft.artifacts.dir", tmpStore)
     sparkB.conf.set("spark.graft.artifacts.enabled", "true")
-    val dedupA = new FederatedDedupServing(spark, docPath, 4, hosts, "instance-a")
-    val dedupB = new FederatedDedupServing(sparkB, docPath, 4, hosts, "instance-b")
-    val vecA = new FederatedVectorServing(spark, embPath, 8, hosts, "instance-a")
-    val vecB = new FederatedVectorServing(sparkB, embPath, 8, hosts, "instance-b")
+    val dedupA = new DedupRestServing(spark, docPath, 4, hosts, "instance-a")
+    val dedupB = new DedupRestServing(sparkB, docPath, 4, hosts, "instance-b")
+    val vecA = new VectorRestServing(spark, embPath, 8, hosts, "instance-a")
+    val vecB = new VectorRestServing(sparkB, embPath, 8, hosts, "instance-b")
     var queries = Seq.empty[org.apache.spark.sql.streaming.StreamingQuery]
     try {
       // ================= DAY 0 =================

@@ -93,10 +93,10 @@ class ServingSpec extends SparkSpec {
     assert(hit.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((42L, 126L)))
   }
 
-  test("metadataForKey distributes keys across hosts like the reference's assignment") {
+  test("partitionOf + hostFor distribute keys across hosts like the reference's assignment") {
     val hosts = Seq("host-a:7070", "host-b:7070", "host-c:7070")
     val n = 12
-    val byHost = (1L to 300L).groupBy(k => Serving.metadataForKey(k, n, hosts)._2)
+    val byHost = (1L to 300L).groupBy(k => Serving.hostFor(Serving.partitionOf(k, n), hosts))
     assert(byHost.keySet === hosts.toSet, "every host serves some keys")
     // partition → host is stable and exhaustive
     (0 until n).foreach(p =>
@@ -156,10 +156,14 @@ class ServingSpec extends SparkSpec {
       val (bc, bb) = get("/state/keyvalues?keys=1,2,3")
       assert(bc === 200)
       assert(Seq(1, 2, 3).forall(k => bb.contains(s""""k":$k,"v":${k * 10}""")))
-      // metadata: the served partition/host must equal the routing math
-      val (p42, h42) = Serving.metadataForKey("42", n, hosts)
+      // metadata: the served partition/host must equal the routing math,
+      // the key hashed as the store's Long — the partition the row is in
+      val p42 = Serving.partitionOf(42L, n)
+      val h42 = Serving.hostFor(p42, hosts)
       assert(get("/state/instance/42") ===
         (200, s"""{"partition":$p42,"host":"$h42"}"""))
+      assert(spark.read.parquet(s"$path/p=$p42").where(col("k") === 42L).count() === 1,
+        s"key 42 must be stored in partition $p42's directory")
       // instances: every partition owned by exactly one host
       val (ic, ib) = get("/state/instances")
       assert(ic === 200)
@@ -261,8 +265,8 @@ class ServingSpec extends SparkSpec {
     // two SparkSessions (the reference's two app processes), each instance
     // reading ONLY its own partition subset
     val sparkB = spark.newSession()
-    val a = new FederatedRestServing(spark, path, "k", n, hosts, "instance-a")
-    val b = new FederatedRestServing(sparkB, path, "k", n, hosts, "instance-b")
+    val a = new RestServing(spark, path, "k", n, hosts, "instance-a")
+    val b = new RestServing(sparkB, path, "k", n, hosts, "instance-b")
     val urls = Map("instance-a" -> s"http://127.0.0.1:${a.start()}",
       "instance-b" -> s"http://127.0.0.1:${b.start()}")
     a.peerUrls = urls; b.peerUrls = urls // metadata discovery
@@ -353,8 +357,8 @@ class ServingSpec extends SparkSpec {
     }.toDF("k", "f", "d")
       .select(col("k"), col("f"), col("d").cast("decimal(22,2)").as("d"))
     Serving.writePartitionedStore(mixed, "k", n, mpath)
-    val a = new FederatedRestServing(spark, mpath, "k", n, hosts, "instance-a")
-    val b = new FederatedRestServing(spark.newSession(), mpath, "k", n, hosts,
+    val a = new RestServing(spark, mpath, "k", n, hosts, "instance-a")
+    val b = new RestServing(spark.newSession(), mpath, "k", n, hosts,
       "instance-b")
     val urls = Map("instance-a" -> s"http://127.0.0.1:${a.start()}",
       "instance-b" -> s"http://127.0.0.1:${b.start()}")
@@ -393,8 +397,8 @@ class ServingSpec extends SparkSpec {
     Serving.writePartitionedStore(
       (1L to 300L).map(k => (k, k * 10)).toDF("k", "v"), "k", n, path)
     val sparkB = spark.newSession()
-    val a = new FederatedRestServing(spark, path, "k", n, hosts, "instance-a")
-    val b = new FederatedRestServing(sparkB, path, "k", n, hosts, "instance-b")
+    val a = new RestServing(spark, path, "k", n, hosts, "instance-a")
+    val b = new RestServing(sparkB, path, "k", n, hosts, "instance-b")
     // the single-instance hot tier is the byte-parity reference
     val single = new RestServing(spark, path, "k", n, hosts)
     val singlePort = single.start()
@@ -451,8 +455,8 @@ class ServingSpec extends SparkSpec {
     Serving.writePartitionedStore(
       (1L to 100L).map(k => (k, k * 10)).toDF("k", "v"), "k", n, path)
     val sparkB = spark.newSession()
-    val a = new FederatedRestServing(spark, path, "k", n, hosts, "instance-a")
-    val b = new FederatedRestServing(sparkB, path, "k", n, hosts, "instance-b")
+    val a = new RestServing(spark, path, "k", n, hosts, "instance-a")
+    val b = new RestServing(sparkB, path, "k", n, hosts, "instance-b")
     val urls = Map("instance-a" -> s"http://127.0.0.1:${a.start()}",
       "instance-b" -> s"http://127.0.0.1:${b.start()}")
     a.peerUrls = urls; b.peerUrls = urls
@@ -585,8 +589,8 @@ class ServingSpec extends SparkSpec {
     val single = new VectorRestServing(spark, path)
     val singlePort = single.start(0, stride = 14, lloydIters = 1)
     val sparkB = spark.newSession()
-    val a = new FederatedVectorServing(spark, path, nP, hosts, "instance-a")
-    val b = new FederatedVectorServing(sparkB, path, nP, hosts, "instance-b")
+    val a = new VectorRestServing(spark, path, nP, hosts, "instance-a")
+    val b = new VectorRestServing(sparkB, path, nP, hosts, "instance-b")
     val urls = Map(
       "instance-a" -> s"http://127.0.0.1:${a.start(0, stride = 14, lloydIters = 1)}",
       "instance-b" -> s"http://127.0.0.1:${b.start(0, stride = 14, lloydIters = 1)}")
@@ -674,8 +678,8 @@ class ServingSpec extends SparkSpec {
     val single = new SearchRestServing(spark, path)
     val singlePort = single.start(0)
     val sparkB = spark.newSession()
-    val a = new FederatedSearchServing(spark, path, nP, hosts, "instance-a")
-    val b = new FederatedSearchServing(sparkB, path, nP, hosts, "instance-b")
+    val a = new SearchRestServing(spark, path, nP, hosts, "instance-a")
+    val b = new SearchRestServing(sparkB, path, nP, hosts, "instance-b")
     val urls = Map("instance-a" -> s"http://127.0.0.1:${a.start()}",
       "instance-b" -> s"http://127.0.0.1:${b.start()}")
     a.peerUrls = urls; b.peerUrls = urls
@@ -733,8 +737,8 @@ class ServingSpec extends SparkSpec {
     val spath = Files.createTempDirectory("graft-sreload").toString + "/docs.parquet"
     Seq((1L, "cat dog cat"), (2L, "dog cat"), (3L, "cat fish"))
       .toDF("doc_id", "text").write.parquet(spath)
-    val sa = new FederatedSearchServing(spark, spath, 4, hosts, "instance-a")
-    val sb = new FederatedSearchServing(spark.newSession(), spath, 4, hosts, "instance-b")
+    val sa = new SearchRestServing(spark, spath, 4, hosts, "instance-a")
+    val sb = new SearchRestServing(spark.newSession(), spath, 4, hosts, "instance-b")
     val surls = Map("instance-a" -> s"http://127.0.0.1:${sa.start()}",
       "instance-b" -> s"http://127.0.0.1:${sb.start()}")
     sa.peerUrls = surls; sb.peerUrls = surls
@@ -773,8 +777,8 @@ class ServingSpec extends SparkSpec {
     val dpath = Files.createTempDirectory("graft-dreload").toString + "/docs.parquet"
     val corpusV1 = (0L until 20L).map(i => (i, s"standing corpus doc $i body"))
     corpusV1.toDF("doc_id", "text").write.parquet(dpath)
-    val da = new FederatedDedupServing(spark, dpath, 4, hosts, "instance-a")
-    val db = new FederatedDedupServing(spark.newSession(), dpath, 4, hosts, "instance-b")
+    val da = new DedupRestServing(spark, dpath, 4, hosts, "instance-a")
+    val db = new DedupRestServing(spark.newSession(), dpath, 4, hosts, "instance-b")
     val durls = Map("instance-a" -> s"http://127.0.0.1:${da.start()}",
       "instance-b" -> s"http://127.0.0.1:${db.start()}")
     da.peerUrls = durls; db.peerUrls = durls
@@ -886,8 +890,8 @@ class ServingSpec extends SparkSpec {
     val path = Files.createTempDirectory("graft-fannreload").toString + "/emb.parquet"
     corpus(0).toDF("vec_id", "embedding").write.parquet(path)
     val hosts = Seq("instance-a", "instance-b")
-    val a = new FederatedVectorServing(spark, path, 8, hosts, "instance-a")
-    val b = new FederatedVectorServing(spark.newSession(), path, 8, hosts, "instance-b")
+    val a = new VectorRestServing(spark, path, 8, hosts, "instance-a")
+    val b = new VectorRestServing(spark.newSession(), path, 8, hosts, "instance-b")
     val urls = Map("instance-a" -> s"http://127.0.0.1:${a.start(0, stride = 14, lloydIters = 1)}",
       "instance-b" -> s"http://127.0.0.1:${b.start(0, stride = 14, lloydIters = 1)}")
     a.peerUrls = urls; b.peerUrls = urls
@@ -929,8 +933,8 @@ class ServingSpec extends SparkSpec {
     val single = new DedupRestServing(spark, path)
     val singlePort = single.start(0)
     val sparkB = spark.newSession()
-    val a = new FederatedDedupServing(spark, path, nP, hosts, "instance-a")
-    val b = new FederatedDedupServing(sparkB, path, nP, hosts, "instance-b")
+    val a = new DedupRestServing(spark, path, nP, hosts, "instance-a")
+    val b = new DedupRestServing(sparkB, path, nP, hosts, "instance-b")
     val urls = Map("instance-a" -> s"http://127.0.0.1:${a.start()}",
       "instance-b" -> s"http://127.0.0.1:${b.start()}")
     a.peerUrls = urls; b.peerUrls = urls
@@ -1592,8 +1596,8 @@ class ServingSpec extends SparkSpec {
     val path = Files.createTempDirectory("graft-genroll").toString + "/emb.parquet"
     corpus(0).toDF("vec_id", "embedding").write.parquet(path)
     val hosts = Seq("instance-a", "instance-b")
-    val a = new FederatedVectorServing(spark, path, 8, hosts, "instance-a")
-    val b = new FederatedVectorServing(spark.newSession(), path, 8, hosts, "instance-b")
+    val a = new VectorRestServing(spark, path, 8, hosts, "instance-a")
+    val b = new VectorRestServing(spark.newSession(), path, 8, hosts, "instance-b")
     val urls = Map("instance-a" -> s"http://127.0.0.1:${a.start(0, stride = 14, lloydIters = 1)}",
       "instance-b" -> s"http://127.0.0.1:${b.start(0, stride = 14, lloydIters = 1)}")
     a.peerUrls = urls; b.peerUrls = urls
@@ -1714,8 +1718,8 @@ class ServingSpec extends SparkSpec {
     val path = Files.createTempDirectory("graft-kvroll").toString
     Serving.writePartitionedStore(
       (1L to 100L).map(k => (k, k * 10)).toDF("k", "v"), "k", n, path)
-    val a = new FederatedRestServing(spark, path, "k", n, hosts, "instance-a")
-    val b = new FederatedRestServing(spark.newSession(), path, "k", n, hosts, "instance-b")
+    val a = new RestServing(spark, path, "k", n, hosts, "instance-a")
+    val b = new RestServing(spark.newSession(), path, "k", n, hosts, "instance-b")
     val urls = Map("instance-a" -> s"http://127.0.0.1:${a.start()}",
       "instance-b" -> s"http://127.0.0.1:${b.start()}")
     a.peerUrls = urls; b.peerUrls = urls
@@ -2036,8 +2040,8 @@ class ServingSpec extends SparkSpec {
     spark.conf.set("spark.graft.artifacts.enabled", "true")
     sparkB.conf.set("spark.graft.artifacts.dir", tmpStore)
     sparkB.conf.set("spark.graft.artifacts.enabled", "true")
-    val a = new FederatedVectorServing(spark, path, 8, hosts, "instance-a")
-    val b = new FederatedVectorServing(sparkB, path, 8, hosts, "instance-b")
+    val a = new VectorRestServing(spark, path, 8, hosts, "instance-a")
+    val b = new VectorRestServing(sparkB, path, 8, hosts, "instance-b")
     try {
       val urls = Map(
         "instance-a" -> s"http://127.0.0.1:${a.start(0, stride = 14, lloydIters = 1)}",
@@ -2280,8 +2284,8 @@ class ServingSpec extends SparkSpec {
     docs.toDF("doc_id", "text").write.parquet(path)
     val hosts = Seq("instance-a", "instance-b")
     val single = new SearchRestServing(spark, path)
-    val a = new FederatedSearchServing(spark, path, 8, hosts, "instance-a")
-    val b = new FederatedSearchServing(spark.newSession(), path, 8, hosts, "instance-b")
+    val a = new SearchRestServing(spark, path, 8, hosts, "instance-a")
+    val b = new SearchRestServing(spark.newSession(), path, 8, hosts, "instance-b")
     val sport = single.start()
     val urls = Map("instance-a" -> s"http://127.0.0.1:${a.start()}",
       "instance-b" -> s"http://127.0.0.1:${b.start()}")
@@ -2375,9 +2379,9 @@ class ServingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-fedexact").toString
     docs.toDF("doc_id", "text").write.parquet(s"$dir/docs.parquet")
     val hosts = Seq("instance-a", "instance-b")
-    val a = new FederatedSearchServing(spark, s"$dir/docs.parquet", 8, hosts,
+    val a = new SearchRestServing(spark, s"$dir/docs.parquet", 8, hosts,
       "instance-a")
-    val b = new FederatedSearchServing(spark.newSession(), s"$dir/docs.parquet",
+    val b = new SearchRestServing(spark.newSession(), s"$dir/docs.parquet",
       8, hosts, "instance-b")
     val urls = Map("instance-a" -> s"http://127.0.0.1:${a.start()}",
       "instance-b" -> s"http://127.0.0.1:${b.start()}")
@@ -2402,5 +2406,92 @@ class ServingSpec extends SparkSpec {
           === (200, "true"), s"absent terms must not poison exactness via $via")
       }
     } finally { a.stop(); b.stop() }
+  }
+
+  test("one class per family: a two-instance KV fleet's owned-shard " +
+      "/state/keyvalues/all and ?keys= answers are disjoint and together " +
+      "equal the one-host answer") {
+    import spark.implicits._
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    val n = 8
+    val hosts = Seq("instance-a", "instance-b")
+    val path = Files.createTempDirectory("graft-kvunion").toString
+    Serving.writePartitionedStore(
+      (1L to 120L).map(k => (k, k * 10)).toDF("k", "v"), "k", n, path)
+    val one = new RestServing(spark, path, "k", n, hosts)
+    val a = new RestServing(spark, path, "k", n, hosts, "instance-a")
+    val b = new RestServing(spark.newSession(), path, "k", n, hosts, "instance-b")
+    val ports = Seq(one.start(), a.start(), b.start())
+    try {
+      val client = HttpClient.newHttpClient()
+      def rows(port: Int, u: String): Seq[String] = {
+        val r = client.send(HttpRequest.newBuilder(java.net.URI.create(
+          s"http://127.0.0.1:$port$u")).GET().build(), HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() === 200, r.body())
+        "\\{[^}]*\\}".r.findAllIn(r.body()).toSeq
+      }
+      val keys = (1L to 120L by 7).mkString(",")
+      for (u <- Seq("/state/keyvalues/all", s"/state/keyvalues?keys=$keys")) {
+        val Seq(whole, onA, onB) = ports.map(rows(_, u))
+        assert(onA.nonEmpty && onB.nonEmpty, s"both shards answer $u")
+        assert(onA.intersect(onB).isEmpty, s"owned shards overlap on $u")
+        assert((onA ++ onB).sorted === whole.sorted, s"shards must cover $u")
+      }
+    } finally { one.stop(); a.stop(); b.stop() }
+  }
+
+  test("one class per family: a one-host KV instance serves the fleet " +
+      "endpoints — /state/reload/all reports its own generation, " +
+      "/state/topk/local equals /state/topk, and a junk key is a 400") {
+    import spark.implicits._
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    val n = 4
+    val path = Files.createTempDirectory("graft-onehost").toString
+    Serving.writePartitionedStore(
+      (1L to 60L).map(k => (k, k % 13)).toDF("k", "v"), "k", n, path)
+    val rest = new RestServing(spark, path, "k", n, Seq("h0:1"))
+    val port = rest.start()
+    try {
+      val client = HttpClient.newHttpClient()
+      def get(u: String): (Int, String) = {
+        val r = client.send(HttpRequest.newBuilder(java.net.URI.create(
+          s"http://127.0.0.1:$port$u")).GET().build(), HttpResponse.BodyHandlers.ofString())
+        (r.statusCode(), r.body())
+      }
+      val (rc, rb) = get("/state/reload/all")
+      assert(rc === 200, rb)
+      assert(rb === s"""{"reloaded":true,"uniform":true,"instances":[{"host":"${
+        Serving.LocalHost}","generation":"${rest.generation}"}]}""")
+      for (k <- Seq(1, 5, 60))
+        assert(get(s"/state/topk/local?value=v&k=$k") === get(s"/state/topk?value=v&k=$k"),
+          s"a gather over zero peers is the local partial (k=$k)")
+      // a key that does not parse as the store's Long key is the caller's 400
+      for (u <- Seq("/state/keyvalue/hot/abc", "/state/keyvalue/abc", "/state/instance/abc"))
+        assert(get(u)._1 === 400, u)
+    } finally rest.stop()
+  }
+
+  test("one class per family: a corpus whose dimension does not split into " +
+      "PqM subspaces still starts — float tiers 200, PQ tiers 400") {
+    import spark.implicits._
+    val dim = graft.ops.Similarity.PqM * 2 + 1
+    val path = Files.createTempDirectory("graft-nopq").toString + "/emb.parquet"
+    (0 until 60).map(id => (id.toLong,
+      (0 until dim).map(i => (math.sin(id * 0.7 + i) + (if (i == id % dim) 3 else 0)).toFloat)))
+      .toDF("vec_id", "embedding").write.parquet(path)
+    val rest = new VectorRestServing(spark, path)
+    val port = rest.start(0, stride = 8, lloydIters = 1)
+    try {
+      assert(rest.lastPqSource === "none")
+      val client = java.net.http.HttpClient.newHttpClient()
+      def status(u: String): Int = client.send(java.net.http.HttpRequest.newBuilder(
+        java.net.URI.create(s"http://127.0.0.1:$port$u")).GET().build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString()).statusCode()
+      val qs = s"vec=${Seq.tabulate(dim)(i => if (i == 1) 3.0 else 0.5).mkString(",")}&k=3"
+      for (u <- Seq("/ann/topk", "/ann/topk/hot", "/ann/topk/exact"))
+        assert(status(s"$u?$qs") === 200, u)
+      for (u <- Seq("/ann/topk/pq", "/ann/topk/pq/hot"))
+        assert(status(s"$u?$qs") === 400, u)
+    } finally rest.stop()
   }
 }
