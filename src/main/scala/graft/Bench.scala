@@ -95,39 +95,13 @@ object Bench {
       .filter { case (name, _) => onlyQueries.forall(_.contains(name)) }
       .flatMap { case (name, fn) =>
       val times = (1 to reps).flatMap { _ =>
-        // d8 is the LABEL phase of the label/apply dedup pipeline and
-        // memoizes its labels for d10's apply phase; re-measuring it must
-        // recompute, not serve the memo. (d10 keeps the memo — measuring
-        // the apply phase against prepared labels IS its contract.)
+        // A label/build phase re-measures its own build, so its memo is
+        // dropped before each rep; the apply/search phases read the memo
+        // (their first rep pays the build). c10's gates re-measure the
+        // stats they gate on, so the stats memos drop with its survivors.
         if (name == "d8_dedup_clusters") graft.ops.Dedup.invalidateLabels()
-        // same label/apply coupling on the embedding side: s10 is the
-        // label phase (re-measures the CC honestly), s11 the apply phase
-        // (measures against prepared labels)
         if (name == "s10_semantic_dedup")
           graft.ops.Similarity.invalidateSemanticLabels()
-        // span modality (round 20): d14 is the label phase and never
-        // consults the span memo — every rep re-runs the full anchoring
-        // pipeline honestly; d15 is the apply phase and reads the
-        // prepared span table (its FIRST rep pays the memo build, so the
-        // first-rep headline stays honest; best-of-N measures the scrub
-        // against the persisted spans, which is its production shape)
-        // PQ label/apply split (VERDICT r12 #1): s16 (pqCodes → pqBuild)
-        // re-measures the whole index build on every rep by construction
-        // (it never consults the memo); s17 reads the prepared pqIndex
-        // memo, so its steady-state rep measures the SEARCH alone (four
-        // broadcast lookups + a code-table scan) — the first s17 rep
-        // pays the one-time index build, best-of-N sheds it. s18 extends
-        // the same split to the composed IVF-PQ index (ivfPqIndexOf),
-        // and on the tokenizer side t21 re-measures induction honestly
-        // (bpeMerges never consults the merges memo) while t24 reads it
-        // and measures the ENCODE; c14 reads the memoized encode table
-        // (pure composition — its first rep pays the memo builds).
-        // and on the funnel: c10 is the GATE phase (re-measures the gates
-        // honestly — including the t14 stats it gates on, so the shared
-        // stats memos drop too), c11 the packing phase over the
-        // materialized survivors, c12 the report join over the shared
-        // stats (the apply-phase contract: production computes corpus
-        // stats once and every report reads the materialization)
         if (name == "c10_prep_full") {
           graft.ops.Composites.invalidateSurvivors()
           graft.ops.TextAnalysis.invalidateStatsMemos()
@@ -197,24 +171,20 @@ object Bench {
       s""""load_warning":$loadWarn,"n_queries":${results.size},""" +
       s""""n_errors":${errors.size},"errors":$errs,"queries":$qs,""" +
       s""""queries_best":$qsBest,"sf":"$sfDir"}"""
-    // a SHORT headline line BEFORE the big JSON, and the complete metric
-    // line LAST on both streams (VERDICT r19 wrong #1): the driver's
-    // capture keeps only the tail of the output, so the line every parser
-    // needs must be the final thing printed — nothing may follow it but
-    // the runner's own epilogue.
+    // The complete metric line goes to BENCH_last.json and both streams;
+    // a SHORT headline follows it as the last line on both streams,
+    // because a capture that keeps only the tail of the output must still
+    // hold the totals.
     val headline = s"""{"total":${r3(total)},"total_best":${r3(totalBest)},""" +
       s""""n_queries":${results.size},""" +
       s""""n_errors":${errors.size},"load1_end":$loadEnd,"load_warning":$loadWarn}"""
-    println(headline)
-    System.err.println(headline)
-    // ... and duplicated to a FILE, so no tail window can lose it: the
-    // complete metric JSON for the most recent bench run always sits at
-    // BENCH_last.json in the working directory (repo root under sbt).
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_last.json"), json + "\n")
     catch { case _: Throwable => () }
     println(json)
     System.err.println(json)
+    println(headline)
+    System.err.println(headline)
     spark.stop()
     // Totals are only comparable across runs at n_errors=0 (an erroring
     // query is dropped from `total`, shrinking it) — so a run with errors

@@ -78,9 +78,6 @@ object RecallSweep {
         f""""d$d":{"depth":$d,"rerank_recall":$rRr%.3f,"rerank_sec":$tRr%.2f}"""
       }
       println(s"""{"metric":"recall_sweep","dir":"$dir","k":5,"rerank_depth":${Similarity.RerankDepth},"truth_pairs":${truth.size},"points":{${points.mkString(",")}},"depth_points":{${depths.mkString(",")}},"calib_sec":$calib,"calib_warning":${Calib.warning(calib)}}""")
-      // decade-sized memoized checkpoints: drop between corpora
-      Similarity.invalidatePqIndex(); Similarity.invalidateIvfPqIndex()
-      Similarity.invalidateResIvfPqIndex()
     }
     spark.stop()
   }

@@ -368,23 +368,14 @@ object Composites {
       .select(col("doc_id"), col("lang"), col("boiler_ratio"), col("n_kept"))
   }
 
-  /** The funnel's survivor set MATERIALIZED once per (session, corpus)
-    * — the d8-labels/s10-labels memo discipline applied to the funnel: a
-    * production pipeline persists the cleaned corpus once and every
-    * downstream job (packing, mixing, export) reads the materialization,
-    * never re-runs the gates. c10 measures the gates themselves (its
-    * plan stays the direct, shape-auditable form). */
-  private val survCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** The funnel's survivor set. Read by the packing, mixing and export
+    * composites (c11 onward); c10 runs [[prepSurvivors]] directly. */
+  def prepSurvivorsMemo(s: SparkSession, dir: String): DataFrame =
+    Memo(s, dir, SurvivorsMemo)(prepSurvivors(s, dir).localCheckpoint())
 
-  def prepSurvivorsMemo(s: SparkSession, dir: String): DataFrame = {
-    Dedup.boundToDir(survCache, s, dir)
-    survCache.computeIfAbsent(
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime, dir),
-      _ => prepSurvivors(s, dir).localCheckpoint())
-  }
+  private val SurvivorsMemo = new Memo.Tag[DataFrame]
 
-  def invalidateSurvivors(): Unit = survCache.clear()
+  def invalidateSurvivors(): Unit = Memo.invalidate(SurvivorsMemo)
 
   /** c11: the funnel's END PRODUCT — the cleaned survivor corpus packed
     * into [[TextAnalysis.PackCapacity]]-token training sequences (by the

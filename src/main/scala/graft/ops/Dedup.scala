@@ -188,88 +188,18 @@ object Dedup {
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
     clusterLabels(s, dir)
 
-  /** The LABEL phase of label/apply dedup, memoized per (context, dir):
-    * minhash → LSH → connected components, materialized once per session
-    * (connectedComponents returns localCheckpointed labels). In production
-    * this is the labels table a label job persists and every apply job
-    * reads; here the memo plays that role so d10's apply phase is the
-    * broadcast anti-join + rollup it claims to be, not a second run of
-    * the whole labeling pipeline. [[invalidateLabels]] drops the memo
-    * (Bench uses it so repeated label-phase measurements stay honest). */
-  private val labelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** The LABEL phase of label/apply dedup: minhash → LSH → connected
+    * components. Read by d10's apply phase and the leakage/shard
+    * composites. */
+  def clusterLabels(s: SparkSession, dir: String): DataFrame =
+    Memo(s, dir, LabelsMemo)(Artifacts.readOrBuild(s, dir, "d8_labels") {
+      val pairs = minhashLsh(s, dir).select(col("doc_a"), col("doc_b"))
+      connectedComponents(pairs, "doc_id", "cluster_id")
+    })
 
-  /** Drop memo entries bound to STOPPED SparkContexts — a JVM that cycles
-    * sessions (test suites, StreamBench's crash-containment rebuild) must
-    * not accumulate checkpointed frames pinned to dead contexts. Called on
-    * every cache access; a DataFrame retains its owning session, so
-    * liveness is read directly off the entry. */
-  private[graft] def evictStopped(
-      cache: java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]): Unit = {
-    val it = cache.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue.sparkSession.sparkContext.isStopped) it.remove()
-  }
+  private val LabelsMemo = new Memo.Tag[DataFrame]
 
-  /** Free the storage blocks behind an evicted memo frame. A
-    * `localCheckpoint` pins its blocks in the block manager until they are
-    * explicitly unpersisted or the ContextCleaner notices the dropped
-    * reference after a GC — which a busy long-lived session may not run in
-    * time, so eviction must release the blocks itself (ADVICE r19 #1). A
-    * memo built from a persisted artifact (plain parquet scan) has no
-    * LogicalRDD leaf and this is a no-op. */
-  private def unpersistMemo(df: DataFrame): Unit =
-    try df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    } catch { case _: Throwable => () }
-
-  /** [[evictStopped]] PLUS the bound that keeps session-memo growth finite
-    * (VERDICT r19 wrong #2): a live session keeps memo entries for ONE
-    * corpus dir at a time — every consumer composes over its own corpus,
-    * so an entry for another dir is dead weight the moment the session
-    * moves on, and a shared-session test suite visiting hundreds of
-    * per-test dirs would otherwise accumulate pinned checkpoint blocks
-    * without bound. Evicted frames have their blocks released eagerly;
-    * re-visiting an old dir rebuilds its memo (correct, just not free).
-    * The second key component is either the dir or "tag:dir" (the
-    * statsCache layout), so same-dir entries are matched by suffix. */
-  private[graft] def boundToDir(
-      cache: java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame],
-      s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val sessKey = s.sparkContext.applicationId + "@" + s.sparkContext.startTime
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val stopped = e.getValue.sparkSession.sparkContext.isStopped
-      val otherDir = e.getKey._1 == sessKey &&
-        e.getKey._2 != dir && !e.getKey._2.endsWith(":" + dir)
-      if (stopped || otherDir) {
-        if (!stopped) unpersistMemo(e.getValue)
-        it.remove()
-      }
-    }
-  }
-
-  def clusterLabels(s: SparkSession, dir: String): DataFrame = {
-    boundToDir(labelCache, s, dir)
-    labelCache.computeIfAbsent(
-      // applicationId+startTime is unique per context lifetime — an
-      // identityHashCode can be reused by a NEW context after the old one
-      // is GC'd, which would serve a checkpointed frame bound to a dead
-      // session
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime, dir), _ =>
-        // store-first when artifacts are enabled: a second session's
-        // apply stage reads the persisted label table (plain parquet
-        // scan, zero label re-execution — ArtifactsSpec pins the plan)
-        Artifacts.readOrBuild(s, dir, "d8_labels") {
-          val pairs = minhashLsh(s, dir).select(col("doc_a"), col("doc_b"))
-          connectedComponents(pairs, "doc_id", "cluster_id")
-        })
-  }
-
-  def invalidateLabels(): Unit = labelCache.clear()
+  def invalidateLabels(): Unit = Memo.invalidate(LabelsMemo)
 
   /** Connected components over an undirected pair list (two columns:
     * endpoint a, endpoint b) by min-label propagation WITH pointer
@@ -557,42 +487,21 @@ object Dedup {
         bit_count(xorCol).as("hamming"))
   }
 
-  /** d6's pair list MATERIALIZED once per (session, corpus) for the
-    * apply-phase consumers (d17's cross-source attribution rollup): the
-    * near-dup pair table is the persisted product of the banding
-    * pipeline — a curator's attribution report reads it, it does not
-    * re-fingerprint the corpus (round 19; before this memo d17 re-ran
-    * the full simhash+banding pipeline on every call, 2× per bench
-    * run). d6's own bench query keeps calling [[simhashPairs]]
-    * directly, so its measurement stays the honest pipeline. */
-  private val simhashPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** d4's MinHash-LSH candidate pairs. Read by d13's containment audit;
+    * d4 and d8 call [[minhashLsh]] directly. */
+  def lshPairsMemo(s: SparkSession, dir: String): DataFrame =
+    Memo(s, dir, LshPairsMemo)(minhashLsh(s, dir).localCheckpoint())
 
-  def invalidateSimhashPairs(): Unit = simhashPairsCache.clear()
+  /** d6's near-dup pairs. Read by d17's attribution rollup; d6 calls
+    * [[simhashPairs]] directly. */
+  def simhashPairsMemo(s: SparkSession, dir: String): DataFrame =
+    Memo(s, dir, SimhashPairsMemo)(simhashPairs(s, dir).localCheckpoint())
 
-  /** d4's MinHash-LSH candidate pair list, materialized once per
-    * (session, corpus) for apply-phase consumers (d13's containment
-    * audit) — same discipline as [[simhashPairsMemo]]. d4's own query
-    * and d8's label pipeline keep calling [[minhashLsh]] directly (d8's
-    * re-measurement must include candidate generation). */
-  private val lshPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  private val LshPairsMemo = new Memo.Tag[DataFrame]
+  private val SimhashPairsMemo = new Memo.Tag[DataFrame]
 
-  def invalidateLshPairs(): Unit = lshPairsCache.clear()
-
-  def lshPairsMemo(s: SparkSession, dir: String): DataFrame = {
-    boundToDir(lshPairsCache, s, dir)
-    lshPairsCache.computeIfAbsent(
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime, dir), _ =>
-        minhashLsh(s, dir).localCheckpoint())
-  }
-
-  def simhashPairsMemo(s: SparkSession, dir: String): DataFrame = {
-    boundToDir(simhashPairsCache, s, dir)
-    simhashPairsCache.computeIfAbsent(
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime, dir), _ =>
-        simhashPairs(s, dir).localCheckpoint())
-  }
+  def invalidateSimhashPairs(): Unit = Memo.invalidate(SimhashPairsMemo)
+  def invalidateLshPairs(): Unit = Memo.invalidate(LshPairsMemo)
 
   /** Fingerprint width of the oracle-checked production form
     * (`d11_simhash_scaled`): 4 bands of 12 bits → 4096 buckets per band,
@@ -777,23 +686,14 @@ object Dedup {
       .agg(min(col("pb")).as("b0"), count(lit(1)).as("run"))
   }
 
-  /** The span table MATERIALIZED once per (session, dir) — d8/d10's
-    * label/apply discipline at the span modality (round 20, VERDICT r19
-    * #5): d14 is the LABEL phase (its own query keeps calling
-    * [[substringSpansOf]] directly, so its measurement re-runs the whole
-    * anchoring pipeline), d15 the APPLY (the scrub reads the span table
-    * a production pass persists — it does not re-anchor the corpus). */
-  private val spanCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** d14's span table. Read by d15's scrub; d14 calls
+    * [[substringSpansOf]] directly. */
+  private[graft] def substringSpansMemo(s: SparkSession, dir: String): DataFrame =
+    Memo(s, dir, SpansMemo)(substringSpansOf(Tables.documents(s, dir)).localCheckpoint())
 
-  def invalidateSpans(): Unit = spanCache.clear()
+  private val SpansMemo = new Memo.Tag[DataFrame]
 
-  private[graft] def substringSpansMemo(s: SparkSession, dir: String): DataFrame = {
-    boundToDir(spanCache, s, dir)
-    spanCache.computeIfAbsent(
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime, dir), _ =>
-        substringSpansOf(Tables.documents(s, dir)).localCheckpoint())
-  }
+  def invalidateSpans(): Unit = Memo.invalidate(SpansMemo)
 
   /** Frame-level form of [[substringDup]] — any (doc_id, text). */
   def substringDupFrame(documents: DataFrame): DataFrame = {
@@ -921,24 +821,14 @@ object Dedup {
           lit(") — use an order-statistic cut for sparse ids"))))
         .as("cut"))
 
-  /** d16's verdict table MATERIALIZED once per (session, corpus) for the
-    * apply-phase consumers (c20's shard refresh): a daily refresh job
-    * computes the batch verdicts once and both the dedup report and the
-    * shard append read that materialization — the d8-labels/d10
-    * discipline at the delta grain. d16's own bench query keeps calling
-    * [[deltaDedup]] directly, so its measurement re-runs the signature +
-    * banding pipeline honestly on every rep. */
-  private val deltaVerdictCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** d16's batch verdicts. Read by c20's shard refresh; d16 calls
+    * [[deltaDedup]] directly. */
+  def deltaDedupMemo(s: SparkSession, dir: String): DataFrame =
+    Memo(s, dir, DeltaVerdictsMemo)(deltaDedup(s, dir).localCheckpoint())
 
-  def invalidateDeltaVerdicts(): Unit = deltaVerdictCache.clear()
+  private val DeltaVerdictsMemo = new Memo.Tag[DataFrame]
 
-  def deltaDedupMemo(s: SparkSession, dir: String): DataFrame = {
-    boundToDir(deltaVerdictCache, s, dir)
-    deltaVerdictCache.computeIfAbsent(
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime, dir), _ =>
-        deltaDedup(s, dir).localCheckpoint())
-  }
+  def invalidateDeltaVerdicts(): Unit = Memo.invalidate(DeltaVerdictsMemo)
 
   def deltaDedup(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)

@@ -378,16 +378,9 @@ object Similarity {
     * index the SEARCH phase reads). */
   case class PqIndex(sub: DataFrame, codebook: DataFrame, codes: DataFrame)
 
-  /** Memoized per (context, corpus) with the
-    * [[graft.ops.Dedup.clusterLabels]] label/apply discipline — s16
-    * (pqCodes → pqBuild) is the build phase and re-measures the whole
-    * pipeline on every call, s17 reads this prepared index, so its cost
-    * is the search it claims to be: at 100 TB the floats never leave the
-    * index build, the scan touches only the 16-bit code table. */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), PqIndex]()
+  private val PqMemo = new Memo.Tag[PqIndex]
 
-  def invalidatePqIndex(): Unit = pqCache.clear()
+  def invalidatePqIndex(): Unit = Memo.invalidate(PqMemo)
 
   /** Distance of a subvector `sv` to a centroid `cv`: sequential double
     * fold over squared component deltas (the order the oracle mirrors). */
@@ -479,32 +472,27 @@ object Similarity {
     PqIndex(sub, cents1, codes)
   }
 
-  def pqIndex(s: SparkSession, dir: String): PqIndex = {
-    // drop entries bound to stopped contexts (the Dedup.evictStopped rule;
-    // the value type differs so the check reads off the codes frame)
-    val it = pqCache.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue.codes.sparkSession.sparkContext.isStopped) it.remove()
-    pqCache.computeIfAbsent(
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime, dir), _ =>
-        // store-first when artifacts are enabled: codes + codebook read
-        // as plain parquet, the subvector frame stays lazy (query-side
-        // slices only)
-        if (Artifacts.enabled(s)
-            && Artifacts.exists(s, dir, VectorArtifacts.PqCodes)
-            && Artifacts.exists(s, dir, VectorArtifacts.PqCodebook))
-          PqIndex(subFrame(s, dir),
-            Artifacts.read(s, dir, VectorArtifacts.PqCodebook),
-            Artifacts.read(s, dir, VectorArtifacts.PqCodes))
-        else {
-          val b = pqBuild(s, dir)
-          val ck = b.copy(codes = b.codes.localCheckpoint())
-          if (Artifacts.enabled(s)) {
-            Artifacts.write(s, dir, VectorArtifacts.PqCodebook, ck.codebook)
-            Artifacts.write(s, dir, VectorArtifacts.PqCodes, ck.codes)
-          }
-          ck
-        })
+  /** The prepared PQ index. Read by the s17 search and the IVF-PQ build;
+    * s16 runs [[pqBuild]] directly. */
+  def pqIndex(s: SparkSession, dir: String): PqIndex = Memo(s, dir, PqMemo) {
+    // store-first when artifacts are enabled: codes + codebook read as
+    // plain parquet, the subvector frame stays lazy (query-side slices
+    // only)
+    if (Artifacts.enabled(s)
+        && Artifacts.exists(s, dir, VectorArtifacts.PqCodes)
+        && Artifacts.exists(s, dir, VectorArtifacts.PqCodebook))
+      PqIndex(subFrame(s, dir),
+        Artifacts.read(s, dir, VectorArtifacts.PqCodebook),
+        Artifacts.read(s, dir, VectorArtifacts.PqCodes))
+    else {
+      val b = pqBuild(s, dir)
+      val ck = b.copy(codes = b.codes.localCheckpoint())
+      if (Artifacts.enabled(s)) {
+        Artifacts.write(s, dir, VectorArtifacts.PqCodebook, ck.codebook)
+        Artifacts.write(s, dir, VectorArtifacts.PqCodes, ck.codes)
+      }
+      ck
+    }
   }
 
   /** Queries scored by the ADC search (the s8 bench-query idiom). */
@@ -563,48 +551,37 @@ object Similarity {
     * `cents` is the C≈√n-row coarse quantizer the query side probes. */
   case class IvfPqIndex(codedCells: DataFrame, cents: DataFrame)
 
-  private val ivfPqCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), IvfPqIndex]()
+  private val IvfPqMemo = new Memo.Tag[IvfPqIndex]
 
-  def invalidateIvfPqIndex(): Unit = {
-    ivfPqCache.clear()
-    clusterednessCache.clear() // the index's regime signal retires with it
-  }
+  /** Drops the IVF-PQ index and, with it, its regime signal
+    * [[clusteredness]]. */
+  def invalidateIvfPqIndex(): Unit = Memo.invalidate(IvfPqMemo, ClusterednessMemo)
 
-  /** Build-or-read the composed index, memoized per (context, corpus)
-    * with the [[pqIndex]] discipline: the IVF assignment (√n stride, the
-    * s13 production rule) joins the PQ code table once on vec_id and the
-    * result is checkpointed — s18 then reads this prepared
-    * materialization, so its steady-state cost is the SEARCH alone. */
-  def ivfPqIndexOf(s: SparkSession, dir: String): IvfPqIndex = {
-    val it = ivfPqCache.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue.codedCells.sparkSession.sparkContext.isStopped)
-        it.remove()
-    ivfPqCache.computeIfAbsent(
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime, dir), _ =>
-        if (Artifacts.enabled(s)
-            && Artifacts.exists(s, dir, VectorArtifacts.IvfPqCells)
-            && Artifacts.exists(s, dir, VectorArtifacts.IvfPqCents))
-          IvfPqIndex(Artifacts.read(s, dir, VectorArtifacts.IvfPqCells),
-            Artifacts.read(s, dir, VectorArtifacts.IvfPqCents))
-        else {
-          val pq = pqIndex(s, dir)
-          val emb = Tables.embeddings(s, dir)
-            .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("norm"))
-          val n = Tables.embeddingsRowCount(s, dir)
-          val stride = math.max(1, math.sqrt(n.toDouble).toInt)
-          val (cells, cents) = ivfIndex(emb, stride, LloydIters)
-          val coded = pq.codes
-            .select(col("vec_id"), col("c0"), col("c1"), col("c2"), col("c3"))
-            .join(cells.select(col("vec_id"), col("cell")), Seq("vec_id"))
-            .localCheckpoint()
-          if (Artifacts.enabled(s)) {
-            Artifacts.write(s, dir, VectorArtifacts.IvfPqCells, coded)
-            Artifacts.write(s, dir, VectorArtifacts.IvfPqCents, cents)
-          }
-          IvfPqIndex(coded, cents)
-        })
+  /** The prepared IVF-PQ index (√n-stride IVF cells joined to the PQ
+    * codes). Read by the s18 and s23–s25 searches. */
+  def ivfPqIndexOf(s: SparkSession, dir: String): IvfPqIndex = Memo(s, dir, IvfPqMemo) {
+    if (Artifacts.enabled(s)
+        && Artifacts.exists(s, dir, VectorArtifacts.IvfPqCells)
+        && Artifacts.exists(s, dir, VectorArtifacts.IvfPqCents))
+      IvfPqIndex(Artifacts.read(s, dir, VectorArtifacts.IvfPqCells),
+        Artifacts.read(s, dir, VectorArtifacts.IvfPqCents))
+    else {
+      val pq = pqIndex(s, dir)
+      val emb = Tables.embeddings(s, dir)
+        .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("norm"))
+      val n = Tables.embeddingsRowCount(s, dir)
+      val stride = math.max(1, math.sqrt(n.toDouble).toInt)
+      val (cells, cents) = ivfIndex(emb, stride, LloydIters)
+      val coded = pq.codes
+        .select(col("vec_id"), col("c0"), col("c1"), col("c2"), col("c3"))
+        .join(cells.select(col("vec_id"), col("cell")), Seq("vec_id"))
+        .localCheckpoint()
+      if (Artifacts.enabled(s)) {
+        Artifacts.write(s, dir, VectorArtifacts.IvfPqCells, coded)
+        Artifacts.write(s, dir, VectorArtifacts.IvfPqCents, cents)
+      }
+      IvfPqIndex(coded, cents)
+    }
   }
 
   /** IVF-PQ SEARCH (s18) — the production 100-TB ANN layout (Jégou et
@@ -756,35 +733,22 @@ object Similarity {
     * curves"): a clustered corpus's members hug their centroids
     * (sf1c measures 0.974) while an isotropic one's cells are
     * arbitrary partitions of a structureless cloud (sf1-synth
-    * measures 0.343). MEMOIZED per (session, corpus) — the measurement
-    * costs one √n-stride [[ivfIndex]] build plus a corpus-grain
-    * aggregate, paid ONCE; every later [[annPlan]] call is a map read
-    * (a deployment computes it beside the index build the same way —
-    * [[graft.streaming.VectorRestServing]] folds the identical
-    * aggregate into its own build). Dropped with the IVF-PQ memo
-    * ([[invalidateIvfPqIndex]] — the drift/rebuild lifecycle that
-    * retires the index retires its regime signal too). */
-  def clusteredness(s: SparkSession, dir: String): Double =
-    clusterednessCache.computeIfAbsent(
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime, dir), _ => {
-        val emb = Tables.embeddings(s, dir)
-          .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("norm"))
-        val n = Tables.embeddingsRowCount(s, dir)
-        val stride = math.max(1, math.sqrt(n.toDouble).toInt)
-        val (cells, cents) = ivfIndex(emb, stride, LloydIters)
-        cells.join(broadcast(cents), col("cell") === col("cent_id"))
-          .select(when(col("norm") * col("c_norm") > 0,
-            dot(col("embedding"), col("c_emb")) / (col("norm") * col("c_norm")))
-            .as("csim"))
-          .agg(avg(col("csim"))).head.getDouble(0)
-      })
+    * measures 0.343). Memoized: read by every [[annPlan]] call, and
+    * dropped with the IVF-PQ index by [[invalidateIvfPqIndex]]. */
+  def clusteredness(s: SparkSession, dir: String): Double = Memo(s, dir, ClusterednessMemo) {
+    val emb = Tables.embeddings(s, dir)
+      .select(col("vec_id"), col("embedding"), l2norm(col("embedding")).as("norm"))
+    val n = Tables.embeddingsRowCount(s, dir)
+    val stride = math.max(1, math.sqrt(n.toDouble).toInt)
+    val (cells, cents) = ivfIndex(emb, stride, LloydIters)
+    cells.join(broadcast(cents), col("cell") === col("cent_id"))
+      .select(when(col("norm") * col("c_norm") > 0,
+        dot(col("embedding"), col("c_emb")) / (col("norm") * col("c_norm")))
+        .as("csim"))
+      .agg(avg(col("csim"))).head.getDouble(0)
+  }
 
-  // unlike the sibling DataFrame memos this cache holds plain Doubles —
-  // nothing here binds a stopped SparkContext, so the evictStopped sweep
-  // (which exists to release session-bound checkpoints) is deliberately
-  // not applied; entries are ~100 bytes keyed by (context, dir)
-  private val clusterednessCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Double]()
+  private val ClusterednessMemo = new Memo.Tag[Double]
 
   /** The regime boundary for [[annPlan]]: measured clusteredness is
     * 0.974 on the planted-cluster decade corpus and 0.343 on the
@@ -912,61 +876,51 @@ object Similarity {
   case class ResIvfPqIndex(codedCells: DataFrame, cents: DataFrame,
       codebook: DataFrame)
 
-  private val resIvfPqCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), ResIvfPqIndex]()
+  private val ResIvfPqMemo = new Memo.Tag[ResIvfPqIndex]
 
-  def invalidateResIvfPqIndex(): Unit = resIvfPqCache.clear()
+  def invalidateResIvfPqIndex(): Unit = Memo.invalidate(ResIvfPqMemo)
 
-  /** Build-or-read the residual index, memoized per (context, corpus)
-    * with the [[ivfPqIndexOf]] discipline; with artifacts enabled the
-    * coded cells, coarse centroids AND the residual codebook persist
-    * (the codebook is load-bearing at query time — ADC tables are
-    * distances to residual centroids, so a second session cannot search
-    * without it). */
-  def resIvfPqIndexOf(s: SparkSession, dir: String): ResIvfPqIndex = {
-    val it = resIvfPqCache.entrySet().iterator()
-    while (it.hasNext)
-      if (it.next().getValue.codedCells.sparkSession.sparkContext.isStopped)
-        it.remove()
-    resIvfPqCache.computeIfAbsent(
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime, dir), _ =>
-        if (Artifacts.enabled(s)
-            && Artifacts.exists(s, dir, VectorArtifacts.ResCells)
-            && Artifacts.exists(s, dir, VectorArtifacts.ResCents)
-            && Artifacts.exists(s, dir, VectorArtifacts.ResCodebook))
-          ResIvfPqIndex(Artifacts.read(s, dir, VectorArtifacts.ResCells),
-            Artifacts.read(s, dir, VectorArtifacts.ResCents),
-            Artifacts.read(s, dir, VectorArtifacts.ResCodebook))
-        else {
-          val emb = Tables.embeddings(s, dir)
-            .select(col("vec_id"), col("embedding"),
-              l2norm(col("embedding")).as("norm"))
-          val n = Tables.embeddingsRowCount(s, dir)
-          val stride = math.max(1, math.sqrt(n.toDouble).toInt)
-          val (cells, cents) = ivfIndex(emb, stride, LloydIters)
-          // residual = vector − its cell's centroid (elementwise — no
-          // summation-order hazard); checkpointed once, read by both the
-          // PQ build and the cell attach
-          val resid = cells
-            .join(broadcast(cents), col("cell") === col("cent_id"))
-            .select(col("vec_id"),
-              zip_with(col("embedding"), col("c_emb"),
-                (x, c) => x.cast("double") - c).as("embedding"),
-              col("cell"))
-            .localCheckpoint()
-          val pq = pqBuildFrame(
-            resid.select(col("vec_id"), col("embedding")), PqM, PqSubDim, PqK)
-          val coded = pq.codes
-            .select(col("vec_id") +: (0 until PqM).map(k => col(s"c$k")): _*)
-            .join(resid.select(col("vec_id"), col("cell")), Seq("vec_id"))
-            .localCheckpoint()
-          if (Artifacts.enabled(s)) {
-            Artifacts.write(s, dir, VectorArtifacts.ResCells, coded)
-            Artifacts.write(s, dir, VectorArtifacts.ResCents, cents)
-            Artifacts.write(s, dir, VectorArtifacts.ResCodebook, pq.codebook)
-          }
-          ResIvfPqIndex(coded, cents, pq.codebook)
-        })
+  /** The prepared residual IVF-PQ index. Read by the s22 search; with
+    * artifacts enabled the residual codebook persists too, because the
+    * ADC tables are distances to residual centroids. */
+  def resIvfPqIndexOf(s: SparkSession, dir: String): ResIvfPqIndex = Memo(s, dir, ResIvfPqMemo) {
+    if (Artifacts.enabled(s)
+        && Artifacts.exists(s, dir, VectorArtifacts.ResCells)
+        && Artifacts.exists(s, dir, VectorArtifacts.ResCents)
+        && Artifacts.exists(s, dir, VectorArtifacts.ResCodebook))
+      ResIvfPqIndex(Artifacts.read(s, dir, VectorArtifacts.ResCells),
+        Artifacts.read(s, dir, VectorArtifacts.ResCents),
+        Artifacts.read(s, dir, VectorArtifacts.ResCodebook))
+    else {
+      val emb = Tables.embeddings(s, dir)
+        .select(col("vec_id"), col("embedding"),
+          l2norm(col("embedding")).as("norm"))
+      val n = Tables.embeddingsRowCount(s, dir)
+      val stride = math.max(1, math.sqrt(n.toDouble).toInt)
+      val (cells, cents) = ivfIndex(emb, stride, LloydIters)
+      // residual = vector − its cell's centroid (elementwise — no
+      // summation-order hazard); checkpointed once, read by both the
+      // PQ build and the cell attach
+      val resid = cells
+        .join(broadcast(cents), col("cell") === col("cent_id"))
+        .select(col("vec_id"),
+          zip_with(col("embedding"), col("c_emb"),
+            (x, c) => x.cast("double") - c).as("embedding"),
+          col("cell"))
+        .localCheckpoint()
+      val pq = pqBuildFrame(
+        resid.select(col("vec_id"), col("embedding")), PqM, PqSubDim, PqK)
+      val coded = pq.codes
+        .select(col("vec_id") +: (0 until PqM).map(k => col(s"c$k")): _*)
+        .join(resid.select(col("vec_id"), col("cell")), Seq("vec_id"))
+        .localCheckpoint()
+      if (Artifacts.enabled(s)) {
+        Artifacts.write(s, dir, VectorArtifacts.ResCells, coded)
+        Artifacts.write(s, dir, VectorArtifacts.ResCents, cents)
+        Artifacts.write(s, dir, VectorArtifacts.ResCodebook, pq.codebook)
+      }
+      ResIvfPqIndex(coded, cents, pq.codebook)
+    }
   }
 
   /** RESIDUAL IVF-PQ SEARCH (s22) — IVFADC proper: probe the query's
@@ -1457,26 +1411,18 @@ object Similarity {
       .groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n_members"), max(col("vec_id")).as("max_member"))
 
-  /** The embedding-side labels table (vec_id → cluster_id), memoized per
-    * (context, dir) exactly like the text side's [[Dedup.clusterLabels]]:
-    * the label phase runs once per session (s10 is its measurement) and
-    * every apply job reads the materialized result. Bench invalidates
-    * this memo before re-measuring s10 (mirroring the d8/d10 coupling). */
-  private val labelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** The embedding-side labels table (vec_id → cluster_id), the label
+    * phase s10 measures. Read by s11's apply phase. */
+  def semanticLabels(s: SparkSession, dir: String): DataFrame =
+    Memo(s, dir, SemanticLabelsMemo)(Artifacts.readOrBuild(s, dir, "s10_labels") {
+      Dedup.connectedComponents(
+        bucketedNearDup(s, dir).select(col("a_id"), col("b_id")),
+        "vec_id", "cluster_id")
+    })
 
-  def semanticLabels(s: SparkSession, dir: String): DataFrame = {
-    Dedup.boundToDir(labelCache, s, dir) // dead-context entries + one-dir bound, see Dedup
-    labelCache.computeIfAbsent(
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime, dir), _ =>
-        Artifacts.readOrBuild(s, dir, "s10_labels") {
-          Dedup.connectedComponents(
-            bucketedNearDup(s, dir).select(col("a_id"), col("b_id")),
-            "vec_id", "cluster_id")
-        })
-  }
+  private val SemanticLabelsMemo = new Memo.Tag[DataFrame]
 
-  def invalidateSemanticLabels(): Unit = labelCache.clear()
+  def invalidateSemanticLabels(): Unit = Memo.invalidate(SemanticLabelsMemo)
 
   /** The APPLY phase of embedding-side dedup — [[Dedup.dedupApplyFrom]]'s
     * exact shape against the semantic labels: drop every cluster member

@@ -420,34 +420,14 @@ object TextAnalysis {
       .select(col("doc_id"), col("n_bigrams"), col("rarest_count"), col("support"))
   }
 
-  /** The t14/t16 per-doc stats tables memoized per (context, dir) — the
-    * prepSurvivorsMemo/clusterLabels discipline applied to the STATS
-    * subtrees: a production pipeline computes corpus statistics once and
-    * every consumer (the funnel's boilerplate gate, c12's drop-reason
-    * report) reads the materialization; recomputing them per consumer
-    * doubled c12's cost and, at sf10-synth, co-resided two ~25M-row
-    * checkpoint sets in one JVM (VERDICT r11 watch item 2). t14/t16's own
-    * bench queries stay the DIRECT pipelines, so their measurements are
-    * honest by construction; Bench invalidates these memos before c10
-    * reps (the gate phase re-measures the stats it gates on). */
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  private def statsMemo(s: SparkSession, dir: String, which: String)
-      (build: => DataFrame): DataFrame = {
-    Dedup.boundToDir(statsCache, s, dir)
-    statsCache.computeIfAbsent(
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime,
-        which + ":" + dir),
-      _ => build.localCheckpoint())
-  }
+  private val TaggedOccMemo = new Memo.Tag[DataFrame]
+  private val BoilerStatsMemo = new Memo.Tag[DataFrame]
+  private val LmSupportMemo = new Memo.Tag[DataFrame]
+  private val LmQualityMemo = new Memo.Tag[DataFrame]
 
   /** ONE tokenize+explode corpus pass serving BOTH t14's boilerplate
-    * statistics and the funnel's decontamination gate (round 20, VERDICT
-    * r19 #3 — the t21 tagged-pass treatment at the funnel grain: c10's
-    * gate rep used to run TWO tokenize+3-gram corpus passes, t14's
-    * occurrence counts and d12's shingle sets, over the same documents).
-    * Rows are (doc_id, tag, g, n):
+    * statistics and the funnel's decontamination gate. Rows are
+    * (doc_id, tag, g, n):
     *  - tag 't': exactly [[boilerplateNgrams]]' checkpointed (doc,
     *    3-gram, multiplicity) occurrence table — and, because the grain
     *    is one row per (doc, gram), `SELECT doc_id, g WHERE tag='t'` is
@@ -458,12 +438,10 @@ object TextAnalysis {
     *    no 't' rows), completing d12's shingle semantics.
     * The funnel derives its ratios ([[boilerStatsMemo]]) and its
     * contamination drop list (Dedup.decontamIdsFrom) from this one
-    * materialization. t14's and d12's OWN bench queries keep their
-    * direct pipelines — their measurements are untouched. Lives in the
-    * statsCache, so Bench's invalidateStatsMemos keeps c10's gate rep
-    * re-measuring the pass honestly. */
+    * materialization (c10's gates). t14's and d12's own queries keep
+    * their direct pipelines. */
   private[graft] def boilerTaggedOccMemo(s: SparkSession, dir: String): DataFrame =
-    statsMemo(s, dir, "t14occ") {
+    Memo(s, dir, TaggedOccMemo) {
       val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
       val t = col("t")
       val m = size(t) - (NgramN - 1)
@@ -481,15 +459,14 @@ object TextAnalysis {
           transform(fallback, g => struct(lit("d").as("tag"), g.as("g"))))).as("e"))
         .groupBy(col("doc_id"), col("e.tag").as("tag"), col("e.g").as("g"))
         .agg(count(lit(1)).as("n"))
+        .localCheckpoint()
     }
 
-  /** [[boilerplateNgrams]] output, materialized once per (session, dir) —
-    * derived FROM the tagged pass (the 't' rows ARE the occ table, so the
-    * df/ratio rollup is identical arithmetic over the identical rows;
-    * round 20 removes the second tokenize+explode the separate build
-    * paid). */
+  /** [[boilerplateNgrams]] output, derived from the tagged pass (its 't'
+    * rows are the occ table). Read by the funnel's boilerplate gate and
+    * c12's drop-reason report. */
   def boilerStatsMemo(s: SparkSession, dir: String): DataFrame =
-    statsMemo(s, dir, "t14") {
+    Memo(s, dir, BoilerStatsMemo) {
       val occ = boilerTaggedOccMemo(s, dir)
         .filter(col("tag") === "t")
         .select(col("doc_id"), col("g").as("ng"), col("n"))
@@ -500,23 +477,19 @@ object TextAnalysis {
           sum(when(col("df") >= BoilerMinDocs, col("n")).otherwise(0L)).as("n_boiler"))
         .withColumn("boiler_ratio",
           round(col("n_boiler").cast("double") / col("n_ngrams"), 6))
+        .localCheckpoint()
     }
 
-  /** [[lmSupport]] output, materialized once per (session, dir). */
+  /** [[lmSupport]] output. Read by c12's drop-reason report. */
   def lmSupportMemo(s: SparkSession, dir: String): DataFrame =
-    statsMemo(s, dir, "t16")(lmSupport(s, dir))
+    Memo(s, dir, LmSupportMemo)(lmSupport(s, dir).localCheckpoint())
 
-  /** [[lmQuality]] output, materialized once per (session, dir) — the
-    * same discipline for the t27 perplexity table (round 19): the
-    * curriculum consumers (c15's shard summary, c21's trainer shards)
-    * order by a corpus statistic a production pipeline scores once and
-    * persists; before this memo each of them re-ran the full bigram-LM
-    * pipeline per call (2 consumers × 2 bench reps = 4 re-executions).
-    * t27's own bench query stays the direct pipeline. */
+  /** [[lmQuality]] output. Read by the curriculum composites (c15, c21). */
   def lmQualityMemo(s: SparkSession, dir: String): DataFrame =
-    statsMemo(s, dir, "t27")(lmQuality(s, dir))
+    Memo(s, dir, LmQualityMemo)(lmQuality(s, dir).localCheckpoint())
 
-  def invalidateStatsMemos(): Unit = statsCache.clear()
+  def invalidateStatsMemos(): Unit =
+    Memo.invalidate(TaggedOccMemo, BoilerStatsMemo, LmSupportMemo, LmQualityMemo)
 
   /** Grid cells of the quantile threshold's two-level histogram scan —
     * the count of equi-width value ranges, bounded by CONSTRUCTION at any
@@ -1167,24 +1140,14 @@ object TextAnalysis {
       else documents.filter(
         conv(substring(md5(col("text")), 1, 4), 16, 10).cast("long") % mod === 0))
 
-  /** Learned merges, memoized per (context, corpus) with the label/apply
-    * discipline ([[graft.ops.Dedup.clusterLabels]]): t21 (bpeMerges) is
-    * the INDUCTION phase and re-measures all 6 corpus rewrites on every
-    * call by construction (it never consults this memo); the APPLY side
-    * (t24's encode, c14's real-token budget) reads this prepared 6-row
-    * table — production trains a tokenizer once and every encode job
-    * loads the artifact. */
-  private val mergesCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** t21's learned merges. Read by t24's encode and the composites'
+    * token budgets; t21 runs [[bpeMerges]] directly. */
+  def bpeMergesMemo(s: SparkSession, dir: String): DataFrame =
+    Memo(s, dir, MergesMemo)(bpeMerges(s, dir).localCheckpoint())
 
-  def invalidateBpeMerges(): Unit = mergesCache.clear()
+  private val MergesMemo = new Memo.Tag[DataFrame]
 
-  def bpeMergesMemo(s: SparkSession, dir: String): DataFrame = {
-    Dedup.boundToDir(mergesCache, s, dir)
-    mergesCache.computeIfAbsent(
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime, dir), _ =>
-        bpeMerges(s, dir).localCheckpoint())
-  }
+  def invalidateBpeMerges(): Unit = Memo.invalidate(MergesMemo)
 
   /** BPE TOKENIZER APPLY (t24) — encode every document with t21's
     * learned merges and report the REAL token counts a training-data
@@ -1328,27 +1291,14 @@ object TextAnalysis {
     tokenIdArraysFrame(encoded, vocab)
   }
 
-  /** The id-array table MATERIALIZED once per (session, corpus) — the
-    * t29-ids memo the shard family's contract already names ("pure
-    * composition over memoized materializations: c10 survivors, t24
-    * encode, t29 ids"): before round 19 each consumer (c18, c20, c21,
-    * c22's reader) re-derived the vocab (full-corpus explode + count +
-    * id window) and re-ran the corpus-wide map-lookup transform per
-    * call — 4 queries × 2 bench reps = 8 re-executions of work a
-    * production pipeline persists exactly once. t29 (tokenIds) keeps
-    * re-measuring its own encode+id pass honestly — it never reads
-    * this memo. */
-  private val idArraysCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** The t29 id-array table. Read by the shard composites (c18, c20–c22);
+    * t29 runs [[tokenIds]] directly. */
+  private[graft] def tokenIdArraysMemo(s: SparkSession, dir: String): DataFrame =
+    Memo(s, dir, IdArraysMemo)(tokenIdArrays(s, dir).localCheckpoint())
 
-  def invalidateTokenIdArrays(): Unit = idArraysCache.clear()
+  private val IdArraysMemo = new Memo.Tag[DataFrame]
 
-  private[graft] def tokenIdArraysMemo(s: SparkSession, dir: String): DataFrame = {
-    Dedup.boundToDir(idArraysCache, s, dir)
-    idArraysCache.computeIfAbsent(
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime, dir), _ =>
-        tokenIdArrays(s, dir).localCheckpoint())
-  }
+  def invalidateTokenIdArrays(): Unit = Memo.invalidate(IdArraysMemo)
 
   /** Frame-level t29 body: `encoded` = [[bpeEncodedRendering]] output,
     * `vocab` = (token, id, …). */
@@ -1387,38 +1337,22 @@ object TextAnalysis {
       .select(col("doc_id"), col("ids"))
   }
 
-  /** The encoded per-doc table, memoized for the pure-composition
-    * consumers (c14's real-token budget): t24 re-measures the ENCODE on
-    * every call (it reads only the merges memo); this checkpoint is the
-    * per-doc token table a release pipeline writes once. */
-  private val encodedCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  /** t24's encoded per-doc table. Read by the composites' real-token
+    * budgets (c11 onward); t24 runs [[bpeEncode]] directly. */
+  def bpeEncodedMemo(s: SparkSession, dir: String): DataFrame =
+    Memo(s, dir, EncodedMemo)(bpeEncode(s, dir).localCheckpoint())
 
-  def invalidateBpeEncoded(): Unit = encodedCache.clear()
+  /** The encoded rendering (doc_id, t, enc). Read by [[tokenIdArrays]];
+    * t29 re-runs its own encode through [[tokenIds]]. */
+  private[graft] def bpeRenderedMemo(s: SparkSession, dir: String): DataFrame =
+    Memo(s, dir, RenderedMemo)(bpeEncodedRendering(Tables.documents(s, dir),
+      bpeMergesMemo(s, dir)).localCheckpoint())
 
-  def bpeEncodedMemo(s: SparkSession, dir: String): DataFrame = {
-    Dedup.boundToDir(encodedCache, s, dir)
-    encodedCache.computeIfAbsent(
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime, dir), _ =>
-        bpeEncode(s, dir).localCheckpoint())
-  }
+  private val EncodedMemo = new Memo.Tag[DataFrame]
+  private val RenderedMemo = new Memo.Tag[DataFrame]
 
-  /** The encoded RENDERING (doc_id, t, enc) memoized — c18's shard
-    * emission reads this materialization (the encode ran once; packing
-    * is pure composition), while t29 keeps re-measuring its own encode
-    * honestly through [[tokenIds]]. */
-  private val renderedCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  def invalidateBpeRendered(): Unit = renderedCache.clear()
-
-  private[graft] def bpeRenderedMemo(s: SparkSession, dir: String): DataFrame = {
-    Dedup.boundToDir(renderedCache, s, dir)
-    renderedCache.computeIfAbsent(
-      (s.sparkContext.applicationId + "@" + s.sparkContext.startTime, dir), _ =>
-        bpeEncodedRendering(Tables.documents(s, dir), bpeMergesMemo(s, dir))
-          .localCheckpoint())
-  }
+  def invalidateBpeEncoded(): Unit = Memo.invalidate(EncodedMemo)
+  def invalidateBpeRendered(): Unit = Memo.invalidate(RenderedMemo)
 
   /** Frame-level form of [[bpeMerges]] — any frame with a text column.
     *
