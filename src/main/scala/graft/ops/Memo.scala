@@ -53,7 +53,7 @@ object Memo {
 
   private def cellFor(sc: SparkContext, d: String, tag: Tag[_]): Cell = synchronized {
     if (!(context eq sc) || dir != d) {
-      if (context != null && !context.isStopped) release(cells.values, Nil)
+      if (context != null && !context.isStopped) releaseCells(cells.values, Nil)
       cells.clear()
       context = sc
       dir = d
@@ -64,20 +64,27 @@ object Memo {
   /** Drop `tags` from the memo, releasing their checkpoint blocks. */
   def invalidate(tags: Tag[_]*): Unit = synchronized {
     val dropped = tags.flatMap(cells.remove)
-    if (context != null && !context.isStopped) release(dropped, cells.values)
+    if (context != null && !context.isStopped) releaseCells(dropped, cells.values)
   }
 
-  private def release(dropped: Iterable[Cell], kept: Iterable[Cell]): Unit = {
-    val live = kept.flatMap(rddsOf).map(_.id).toSet
-    dropped.flatMap(rddsOf).filterNot(r => live(r.id)).foreach(_.unpersist(blocking = false))
+  /** Release the checkpoint blocks `frames`' plans read. For a build's
+    * own intermediate checkpoints, once a later eager checkpoint or a
+    * persisted artifact holds their data; the caller owns the frames. */
+  def release(frames: Dataset[_]*): Unit =
+    frames.flatMap(rddsOf).foreach(_.unpersist(blocking = false))
+
+  private def releaseCells(dropped: Iterable[Cell], kept: Iterable[Cell]): Unit = {
+    val live = kept.flatMap(framesOf).flatMap(rddsOf).map(_.id).toSet
+    dropped.flatMap(framesOf).flatMap(rddsOf).filterNot(r => live(r.id))
+      .foreach(_.unpersist(blocking = false))
   }
 
-  private def rddsOf(c: Cell): Seq[RDD[_]] = {
-    val frames = c.value.toSeq.flatMap {
-      case d: Dataset[_] => Seq(d)
-      case p: Product => p.productIterator.collect { case d: Dataset[_] => d }
-      case _ => Nil
-    }
-    frames.flatMap(_.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd })
+  private def framesOf(c: Cell): Seq[Dataset[_]] = c.value.toSeq.flatMap {
+    case d: Dataset[_] => Seq(d)
+    case p: Product => p.productIterator.collect { case d: Dataset[_] => d }
+    case _ => Nil
   }
+
+  private def rddsOf(d: Dataset[_]): Seq[RDD[_]] =
+    d.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
 }

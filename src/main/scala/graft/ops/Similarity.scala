@@ -292,15 +292,16 @@ object Similarity {
     * reassign, then recenter each cell at the vec_id-ordered
     * sequential-double mean of its members (deterministic across
     * engines), checkpointing per round so the next round's n×C scoring
-    * reads materialized centroids. Shared by the batch queries (s8/s13)
-    * and the serving tier ([[graft.streaming.VectorRestServing]]). */
+    * reads materialized centroids; a round's checkpoint is released once
+    * the next round's holds its data. Shared by the batch queries
+    * (s8/s13) and the serving tier ([[graft.streaming.VectorRestServing]]). */
   def ivfIndex(emb: DataFrame, stride: Int, lloydIters: Int)
       : (DataFrame, DataFrame) = {
     val cents0 = emb.filter(col("vec_id") % stride === 0)
       .select(col("vec_id").as("cent_id"), col("embedding").as("c_emb"),
         col("norm").as("c_norm"))
-    val cents = (1 to lloydIters).foldLeft(cents0) { (c, _) =>
-      nearestCells(emb, 1, c)
+    val cents = (1 to lloydIters).foldLeft(cents0) { (c, round) =>
+      val next = nearestCells(emb, 1, c)
         .groupBy(col("cell"))
         .agg(array_sort(collect_list(struct(col("vec_id"), col("embedding")))).as("ms"))
         .select(col("cell").as("cent_id"),
@@ -314,6 +315,8 @@ object Similarity {
             x => x / size(col("ms"))).as("c_emb"))
         .withColumn("c_norm", l2norm(col("c_emb")))
         .localCheckpoint()
+      if (round > 1) Memo.release(c) // cents0 is no checkpoint: it reads emb
+      next
     }
     (nearestCells(emb, 1, cents).localCheckpoint(), cents)
   }
@@ -576,6 +579,7 @@ object Similarity {
         .select(col("vec_id"), col("c0"), col("c1"), col("c2"), col("c3"))
         .join(cells.select(col("vec_id"), col("cell")), Seq("vec_id"))
         .localCheckpoint()
+      Memo.release(cells)
       if (Artifacts.enabled(s)) {
         Artifacts.write(s, dir, VectorArtifacts.IvfPqCells, coded)
         Artifacts.write(s, dir, VectorArtifacts.IvfPqCents, cents)
@@ -741,11 +745,12 @@ object Similarity {
     val n = Tables.embeddingsRowCount(s, dir)
     val stride = math.max(1, math.sqrt(n.toDouble).toInt)
     val (cells, cents) = ivfIndex(emb, stride, LloydIters)
-    cells.join(broadcast(cents), col("cell") === col("cent_id"))
+    try cells.join(broadcast(cents), col("cell") === col("cent_id"))
       .select(when(col("norm") * col("c_norm") > 0,
         dot(col("embedding"), col("c_emb")) / (col("norm") * col("c_norm")))
         .as("csim"))
       .agg(avg(col("csim"))).head.getDouble(0)
+    finally Memo.release(cells, cents)
   }
 
   private val ClusterednessMemo = new Memo.Tag[Double]
@@ -1221,6 +1226,7 @@ object Similarity {
         cents.select(col("cent_id"), col("c_emb"), col("c_norm")))
       Artifacts.invalidateByPrefix(s, dir, VectorArtifacts.IvfCellsPrefix, cellsName)
       Artifacts.invalidateByPrefix(s, dir, VectorArtifacts.IvfCentsPrefix, centsName)
+      Memo.release(cells, cents)
       (Artifacts.read(s, dir, cellsName), Artifacts.read(s, dir, centsName),
         "built")
     }

@@ -7,7 +7,8 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 import java.net.InetSocketAddress
 import java.net.http.HttpResponse
 import java.nio.charset.StandardCharsets
-import HttpJsonServer.{NoHeaders, enc, json, stamp}
+import HttpJsonServer.{NoHeaders, Reply, clientError, clientInt, clientLong, enc,
+  intParam, json, required, stamp}
 
 /** What every serving family shares: which partitions this instance
   * owns, where the others live, and how the served state is loaded,
@@ -32,7 +33,9 @@ import HttpJsonServer.{NoHeaders, enc, json, stamp}
   * stamped with the source's [[graft.ops.Artifacts.fingerprint]]. Every
   * answer read from it carries the stamp in `X-Graft-Generation`; a merge
   * whose partials came from more than one generation adds
-  * `X-Graft-Mixed-Generation: true`. `{prefix}/reload` rebuilds this
+  * `X-Graft-Mixed-Generation: true`. Error replies (a 400 or 500) carry no
+  * stamp: [[HttpJsonServer]]'s one error writer produces them.
+  * `{prefix}/reload` rebuilds this
   * instance (concurrent calls share one rebuild); `{prefix}/reload/all`
   * rebuilds it, then every peer, and answers each host's generation — or
   * a 502 naming the hosts that failed.
@@ -74,7 +77,7 @@ private[streaming] abstract class ShardedServing(spark: SparkSession,
 
   /** `{prefix}/reload` answering `ack`, and `{prefix}/reload/all`. */
   protected def reloadEndpoints(prefix: String)(
-      ack: () => (Int, String, Map[String, String])): Unit = {
+      ack: () => Reply): Unit = {
     endpointFuture(s"$prefix/reload")(_ => reloadAsync(fresh)(load()).thenApply(_ => ack()))
     // the peer fan-out blocks, so it continues on the ops pool
     endpointFuture(s"$prefix/reload/all")(_ => reloadAsync(fresh)(load())
@@ -85,7 +88,7 @@ private[streaming] abstract class ShardedServing(spark: SparkSession,
     * reload fetched concurrently; a non-200 or unreachable peer makes
     * the whole answer a 502 naming the failed hosts, so a partial
     * rollout never reads as done. */
-  private def fleetReload(reloadPath: String): (Int, String, Map[String, String]) = {
+  private def fleetReload(reloadPath: String): Reply = {
     val selfGen = generation
     val peers = (peerUrls - selfHost).toSeq.sortBy(_._1)
     val resps = HttpJsonServer.reloadFetch(peers.map(_._2 + reloadPath))
@@ -109,7 +112,7 @@ private[streaming] abstract class ShardedServing(spark: SparkSession,
   }
 
   /** 307 to `host`'s `target` (path and query), or 502 without its URL. */
-  protected def redirect(host: String, target: String): (Int, String, Map[String, String]) =
+  protected def redirect(host: String, target: String): Reply =
     peerUrls.get(host) match {
       case Some(base) => (307, base + target, NoHeaders)
       case None => (502, s"""{"error":"no url for host $host"}""", NoHeaders)
@@ -128,13 +131,8 @@ private[streaming] abstract class ShardedServing(spark: SparkSession,
   protected def gather(target: String): Seq[HttpResponse[String]] =
     fetchPeers((peerUrls - selfHost).values.toSeq.map(_ + target))
 
-  /** `r`'s status and body, stamped `gen`, plus any extra headers. */
-  protected def stamped(gen: String)(
-      r: Either[(Int, String), (Int, String, Map[String, String])])
-      : (Int, String, Map[String, String]) = {
-    val (sc, body, extra) = r.fold({ case (s, b) => (s, b, NoHeaders) }, identity)
-    (sc, body, stamp(gen) ++ extra)
-  }
+  /** `r` stamped `gen`, keeping its other headers. */
+  protected def stamped(gen: String)(r: Reply): Reply = (r._1, r._2, stamp(gen) ++ r._3)
 
   /** The mixed-generation flag for a merge of `gen` with `partials`. */
   protected def mixedFlag(gen: String, partials: Seq[HttpResponse[String]])
@@ -228,7 +226,7 @@ class RestServing private (spark: SparkSession, storePath: String,
       throw new ClientError(s"key '$key' is not a valid ${dt.simpleString}", e) }
 
   private def topkParams(q: Map[String, String]): (String, Int) =
-    (q.getOrElse("value", "value"), HttpJsonServer.positiveInt(q, "k", 5))
+    (q.getOrElse("value", "value"), intParam(q, "k", 5))
 
   def start(bindPort: Int = 0): Int = {
     load()
@@ -312,10 +310,9 @@ class RestServing private (spark: SparkSession, storePath: String,
         val gen = graft.ops.Artifacts.fingerprint(spark, storePath)
         val resps = gather(
           s"/state/topk/local?value=${enc(valueCol)}&k=$k")
-        // one JSON object per row (strip the array frame); parsed with
-        // the STORE's schema so merge types cannot drift from inference
-        val peerRows = resps.flatMap(_.body().stripPrefix("[").stripSuffix("]")
-          .split("(?<=\\}),(?=\\{)").toSeq.filter(_.nonEmpty))
+        // the peers' rows, sliced as the hot tier slices them, parsed
+        // with the STORE's schema so merge types cannot drift
+        val peerRows = resps.flatMap(r => HotKv.rowSlices(r.body()))
         import spark.implicits._
         val gathered =
           if (peerRows.isEmpty) localTopK(valueCol, k)
@@ -358,66 +355,52 @@ class LiveRestServing(spark: SparkSession, tableName: String, keyCol: String)
     extends HttpJsonServer {
 
   def start(bindPort: Int = 0): Int = serve(bindPort) {
-    server.createContext("/state/keyvalue/", handler { path =>
-      val key = path.stripPrefix("/state/keyvalue/")
-      val rows = spark.table(tableName)
-        .where(col(keyCol) === key).toJSON.collect()
-      if (rows.isEmpty) (404, """{"error":"key not found"}""")
-      else (200, rows.mkString("[", ",", "]"))
-    })
-    server.createContext("/state/topk", handlerQ { (_, q) =>
+    endpointUnder("/state/keyvalue/") { (key, _) =>
+      val rows = json(spark.table(tableName).where(col(keyCol) === key))
+      if (rows == "[]") (404, """{"error":"key not found"}""", NoHeaders)
+      else (200, rows, NoHeaders)
+    }
+    endpoint("/state/topk") { q =>
       val valueCol = q.getOrElse("value", "value")
-      val k = HttpJsonServer.positiveInt(q, "k", 5)
-      val rows = spark.table(tableName)
-        .orderBy(col(valueCol).desc, col(keyCol).asc).limit(k)
-        .toJSON.collect()
-      (200, rows.mkString("[", ",", "]"))
-    })
+      val k = intParam(q, "k", 5)
+      (200, json(spark.table(tableName)
+        .orderBy(col(valueCol).desc, col(keyCol).asc).limit(k)), NoHeaders)
+    }
     // all-entries scan of the LIVE store, key-ordered (the reference's
     // allForStore runs against the running topology's store the same way;
     // the served table is aggregate-sized state — see the class scan note)
-    server.createContext("/state/all", handlerQ { (path, _) =>
-      if (path != "/state/all") (404, """{"error":"not found"}""")
-      else {
-        val rows = spark.table(tableName).orderBy(col(keyCol)).toJSON.collect()
-        (200, rows.mkString("[", ",", "]"))
-      }
-    })
+    endpoint("/state/all") { _ =>
+      (200, json(spark.table(tableName).orderBy(col(keyCol))), NoHeaders)
+    }
     // chart fetch (MusicPlaysRestService.java:77-115 `genreCharts` /
     // `topFiveSongs`): the group's CURRENT top-k in rank order, read live
     // from a chart-shaped served table (StreamOps.ChartRow: group, pos,
     // id, value — served via Sources.serveUpserted so each group's rows
     // are the latest emission only). 404 on an uncharted group, like the
     // reference's unknown-genre path.
-    server.createContext("/state/chart/", handlerQ { (path, q) =>
-      val group = path.stripPrefix("/state/chart/")
-      val k = HttpJsonServer.positiveInt(q, "k", 5)
-      val rows = spark.table(tableName)
-        .where(col(keyCol) === group)
-        .orderBy(col("pos")).limit(k)
-        .toJSON.collect()
-      if (rows.isEmpty) (404, """{"error":"group not found"}""")
-      else (200, rows.mkString("[", ",", "]"))
-    })
+    endpointUnder("/state/chart/") { (group, q) =>
+      val k = intParam(q, "k", 5)
+      val rows = json(spark.table(tableName)
+        .where(col(keyCol) === group).orderBy(col("pos")).limit(k))
+      if (rows == "[]") (404, """{"error":"group not found"}""", NoHeaders)
+      else (200, rows, NoHeaders)
+    }
     // windowedByKey (WordCountInteractiveQueriesRestService.java:156-176):
     // the key's windowed aggregates whose window START falls in
     // [from, to] epoch-millis — the reference's fetch(key, from, to)
     // over a windowed store. Expects the served table to carry a
     // `window` struct column (Spark's window() aggregation shape).
-    server.createContext("/state/windowed/", handlerQ { (path, q) =>
-      val key = path.stripPrefix("/state/windowed/")
-      val from = HttpJsonServer.clientLong(q.getOrElse("from", Long.MinValue.toString), "from")
-      val to = HttpJsonServer.clientLong(q.getOrElse("to", Long.MaxValue.toString), "to")
-      val rows = spark.table(tableName)
+    endpointUnder("/state/windowed/") { (key, q) =>
+      val from = clientLong(q.getOrElse("from", Long.MinValue.toString), "from")
+      val to = clientLong(q.getOrElse("to", Long.MaxValue.toString), "to")
+      (200, json(spark.table(tableName)
         .where(col(keyCol) === key &&
           unix_millis(col("window.start")) >= from &&
           unix_millis(col("window.start")) <= to)
         .orderBy(col("window.start"))
         .withColumn("window_start", unix_millis(col("window.start")))
-        .drop("window")
-        .toJSON.collect()
-      (200, rows.mkString("[", ",", "]"))
-    })
+        .drop("window")), NoHeaders)
+    }
   }
 }
 
@@ -464,7 +447,7 @@ class VectorRestServing(spark: SparkSession, embeddingsPath: String,
     numPartitions: Int, hosts: Seq[String], selfHost: String)
     extends ShardedServing(spark, embeddingsPath, numPartitions, hosts, selfHost,
       Serving.ownedBy(selfHost, numPartitions, hosts)) {
-  import graft.ops.{Artifacts, Similarity => Sim}
+  import graft.ops.{Artifacts, Memo, Similarity => Sim}
 
   def this(spark: SparkSession, embeddingsPath: String) =
     this(spark, embeddingsPath, 1, Seq(Serving.LocalHost), Serving.LocalHost)
@@ -596,15 +579,16 @@ class VectorRestServing(spark: SparkSession, embeddingsPath: String,
     // serving knobs, since the plan curves were calibrated that way; the
     // served index is reused when it already follows it
     val calibStride = math.max(1, math.sqrt(n.toDouble).toInt)
+    val reuse = st == calibStride && savedIters == Sim.LloydIters
     val (mCells, mCents) =
-      if (st == calibStride && savedIters == Sim.LloydIters) (cellsDf, centsDf)
-      else Sim.ivfIndex(emb, calibStride, Sim.LloydIters)
+      if (reuse) (cellsDf, centsDf) else Sim.ivfIndex(emb, calibStride, Sim.LloydIters)
     val clust = mCells
       .join(broadcast(mCents), col("cell") === col("cent_id"))
       .select(when(col("norm") * col("c_norm") > 0,
         Sim.dot(col("embedding"), col("c_emb")) /
           (col("norm") * col("c_norm"))).as("csim"))
       .agg(avg(col("csim"))).head.getDouble(0)
+    if (!reuse) Memo.release(mCells, mCents)
     AnnIndex(emb, cells, codedCells, cents, codebook, pqSd, hasLabel,
       hotCells, hotCodes, clust, "")
     }
@@ -612,13 +596,13 @@ class VectorRestServing(spark: SparkSession, embeddingsPath: String,
   }
 
   private def parseVec(q: Map[String, String]): Array[Double] = {
-    val qv = q.getOrElse("vec", HttpJsonServer.clientError("vec=v1,v2,... is required"))
+    val qv = q.getOrElse("vec", clientError("vec=v1,v2,... is required"))
       .split(",").filter(_.nonEmpty).map(c => c.toDoubleOption
-        .getOrElse(HttpJsonServer.clientError("vec components must be numbers")))
+        .getOrElse(clientError("vec components must be numbers")))
     // a non-finite query would 200 on the Spark tiers (NaN sorts) and
     // 500 on the in-process ones: a client error on every tier
     if (!qv.forall(java.lang.Double.isFinite))
-      HttpJsonServer.clientError("vec components must be finite numbers")
+      clientError("vec components must be finite numbers")
     qv
   }
 
@@ -634,50 +618,41 @@ class VectorRestServing(spark: SparkSession, embeddingsPath: String,
 
   /** Exact cosine top-k over `df` in Spark, zero-norm rows excluded (the
     * hot tiers skip them too); 6-dp HALF_UP, (sim desc, vec_id asc). */
-  private def cosineTopK(df: DataFrame, qv: Array[Double], k: Int): (Int, String) = {
+  private def cosineTopK(df: DataFrame, qv: Array[Double], k: Int): String = {
     val qn = math.sqrt(qv.map(x => x * x).sum)
-    if (qn == 0.0) return (400, """{"error":"zero-norm query vector"}""")
+    if (qn == 0.0) clientError("zero-norm query vector")
     val sim = Sim.dot(col("embedding"), typedlit(qv.toSeq)) / (col("norm") * qn)
-    (200, json(df.filter(col("norm") > 0)
+    json(df.filter(col("norm") > 0)
       .select(col("vec_id"), round(sim, 6).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id").asc).limit(k)))
+      .orderBy(col("sim").desc, col("vec_id").asc).limit(k))
   }
 
-  /** The float tiers' contract: k, nprobe, vec, optional label. */
+  /** The float tiers' contract, checked in this order: k, nprobe, vec,
+    * label; then a zero-norm query or a label on an unlabeled corpus. */
   private def validated(q: Map[String, String])(
-      f: (AnnIndex, Array[Double], Double, Option[Int], Int, Int)
-        => (Int, String, Map[String, String])): (Int, String, Map[String, String]) = {
+      f: (AnnIndex, Array[Double], Double, Option[Int], Int, Int) => Reply): Reply = {
     val ix = idx // one read: probe, score and stamp from one generation
-    stamped(ix.generation)(for {
-      k <- intParam(q, "k", 5)
-      nprobe <- intParam(q, "nprobe", 4)
-    } yield {
-      val qv = parseVec(q)
-      val qn = math.sqrt(qv.map(x => x * x).sum)
-      val label = q.get("label").map(v => HttpJsonServer.clientInt(v, "label"))
-      if (qn == 0.0) (400, """{"error":"zero-norm query vector"}""", NoHeaders)
-      else if (label.isDefined && !ix.hasLabel)
-        (400, """{"error":"corpus has no label attribute"}""", NoHeaders)
-      else f(ix, qv, qn, label, k, nprobe)
-    })
+    val k = intParam(q, "k", 5)
+    val nprobe = intParam(q, "nprobe", 4)
+    val qv = parseVec(q)
+    val qn = math.sqrt(qv.map(x => x * x).sum)
+    val label = q.get("label").map(v => clientInt(v, "label"))
+    if (qn == 0.0) clientError("zero-norm query vector")
+    if (label.isDefined && !ix.hasLabel) clientError("corpus has no label attribute")
+    stamped(ix.generation)(f(ix, qv, qn, label, k, nprobe))
   }
 
   /** The PQ tiers' contract: the float tiers' minus label (the PQ tiers
     * ignore it), plus PQ availability. */
   private def validatedPq(q: Map[String, String])(
-      f: (AnnIndex, Array[Double], Int, Int) => (Int, String, Map[String, String]))
-      : (Int, String, Map[String, String]) = {
+      f: (AnnIndex, Array[Double], Int, Int) => Reply): Reply = {
     val ix = idx
-    stamped(ix.generation)(for {
-      k <- intParam(q, "k", 5)
-      nprobe <- intParam(q, "nprobe", 4)
-    } yield {
-      val qv = parseVec(q)
-      if (ix.codedCells.isEmpty)
-        (400, """{"error":"corpus dimension is not PQ-compatible"}""", NoHeaders)
-      else if (qv.forall(_ == 0.0)) (400, """{"error":"zero-norm query vector"}""", NoHeaders)
-      else f(ix, qv, k, nprobe)
-    })
+    val k = intParam(q, "k", 5)
+    val nprobe = intParam(q, "nprobe", 4)
+    val qv = parseVec(q)
+    if (ix.codedCells.isEmpty) clientError("corpus dimension is not PQ-compatible")
+    if (qv.forall(_ == 0.0)) clientError("zero-norm query vector")
+    stamped(ix.generation)(f(ix, qv, k, nprobe))
   }
 
   /** The owned probed cells' hot partial ([[HotAnn]]: one scorer for
@@ -710,15 +685,14 @@ class VectorRestServing(spark: SparkSession, embeddingsPath: String,
       }
       endpoint("/ann/topk/exact") { q =>
         val ix = idx
-        val (sc, body) = intParam(q, "k", 5).map(k => cosineTopK(ix.emb, parseVec(q), k)).merge
-        (sc, body, stamp(ix.generation))
+        val k = intParam(q, "k", 5)
+        (200, cosineTopK(ix.emb, parseVec(q), k), stamp(ix.generation))
       }
       endpoint("/ann/topk") { q =>
         validated(q) { (ix, qv, _, label, k, nprobe) =>
           val probed = ix.cells.filter(col("cell").isin(probeCells(ix, qv, nprobe): _*))
-          val (sc, body) =
-            cosineTopK(label.fold(probed)(l => probed.filter(col("label") === l)), qv, k)
-          (sc, body, NoHeaders)
+          (200, cosineTopK(label.fold(probed)(l => probed.filter(col("label") === l)), qv, k),
+            NoHeaders)
         }
       }
       endpoint("/ann/topk/hot/local") { q =>
@@ -769,19 +743,16 @@ class VectorRestServing(spark: SparkSession, embeddingsPath: String,
       }
       endpoint("/ann/plan") { q =>
         val ix = idx
-        val (sc, body) = q.get("target").flatMap(_.toDoubleOption)
-          .filter(t => t > 0.0 && t <= 1.0) match {
-          case None => (400, """{"error":"target=<recall in (0,1]> is required"}""")
-          case Some(t) =>
-            val p = Sim.annPlanFor(ix.clusteredness, t)
-            (200, f"""{"clusteredness":${p.clusteredness}%.3f,"regime":"${
-              p.regime}","nprobe":${p.nprobe},"rerank_depth":${p.rerankDepth
-              },"expected_recall":${p.expectedRecall}%.2f,"target":$t%.2f}""")
-        }
-        (sc, body, stamp(ix.generation))
+        val t = q.get("target").flatMap(_.toDoubleOption).filter(t => t > 0.0 && t <= 1.0)
+          .getOrElse(clientError("target=<recall in (0,1]> is required"))
+        val p = Sim.annPlanFor(ix.clusteredness, t)
+        (200, f"""{"clusteredness":${p.clusteredness}%.3f,"regime":"${
+          p.regime}","nprobe":${p.nprobe},"rerank_depth":${p.rerankDepth
+          },"expected_recall":${p.expectedRecall}%.2f,"target":$t%.2f}""",
+          stamp(ix.generation))
       }
       endpointUnder("/ann/instance/") { (c, _) =>
-        val cell = HttpJsonServer.clientLong(c, "cell")
+        val cell = clientLong(c, "cell")
         (200, s"""{"cell":$cell,"host":"${cellOwner(cell)}"}""", NoHeaders)
       }
     }
@@ -876,19 +847,17 @@ class SearchRestServing(spark: SparkSession, documentsPath: String,
     idx.stats.orderBy(col("df").desc, col("term").asc).select("term")
       .limit(n).collect().map(_.getString(0)).toSeq
 
-  private def termParams(q: Map[String, String]): Either[(Int, String), (String, Int)] =
-    for {
-      t <- q.get("t").filter(_.nonEmpty).toRight((400, """{"error":"t=<term> is required"}"""))
-      k <- intParam(q, "k", 10, max = SearchRestServing.MaxTermK)
-    } yield (t, k)
+  private def termParams(q: Map[String, String]): (String, Int) = {
+    val t = required(q, "t", "t=<term> is required")
+    (t, intParam(q, "k", 10, max = SearchRestServing.MaxTermK))
+  }
 
-  private def searchParams(q: Map[String, String]): Either[(Int, String), (Seq[String], Int)] =
-    for {
-      raw <- q.get("q").toRight((400, """{"error":"q=t1+t2+... is required"}"""))
-      terms <- Some(raw.split("[ +]+").filter(_.nonEmpty).distinct.toSeq)
-        .filter(_.nonEmpty).toRight((400, """{"error":"empty query"}"""))
-      k <- intParam(q, "k", 10)
-    } yield (terms, k)
+  private def searchParams(q: Map[String, String]): (Seq[String], Int) = {
+    val terms = q.getOrElse("q", clientError("q=t1+t2+... is required"))
+      .split("[ +]+").filter(_.nonEmpty).distinct.toSeq
+    if (terms.isEmpty) clientError("empty query")
+    (terms, intParam(q, "k", 10))
+  }
 
   def start(bindPort: Int = 0): Int = {
     load()
@@ -900,28 +869,27 @@ class SearchRestServing(spark: SparkSession, documentsPath: String,
       }
       endpoint("/search/term") { q =>
         val ix = idx
-        stamped(ix.generation)(termParams(q).map { case (t, k) =>
-          val st = ix.stats.filter(col("term") === t).toJSON.collect()
-          if (st.isEmpty) (404, """{"error":"term not found"}""", NoHeaders)
-          else (200, s"""{"stats":${st.head},"postings":${json(
-            ix.postings.filter(col("term") === t)
-              .orderBy(col("tf").desc, col("doc_id").asc).limit(k)
-              .select(col("doc_id"), col("tf"), col("first_pos")))}}""", NoHeaders)
-        })
+        val (t, k) = termParams(q)
+        val st = ix.stats.filter(col("term") === t).toJSON.collect()
+        if (st.isEmpty) (404, """{"error":"term not found"}""", stamp(ix.generation))
+        else (200, s"""{"stats":${st.head},"postings":${json(
+          ix.postings.filter(col("term") === t)
+            .orderBy(col("tf").desc, col("doc_id").asc).limit(k)
+            .select(col("doc_id"), col("tf"), col("first_pos")))}}""", stamp(ix.generation))
       }
       // a term has ONE owner: route, never gather
       endpoint("/search/term/hot") { q =>
         val ix = idx // stats and heads from one generation
-        stamped(ix.generation)(termParams(q).map { case (t, k) =>
-          val host = termOwner(t)
+        val (t, k) = termParams(q)
+        val host = termOwner(t)
+        stamped(ix.generation)(
           if (host != selfHost)
             redirect(host, s"/search/term/hot?t=${enc(t)}&k=$k")
           else Option(ix.hotStats.get(t)) match {
             case None => (404, """{"error":"term not found"}""", NoHeaders)
             case Some(st) => (200, s"""{"stats":$st,"postings":${
               ix.hotHeads.get(t).take(k).mkString("[", ",", "]")}}""", NoHeaders)
-          }
-        })
+          })
       }
       endpointUnder("/search/instance/") { (t, _) =>
         val p = Serving.partitionOf(t, numPartitions, StringType)
@@ -929,47 +897,43 @@ class SearchRestServing(spark: SparkSession, documentsPath: String,
       }
       endpoint("/search") { q =>
         val ix = idx
-        stamped(ix.generation)(searchParams(q).map { case (terms, k) =>
-          val cand = ix.postings.filter(col("term").isin(terms: _*))
-          val df = ix.stats.filter(col("term").isin(terms: _*))
-          val perTerm = q.get("rank") match {
-            case Some("bm25") =>
-              import graft.ops.TextAnalysis.{Bm25K1, Bm25B}
-              // t25's scoring: same constants, idf and evaluation order
-              val idf = df.select(col("term"), log(lit(1.0)
-                + (lit(ix.nDocs) - col("df") + 0.5) / (col("df") + 0.5)).as("idf"))
-              cand.join(broadcast(idf), Seq("term"))
-                .join(ix.dlens, Seq("doc_id"))
-                .withColumn("s", col("idf") * (col("tf") * lit(Bm25K1 + 1))
-                  / (col("tf") + lit(Bm25K1) * (lit(1.0 - Bm25B)
-                    + lit(Bm25B) * col("dl").cast("double") * lit(ix.nDocs)
-                      / lit(ix.totalLen))))
-            case _ =>
-              val idf = df.select(col("term"),
-                (log((lit(ix.nDocs) + 1.0) / (col("df") + 1.0)) + 1.0).as("idf"))
-              cand.join(broadcast(idf), Seq("term")).withColumn("s", col("tf") * col("idf"))
-          }
-          (200, json(perTerm.groupBy(col("doc_id"))
-            .agg(round(sum(col("s")), 6).as("score"), count(lit(1)).as("n_terms"))
-            .orderBy(col("score").desc, col("doc_id").asc).limit(k)), NoHeaders)
-        })
+        val (terms, k) = searchParams(q)
+        val cand = ix.postings.filter(col("term").isin(terms: _*))
+        val df = ix.stats.filter(col("term").isin(terms: _*))
+        val perTerm = q.get("rank") match {
+          case Some("bm25") =>
+            import graft.ops.TextAnalysis.{Bm25K1, Bm25B}
+            // t25's scoring: same constants, idf and evaluation order
+            val idf = df.select(col("term"), log(lit(1.0)
+              + (lit(ix.nDocs) - col("df") + 0.5) / (col("df") + 0.5)).as("idf"))
+            cand.join(broadcast(idf), Seq("term"))
+              .join(ix.dlens, Seq("doc_id"))
+              .withColumn("s", col("idf") * (col("tf") * lit(Bm25K1 + 1))
+                / (col("tf") + lit(Bm25K1) * (lit(1.0 - Bm25B)
+                  + lit(Bm25B) * col("dl").cast("double") * lit(ix.nDocs)
+                    / lit(ix.totalLen))))
+          case _ =>
+            val idf = df.select(col("term"),
+              (log((lit(ix.nDocs) + 1.0) / (col("df") + 1.0)) + 1.0).as("idf"))
+            cand.join(broadcast(idf), Seq("term")).withColumn("s", col("tf") * col("idf"))
+        }
+        (200, json(perTerm.groupBy(col("doc_id"))
+          .agg(round(sum(col("s")), 6).as("score"), count(lit(1)).as("n_terms"))
+          .orderBy(col("score").desc, col("doc_id").asc).limit(k)), stamp(ix.generation))
       }
       // the owned subset of the requested terms' champion lists, in
       // HotSearch's wire form; other terms are absent
       endpoint("/search/hot/local") { q =>
         val ix = idx
-        q.get("terms").filter(_.nonEmpty) match {
-          case None => (400, """{"error":"terms=t1,t2,... is required"}""",
-            stamp(ix.generation))
-          case Some(ts) =>
-            val lists = if (q.get("rank").contains("bm25")) ix.hotTermBm25 else ix.hotTerm
-            (200, HotSearch.renderHeads(ts.split(",").toSeq.filter(_.nonEmpty).distinct
-              .flatMap(t => Option(lists.get(t)))), stamp(ix.generation))
-        }
+        val ts = required(q, "terms", "terms=t1,t2,... is required")
+        val lists = if (q.get("rank").contains("bm25")) ix.hotTermBm25 else ix.hotTerm
+        (200, HotSearch.renderHeads(ts.split(",").toSeq.filter(_.nonEmpty).distinct
+          .flatMap(t => Option(lists.get(t)))), stamp(ix.generation))
       }
       endpointAsync("/search/hot") { q =>
         val ix = idx
-        stamped(ix.generation)(searchParams(q).map { case (terms, k) =>
+        val (terms, k) = searchParams(q)
+        stamped(ix.generation) {
           // only tokenizer-alphabet terms exist in the index, so dropping
           // the rest keeps parity with /search and the wire format
           // unambiguous
@@ -993,7 +957,7 @@ class SearchRestServing(spark: SparkSession, documentsPath: String,
                 HotSearch.exact(heads, SearchRestServing.MaxTermK).toString) ++
                 mixedFlag(ix.generation, resps))
           }
-        })
+        }
       }
     }
   }
@@ -1122,65 +1086,54 @@ class DedupRestServing(spark: SparkSession, documentsPath: String,
       }
       endpoint("/dedup/probe/exact") { q =>
         val (gen, hashes, _) = shard
-        val (sc, body) = q.get("ch").filter(_.nonEmpty) match {
-          case None => (400, """{"error":"ch=... is required"}""")
-          case Some(ch) => Option(hashes.get(ch)) match {
-            case Some(p) => (200, s"""{"partner":$p}""")
-            case None => (404, """{"error":"no exact match"}""")
-          }
+        val ch = required(q, "ch", "ch=... is required")
+        Option(hashes.get(ch)) match {
+          case Some(p) => (200, s"""{"partner":$p}""", stamp(gen))
+          case None => (404, """{"error":"no exact match"}""", stamp(gen))
         }
-        (sc, body, stamp(gen))
       }
       endpoint("/dedup/probe/near") { q =>
         val (gen, _, bands) = shard
-        val (sc, body) = (q.get("keys").filter(_.nonEmpty), q.get("sig").filter(_.nonEmpty)) match {
-          case (Some(ks), Some(sg)) =>
-            val qsig = sg.split(",").map(v => HttpJsonServer.clientLong(v, "sig"))
-            bestNear(bands, ks.split(",").toSeq, qsig) match {
-              case Some((e, id)) => (200, s"""{"partner":$id,"est":$e}""")
-              case None => (200, """{"partner":null}""")
-            }
-          case _ => (400, """{"error":"keys=... and sig=... are required"}""")
-        }
-        (sc, body, stamp(gen))
+        val usage = "keys=... and sig=... are required"
+        val ks = required(q, "keys", usage)
+        val qsig = required(q, "sig", usage).split(",").map(v => clientLong(v, "sig"))
+        (200, bestNear(bands, ks.split(",").toSeq, qsig).fold("""{"partner":null}""") {
+          case (e, id) => s"""{"partner":$id,"est":$e}""" }, stamp(gen))
       }
       endpointAsync("/dedup/check") { q =>
-        q.get("text").filter(_.nonEmpty) match {
-          case None => (400, """{"error":"text=... is required"}""", NoHeaders)
-          case Some(text) =>
-            val (gen, hashes, bands) = shard // local probes from one generation
-            val (ch, qsig, keys) = querySig.of(text)
-            // exact tier: the hash's one owner, in-process or one peer hop
-            val exactOwner = keyOwner(ch)
-            val exactResp = if (exactOwner == selfHost) Nil
-              else peerUrls.get(exactOwner).toSeq.map(base =>
-                HttpJsonServer.fetchAll(Seq(s"$base/dedup/probe/exact?ch=$ch")).head)
-            val exact: Option[Long] =
-              if (exactOwner == selfHost) Option(hashes.get(ch)).map(_.toLong)
-              else exactResp.filter(_.statusCode() == 200).flatMap(r =>
-                PartnerRe.findFirstMatchIn(r.body()).map(_.group(1).toLong)).headOption
-            val (body, nearResps) = exact match {
-              case Some(p) =>
-                (s"""{"verdict":"exact","partner":$p,"est_jaccard":1.0}""", Nil)
-              case None =>
-                // near tier: each owner's best for its buckets, merged
-                val byOwner = keys.groupBy(keyOwner)
-                val resps = fetchPeers((byOwner - selfHost).toSeq.flatMap { case (h, ks) =>
-                  peerUrls.get(h).map(base =>
-                    s"$base/dedup/probe/near?keys=${ks.mkString(",")}&sig=${qsig.mkString(",")}")
-                })
-                val peerBests = resps.flatMap(r => for {
-                  id <- PartnerRe.findFirstMatchIn(r.body())
-                  e <- EstRe.findFirstMatchIn(r.body())
-                } yield (e.group(1).toDouble, id.group(1).toLong))
-                val best = (byOwner.get(selfHost).flatMap(ks => bestNear(bands, ks, qsig)).toSeq ++
-                  peerBests).sortBy { case (e, id) => (-e, id) }.headOption
-                (best.fold("""{"verdict":"new","partner":null,"est_jaccard":null}""") {
-                  case (e, id) => s"""{"verdict":"near","partner":$id,"est_jaccard":$e}"""
-                }, resps)
-            }
-            (200, body, stamp(gen) ++ mixedFlag(gen, exactResp ++ nearResps))
+      val text = required(q, "text", "text=... is required")
+        val (gen, hashes, bands) = shard // local probes from one generation
+        val (ch, qsig, keys) = querySig.of(text)
+        // exact tier: the hash's one owner, in-process or one peer hop
+        val exactOwner = keyOwner(ch)
+        val exactResp = if (exactOwner == selfHost) Nil
+          else peerUrls.get(exactOwner).toSeq.map(base =>
+            HttpJsonServer.fetchAll(Seq(s"$base/dedup/probe/exact?ch=$ch")).head)
+        val exact: Option[Long] =
+          if (exactOwner == selfHost) Option(hashes.get(ch)).map(_.toLong)
+          else exactResp.filter(_.statusCode() == 200).flatMap(r =>
+            PartnerRe.findFirstMatchIn(r.body()).map(_.group(1).toLong)).headOption
+        val (body, nearResps) = exact match {
+          case Some(p) =>
+            (s"""{"verdict":"exact","partner":$p,"est_jaccard":1.0}""", Nil)
+          case None =>
+            // near tier: each owner's best for its buckets, merged
+            val byOwner = keys.groupBy(keyOwner)
+            val resps = fetchPeers((byOwner - selfHost).toSeq.flatMap { case (h, ks) =>
+              peerUrls.get(h).map(base =>
+                s"$base/dedup/probe/near?keys=${ks.mkString(",")}&sig=${qsig.mkString(",")}")
+            })
+            val peerBests = resps.flatMap(r => for {
+              id <- PartnerRe.findFirstMatchIn(r.body())
+              e <- EstRe.findFirstMatchIn(r.body())
+            } yield (e.group(1).toDouble, id.group(1).toLong))
+            val best = (byOwner.get(selfHost).flatMap(ks => bestNear(bands, ks, qsig)).toSeq ++
+              peerBests).sortBy { case (e, id) => (-e, id) }.headOption
+            (best.fold("""{"verdict":"new","partner":null,"est_jaccard":null}""") {
+              case (e, id) => s"""{"verdict":"near","partner":$id,"est_jaccard":$e}"""
+            }, resps)
         }
+        (200, body, stamp(gen) ++ mixedFlag(gen, exactResp ++ nearResps))
       }
     }
   }
@@ -1301,7 +1254,7 @@ private[streaming] object HotSearch {
     }.toArray.sortBy { case (s, doc, _) => (-s, doc) }.take(k)
   }
 
-  /** The hot answer's EXACTNESS predicate (VERDICT r18 missing #2): TRUE
+  /** The hot answer's EXACTNESS predicate: TRUE
     * when every gathered head is COMPLETE — a term whose df ≤ cap has
     * its ENTIRE postings list in the champion head, so the scored union
     * is the full candidate set and the hot answer byte-equals the cold
@@ -1361,8 +1314,8 @@ private[streaming] object HotSearch {
          java.util.HashMap[String, TermHead],
          java.util.HashMap[String, TermHead]) =
     // literal rank bound on the UNJOINED postings: Spark plans the
-    // rank-filter as WindowGroupLimit (the bounded-collect shape the
-    // ADVICE r15 #2 memory contract rides on) — a column-valued cap
+    // rank-filter as WindowGroupLimit (the bounded collect the per-term
+    // memory bound rides on) — a column-valued cap
     // cannot use that optimization, so the production path keeps its
     // own plan instead of routing through the general form
     buildTermShardImpl(stats, postings, dlens,
@@ -1371,7 +1324,7 @@ private[streaming] object HotSearch {
   /** The general form: `cap` is a per-TERM head-depth column and may
     * reference `df` (evaluated over a broadcast join of the vocab-grain
     * stats) — the df-PROPORTIONAL champion depth SearchSweep's lever
-    * arm measures (VERDICT r18 next #6). Same builder core as the
+    * arm measures. Same builder core as the
     * production overload, so a knob the sweep validates is one literal
     * swap away from serving. */
   private[streaming] def buildTermShardCap(
@@ -1474,21 +1427,17 @@ private[streaming] object HotSearch {
 private[streaming] object HotKv {
   import org.apache.spark.sql.types._
 
-  /** One loaded store shard: each row's rendered JSON held ONCE
-    * (review r19 #6: a separate key→body map doubled the string heap at
-    * exactly the memory-∝-owned-partitions scale the federated tier
-    * advertises), with the point map reduced to key→row indices and the
-    * array-framed body assembled per lookup — byte-identical to the
-    * r18 map's values, a few µs of concat per point read. `vals` holds
-    * the canonical sort values per orderable column for the top-k. */
+  /** One loaded store shard: each row's rendered JSON held once, the
+    * point map holding key → row indices (the array-framed body is
+    * assembled per lookup, a few µs of concat), and `vals` the canonical
+    * sort values per orderable column for the top-k. */
   final case class Shard(
       keyRows: java.util.HashMap[String, Array[Int]],
       names: Array[String],
       types: Array[DataType],
       vals: Array[Array[Any]],
       jsons: Array[String]) {
-    /** The point-read body for a key — exactly the string the r18 hot
-      * map stored. */
+    /** The point-read body for a key: its rows as a JSON array. */
     def lookup(key: String): Option[String] =
       Option(keyRows.get(key)).map(ix => ix.map(jsons(_)).mkString("[", ",", "]"))
     def keyCount: Int = keyRows.size
@@ -1595,15 +1544,14 @@ private[streaming] object HotKv {
       : Seq[(Any, Any, String)] = {
     val vi = sh.names.indexOf(valueCol)
     val ki = sh.names.indexOf(keyCol)
-    if (vi < 0) HttpJsonServer.clientError(s"unknown column $valueCol")
+    if (vi < 0) clientError(s"unknown column $valueCol")
     if (!orderable(sh.types(vi)))
-      HttpJsonServer.clientError(s"column $valueCol (${sh.types(vi).simpleString}) " +
+      clientError(s"column $valueCol (${sh.types(vi).simpleString}) " +
         "is not hot-tier orderable; use /state/topk")
-    // the KEY column too (review r19 #5): a timestamp/date key would
-    // canon to null and SILENTLY lose the asc tie-break — the cold tier
-    // sorts it fine, so diverging quietly is worse than the 400
+    // the key column too: a timestamp/date key would canon to null and
+    // silently lose the asc tie-break, so it is a 400 like the value
     if (!orderable(sh.types(ki)))
-      HttpJsonServer.clientError(s"key column $keyCol (${sh.types(ki).simpleString}) " +
+      clientError(s"key column $keyCol (${sh.types(ki).simpleString}) " +
         "is not hot-tier orderable; use /state/topk")
     // heap head = the WORST kept row (reverse rank order), so poll()
     // evicts it when a better row arrives
@@ -1636,24 +1584,20 @@ private[streaming] object HotKv {
     partials.sortBy(t => (t._1, t._2))(rankOrdering).take(k)
       .map(_._3).mkString("[", ",", "]")
 
-  /** BigDecimal parse for JSON decimals (review r19 #2): the default
-    * DoubleNode would round a decimal(22,2) beyond 2^53 and mis-rank
-    * the merge. */
+  /** BigDecimal parse for JSON decimals: the default DoubleNode would
+    * round a decimal(22,2) beyond 2^53 and mis-rank the merge. */
   private lazy val jackson = com.fasterxml.jackson.databind.json.JsonMapper
     .builder()
     .enable(com.fasterxml.jackson.databind.DeserializationFeature
       .USE_BIG_DECIMAL_FOR_FLOATS)
     .build()
 
-  /** ONE streaming pass over a peer-partial body, yielding each
-    * top-level element as (parsed node, byte-exact source slice).
-    * The slice matters (review r19 #2): re-rendering a parsed node
-    * normalizes number text — "1.20" → 1.2, sci-notation doubles →
-    * plain — and the naive `(?<=\}),(?=\{)` regex splits inside string
-    * values containing "},{"; the parser's token offsets slice the
-    * owner's ORIGINAL bytes. The node rides out of the SAME pass
-    * (review pass 2: a separate readTree per slice tokenized every
-    * element twice). */
+  /** One streaming pass over a peer partial (a JSON array of row
+    * objects), yielding each element as (parsed node, exact source
+    * slice). The slice is cut at the parser's token offsets, so it is the
+    * owner's original text: re-rendering a node would normalize numbers
+    * ("1.20" → 1.2), and splitting the text on `},{` would cut string
+    * values that contain it. */
   private def parsedElements(body: String)
       : Seq[(com.fasterxml.jackson.databind.JsonNode, String)] = {
     import com.fasterxml.jackson.core.JsonToken
@@ -1684,6 +1628,11 @@ private[streaming] object HotKv {
     } finally p.close()
   }
 
+  /** Each row of a peer partial as its exact source text: the cold
+    * `/state/topk` merge reads peer rows through the same slicer as the
+    * hot merge. */
+  def rowSlices(body: String): Seq[String] = parsedElements(body).map(_._2)
+
   /** Parse a peer's partial — a JSON array of row objects — back into
     * sort triples, typed by THIS instance's store schema (every
     * instance reads the same store, so the schemas agree by
@@ -1707,11 +1656,10 @@ private[streaming] object HotKv {
     else dt match {
       case ByteType | ShortType | IntegerType | LongType =>
         java.lang.Long.valueOf(n.longValue)
-      // float parses AS A FLOAT then widens — the same canon as the
-      // local rows (review r19 #1: parsing the rendered "0.3" straight
-      // to double reads 0.29999999999999998 while the local widened
-      // float is 0.30000001192092896 — equal values compared unequal
-      // and the key tie-break never fired)
+      // float parses as a float, then widens: the local rows' canon.
+      // Parsing "0.3" straight to double would read 0.29999999999999998
+      // against the local widened 0.30000001192092896, and equal values
+      // would compare unequal
       case FloatType => java.lang.Double.valueOf(n.floatValue.toDouble)
       case DoubleType => java.lang.Double.valueOf(n.doubleValue)
       case _: DecimalType => n.decimalValue()
@@ -1785,67 +1733,52 @@ private[streaming] object HotAdc {
       .mkString("[", ",", "]")
 }
 
-/** A CLIENT-fault request error (missing/junk/non-finite params) — the
-  * ONLY exception type [[HttpJsonServer.handlerQH]] maps to 400 (ADVICE
-  * r17 #2: a bare IllegalArgumentException also arises from genuine
-  * server-side faults — buildIndex's dim%PqM require reached through
-  * /ann/reload after a corpus rewrite, Spark-internal requires during a
-  * cold-tier read — and those must report as 500, not as the caller's
-  * mistake). Extends IAE so existing catch sites and tests that treat
-  * bad params as IAE keep working. */
+/** A client-fault request error: a missing, junk or out-of-range
+  * parameter. It is the only exception the serving tiers answer with a
+  * 400; every other `Exception` is a server fault and answers 500, even
+  * an `IllegalArgumentException` (a Spark `require`, a rebuild's
+  * precondition). Extends `IllegalArgumentException` for callers that
+  * catch bad input by that type. The cause-chaining form keeps a caught
+  * parse exception on the chain while the 400 body stays `msg`. */
 private[streaming] final class ClientError(msg: String)
     extends IllegalArgumentException(msg) {
-  /** Cause-chaining form (ADVICE r18 #3): validation sites that CAUGHT a
-    * parse exception must keep it on the chain — the 400 body stays the
-    * curated message, but a log/stack review still sees the underlying
-    * NumberFormatException/DateTimeParseException diagnostics. */
   def this(msg: String, cause: Throwable) = { this(msg); initCause(cause) }
 }
 
-/** Shared JDK-HttpServer plumbing: JSON responses, query parsing, error
-  * mapping. */
+/** Shared serving plumbing: the reply type, client-input parsing, the
+  * response headers, the ops pool and the peer client. */
 private[streaming] object HttpJsonServer {
 
-  /** Raise a [[ClientError]] — handler code marks "this is the caller's
-    * fault, answer 400" with this, and nothing else. */
+  /** A reply: status, body, extra response headers. */
+  type Reply = (Int, String, Map[String, String])
+
+  /** Raise a [[ClientError]]: the caller's fault, answered 400. */
   def clientError(msg: String): Nothing = throw new ClientError(msg)
 
-  /** Parse helpers that 400 (never 500) on junk client input. */
+  /** Parse helpers that raise a [[ClientError]] on junk client input. */
   def clientInt(v: String, what: String): Int =
     v.toIntOption.getOrElse(clientError(s"$what must be an integer"))
   def clientLong(v: String, what: String): Long =
     v.toLongOption.getOrElse(clientError(s"$what must be an integer"))
 
-  /** [[ClientError]]-raising twin of the trait's `intParam` — the SAME
-    * positivity contract and message (review r18 #5: a bare toIntOption
-    * here let k=-5 through to Spark's limit() as a 500), for handler
-    * sites structured around straight-line parses rather than Either. */
-  def positiveInt(q: Map[String, String], name: String, default: Int): Int =
+  /** Query parameter `name`, positive and at most `max`; `default` when
+    * absent. The one validator for k, nprobe and the like, so every hot
+    * and cold tier rejects the same inputs with the same message. */
+  def intParam(q: Map[String, String], name: String, default: Int,
+      max: Int = Int.MaxValue): Int =
     q.get(name) match {
       case None => default
-      case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
-        clientError(s"$name must be a positive integer"))
+      case Some(v) =>
+        val i = v.toIntOption.filter(_ > 0)
+          .getOrElse(clientError(s"$name must be a positive integer"))
+        if (i > max) clientError(s"$name must be at most $max") else i
     }
 
-  /** The SCATTER/OPS executor every [[HttpJsonServer.handlerQHAsync]]
-    * endpoint runs on (ADVICE r17 #1): coordinator fan-outs block
-    * synchronously on peer HTTP (fetchAll joins — 30 s read / 15 min
-    * reload ceilings) and reload endpoints block on Spark index
-    * rebuilds (minutes). On the FIXED 8-thread request pool, ≥8
-    * concurrent coordinator requests per instance could park every
-    * pool thread on peer endpoints that no free thread remains to
-    * serve — a DISTRIBUTED pool-exhaustion stall that also blocked the
-    * ~ms hot point reads until the timeout fired. Running the blocking
-    * bodies here (unbounded cached pool, daemon threads) keeps the
-    * request pool free by construction: a hot read is always
-    * dispatchable no matter how many scatters or reloads are in
-    * flight, on every instance of the fleet. Shared across tiers.
-    * Thread growth (ADVICE r18 #2): scatter bodies hold a thread only
-    * for the 30 s peer-timeout window; the multi-MINUTE class — reload
-    * waiters — holds none at all since round 19 (reload endpoints
-    * COMPOSE on the per-instance rebuild future via handlerQHFuture:
-    * at most one rebuild thread per instance, zero parked waiters,
-    * however large the retry burst). */
+  /** Non-empty query parameter `name`; a [[ClientError]] saying `usage`
+    * when it is absent or empty. */
+  def required(q: Map[String, String], name: String, usage: String): String =
+    q.get(name).filter(_.nonEmpty).getOrElse(clientError(usage))
+
   val NoHeaders: Map[String, String] = Map.empty
 
   /** The generation stamp header for `gen`. */
@@ -1862,6 +1795,13 @@ private[streaming] object HttpJsonServer {
   def quoteSafe(s: String): String =
     s.map(c => if (c == '"' || c == '\\' || c < ' ') ' ' else c)
 
+  /** The ops pool, shared by every instance in the JVM: unbounded, daemon
+    * threads. It runs the bodies that block (an [[HttpJsonServer]]
+    * `endpointAsync` body waiting on peers, a rebuild started by
+    * `reloadAsync`) and writes the replies of futures that finish later.
+    * The fixed request pool therefore only runs local reads, and a hot
+    * read is dispatchable however many scatters or reloads are in flight
+    * on any instance of a fleet. */
   private[streaming] val scatterPool: java.util.concurrent.ExecutorService =
     java.util.concurrent.Executors.newCachedThreadPool(r => {
       val t = new Thread(r, "graft-serving-ops")
@@ -1869,17 +1809,11 @@ private[streaming] object HttpJsonServer {
       t
     })
 
-  /** Run a hot-structure load with a GENERATION-CONSISTENT stamp (ADVICE
-    * r17 #4): the previous pattern fingerprinted the store BEFORE reading
-    * it, so a rewrite landing between the fingerprint and the read
-    * stamped responses with a generation that did not match the loaded
-    * data — silently defeating the mixed-generation rollout detection.
-    * Here: fingerprint, build, fingerprint AGAIN; a mismatch means a
-    * rewrite landed mid-read, so the load retries (the next attempt reads
-    * the settled store). After `attempts` moving reads it gives up with a
-    * LOUD warning and stamps the last pre-read fingerprint — the
-    * conservative choice: the stamp then names a generation no NEWER than
-    * any row served, so a rollout comparison sees "stale", never a false
+  /** Build hot state under a generation-consistent stamp: fingerprint,
+    * build, fingerprint again, and retry the build while the two differ
+    * (a rewrite landed mid-read). After `attempts` moving reads it warns
+    * and stamps the last pre-read fingerprint, a generation no newer than
+    * any row served, so a rollout check reads "stale", never a false
     * "fresh". */
   def generationConsistent[A](fp: () => String, attempts: Int = 3)
       (build: => A): (String, A) = {
@@ -1899,63 +1833,41 @@ private[streaming] object HttpJsonServer {
         "pre-read generation; reload again once the rewrite settles")
     (before, built)
   }
-  /** Generation-stamp header every hot tier sets (VERDICT r16 missing
-    * #3): the corpus [[graft.ops.Artifacts.fingerprint]] the answering
-    * structures were loaded from — the same staleness key the artifact
-    * store's `_MANIFEST` records. A HEADER, not a body field, so the
-    * hot/cold byte-parity goldens stay byte-parity. */
+
+  /** The source fingerprint ([[graft.ops.Artifacts.fingerprint]]) the
+    * answering state was loaded from. A header, not a body field, so hot
+    * and cold bodies stay byte-identical. */
   val GenerationHeader = "X-Graft-Generation"
 
-  /** Set by a scatter-gather coordinator when the merged partials came
-    * from MORE THAN ONE generation — the mid-rollout window between the
-    * first and last instance's reload, previously silent. */
+  /** `true` on a merge whose partials came from more than one generation
+    * (mid-rollout). */
   val MixedHeader = "X-Graft-Mixed-Generation"
 
-  /** The hot search tier's per-response exactness contract (VERDICT r18
-    * missing #2): `"true"` when the capped-head answer provably equals
-    * the cold tier's (every query term's df ≤ MaxTermK), `"false"` when
-    * it is a lower bound — the signal a client keys its escalation to
-    * the cold `/search` audit tier on. A HEADER, not a body field, so
-    * the hot/cold byte-parity goldens stay byte-parity. */
+  /** The hot search tier's exactness: `"true"` when the champion-list
+    * answer provably equals the cold tier's (every query term's df ≤
+    * MaxTermK), `"false"` when it is a lower bound. */
   val ExactHeader = "X-Graft-Exact"
 
-  /** ONE shared peer client for every scatter/fleet path: fetchAll runs
-    * once per request on the hot scatter endpoints, and a per-call
-    * HttpClient would spin up (and leak until GC) a selector thread +
-    * connection pool each time — at the throughput the pooled executor
-    * serves, that churns threads and file descriptors for nothing.
-    * Bounded connect timeout so a dead peer fails fast. */
+  /** One peer client for every scatter and fleet path; the connect
+    * timeout makes a dead peer fail fast. */
   private lazy val peerClient: java.net.http.HttpClient =
     java.net.http.HttpClient.newBuilder()
       .connectTimeout(java.time.Duration.ofSeconds(5)).build()
 
-  /** Per-request ceiling on a READ-path peer fetch: a hung peer must
-    * not wedge a handler thread forever — 8 hung scatters would
-    * otherwise exhaust the fixed request pool and stop even the hot
-    * point reads. The timeout surfaces as the join's
-    * CompletionException → a 500 on the coordinator, the same contract
-    * as a refused connection. */
+  /** Ceiling on a read-path peer fetch: a hung peer costs the request a
+    * 500, never a thread forever. */
   private val PeerTimeout = java.time.Duration.ofSeconds(30)
 
-  /** Ceiling on a peer RELOAD: a reload is a full index rebuild (Spark
-    * jobs — minutes on a real corpus), not a hot read; holding it to
-    * the 30 s read timeout would fail fleet rollouts that are in fact
-    * succeeding. */
+  /** Ceiling on a peer reload, which is a full index rebuild. */
   private val ReloadTimeout = java.time.Duration.ofMinutes(15)
 
-  /** Fire all requests CONCURRENTLY, then join (VERDICT r16 "what's
-    * wrong #2": the sequential peer loop made scatter latency linear in
-    * instance count; the reference queries each host independently —
-    * MusicPlaysRestService.java:77-115). A failed or timed-out peer
-    * surfaces as the CompletionException the join throws — same 500
-    * contract as the old sequential `send`. */
+  /** GET every url concurrently, then join; a failed or timed-out peer
+    * throws the join's `CompletionException` (a 500). */
   def fetchAll(urls: Seq[String]): Seq[java.net.http.HttpResponse[String]] =
     fetchAllSafe(urls, PeerTimeout).map(_.fold(e => throw e, identity))
 
-  /** The fault-ATTRIBUTING form: one Either per url, a failed peer as
-    * Left instead of an exception that hides which host (and every
-    * other host's outcome) — the fleet-reload coordinator reports
-    * per-host results from this. */
+  /** [[fetchAll]] with one result per url, a failed peer as `Left`, so a
+    * fleet reload can name each host's outcome. */
   def fetchAllSafe(urls: Seq[String], timeout: java.time.Duration)
       : Seq[Either[Throwable, java.net.http.HttpResponse[String]]] = {
     val futs = urls.map { u =>
@@ -1975,27 +1887,13 @@ private[streaming] object HttpJsonServer {
   def generationOf(resp: java.net.http.HttpResponse[String]): String =
     resp.headers().firstValue(GenerationHeader).orElse("")
 
-  /** A completed response future — the guard/404 arm of a
-    * `handlerQHFuture` endpoint. */
-  def done(r: (Int, String, Map[String, String]))
-      : java.util.concurrent.CompletableFuture[(Int, String, Map[String, String])] =
-    java.util.concurrent.CompletableFuture.completedFuture(r)
-  /** TCP_NODELAY for every JDK HttpServer in this JVM. Must be set
-    * before the server class's static config init (trait construction
-    * precedes the first HttpServer.create): without it the two-write
-    * response pattern (sendResponseHeaders, then body) hits Nagle +
-    * delayed-ACK — a measured FLAT ~45 ms per localhost request
-    * (SERVBENCH r15 first capture), dwarfing the ~1.4 ms signature
-    * evaluation the dedup tier actually does.
-    *
-    * ServerConfig reads the property ONCE at class-init (ADVICE r15
-    * #5: any HttpServer created elsewhere in the JVM before this point
-    * would make the set a silent no-op and the 45 ms floor return
-    * unmeasured) — so after setting it we (a) force ServerConfig's
-    * static init NOW, with our value in place, and (b) read the
-    * effective flag back reflectively (build.sbt opens
-    * jdk.httpserver/sun.net.httpserver) and warn LOUDLY if some
-    * earlier init already latched nodelay=false. */
+  /** TCP_NODELAY for every JDK HttpServer in this JVM: without it the
+    * server's two writes per response (headers, then body) meet Nagle and
+    * delayed ACK, a flat ~45 ms per localhost request. The JDK reads the
+    * property once, at `sun.net.httpserver.ServerConfig`'s class init, so
+    * this sets it, forces that init, and warns when an earlier init
+    * already latched `false` (the read-back needs build.sbt's add-opens;
+    * without it the check is skipped). */
   val ensureNoDelay: Unit = {
     System.setProperty("sun.net.httpserver.nodelay", "true")
     try {
@@ -2007,59 +1905,63 @@ private[streaming] object HttpJsonServer {
           "was latched FALSE before the serving tiers initialized — every " +
           "localhost request will pay the ~45 ms Nagle/delayed-ACK floor. " +
           "Set -Dsun.net.httpserver.nodelay=true at JVM start.")
-    } catch { case _: Throwable => () } // check is best-effort (needs add-opens)
+    } catch { case _: Throwable => () }
   }
 }
 
+/** A JSON-over-HTTP server on the JDK's `com.sun.net.httpserver`, with
+  * one request path for every endpoint.
+  *
+  * Contract:
+  *  - Pools: [[serve]] runs requests on a fixed 8-thread request pool.
+  *    [[endpoint]] and [[endpointUnder]] bodies run on it; an
+  *    [[endpointAsync]] body, which blocks on peers, runs on
+  *    [[HttpJsonServer.scatterPool]]; an [[endpointFuture]] body runs on
+  *    the request thread and returns a future.
+  *  - Writes: a finished reply is written on the thread that produced it,
+  *    so a hot read never changes threads; only a future that is still
+  *    running when its body returns has its reply written from the ops
+  *    pool.
+  *  - Paths: a registered path is served exactly (a longer path is a
+  *    404); [[endpointUnder]] serves every path below its prefix.
+  *  - Errors: a [[ClientError]] answers 400 and any other `Exception` 500,
+  *    each with its message as `{"error":…}`; an `Error` is logged and
+  *    answers 500 `{"error":"internal error"}`. Error replies carry no
+  *    headers, so no `X-Graft-Generation`; a body stamps only the replies
+  *    it returns.
+  *  - A 307's body is the redirect target, sent as `Location`. */
 private[streaming] trait HttpJsonServer {
+  import HttpJsonServer.{NoHeaders, Reply, scatterPool}
+  import java.util.concurrent.{CompletableFuture, CompletionException}
   HttpJsonServer.ensureNoDelay
-  protected var server: HttpServer = _
+  private var server: HttpServer = _
   private var pool: java.util.concurrent.ExecutorService = _
 
-  /** Serialize index rebuilds per instance, coalesce retry storms, AND
-    * park no thread per waiter (ADVICE r18 #2): reload bodies run on
-    * the UNBOUNDED ops executor (so they can never starve the request
-    * pool), which means N concurrent reload requests would otherwise
-    * run N full Spark rebuilds at once on one driver (review r18 #4) —
-    * and, with a monitor queue, park N ops threads for the full
-    * multi-minute rebuild (the ADVICE r18 thread-growth hole:
-    * coalescing collapsed the REBUILDS but not the waiters). Here the
-    * in-flight rebuild is ONE CompletableFuture: at most one ops thread
-    * runs a rebuild per instance, every concurrent caller COMPOSES on
-    * that future instead of blocking on a lock — zero parked threads
-    * however large the burst (the HTTP reload endpoints ride it through
-    * [[handlerQHFuture]] and hold no thread at all; only a direct
-    * in-process [[reloadSerial]] caller joins).
-    *
-    * Semantics preserved from the monitor form: a rider whose ridden
-    * rebuild SUCCEEDED re-checks `alreadyFresh` when it lands and skips
-    * its own identical rebuild (the zero-dropped-requests contract — a
-    * 503 would fail mid-rollout retries); a stale store — or a ridden
-    * rebuild that FAILED — always rebuilds; an un-queued caller always
-    * rebuilds (forced reloads on an unchanged corpus still work). */
+  /** One rebuild at a time per instance, and no thread parked per waiter.
+    * The rebuild runs on the ops pool as one `CompletableFuture`; a call
+    * while it runs composes on it and, when it lands, finishes at once if
+    * it succeeded and `alreadyFresh` holds, or runs its own rebuild
+    * otherwise. A call with no rebuild in flight always rebuilds, so a
+    * forced reload of an unchanged source still works. HTTP reloads
+    * answer from the future ([[endpointFuture]]) and hold no thread. */
   private val reloadLock = new Object
-  private var reloadInFlight: java.util.concurrent.CompletableFuture[Void] = _
+  private var reloadInFlight: CompletableFuture[Void] = _
 
   protected def reloadAsync(alreadyFresh: => Boolean)(f: => Unit)
-      : java.util.concurrent.CompletableFuture[Void] =
+      : CompletableFuture[Void] =
     reloadLock.synchronized {
       val inFlight = reloadInFlight
       if (inFlight != null)
-        // COLLAPSE onto the running rebuild: when it lands, re-check
-        // freshness and either finish (fresh, predecessor succeeded) or
-        // run our own turn — no thread parks anywhere in this chain
         inFlight.handle[java.lang.Boolean]((_, err) => err == null)
           .thenCompose[Void](ok =>
-            if (ok.booleanValue && alreadyFresh)
-              java.util.concurrent.CompletableFuture.completedFuture(null)
+            if (ok.booleanValue && alreadyFresh) CompletableFuture.completedFuture(null)
             else reloadAsync(alreadyFresh)(f))
       else {
-        val fut = new java.util.concurrent.CompletableFuture[Void]()
+        val fut = new CompletableFuture[Void]()
         reloadInFlight = fut
-        HttpJsonServer.scatterPool.execute { () =>
-          // clear BEFORE completing: a continuation that re-enters
-          // reloadAsync must see the slot free, and the next burst's
-          // first caller must start a fresh rebuild
+        scatterPool.execute { () =>
+          // clear before completing: a continuation that re-enters
+          // reloadAsync must find the slot free
           try { f; clearInFlight(fut); fut.complete(null) }
           catch { case t: Throwable =>
             clearInFlight(fut); fut.completeExceptionally(t) }
@@ -2068,245 +1970,124 @@ private[streaming] trait HttpJsonServer {
       }
     }
 
-  private def clearInFlight(
-      fut: java.util.concurrent.CompletableFuture[Void]): Unit =
+  private def clearInFlight(fut: CompletableFuture[Void]): Unit =
     reloadLock.synchronized {
       if (reloadInFlight eq fut) reloadInFlight = null
     }
 
-  /** Blocking form for direct in-process callers (tests, batch jobs):
-    * joins the future, rethrowing the ORIGINAL failure — the
-    * CompletionException wrapper would misfile a ClientError as the
-    * 500 arm. */
+  /** Blocking form for in-process callers: joins, rethrowing the original
+    * failure rather than its `CompletionException`. */
   protected def reloadSerial(alreadyFresh: => Boolean)(f: => Unit): Unit =
     try reloadAsync(alreadyFresh)(f).join()
     catch {
-      case e: java.util.concurrent.CompletionException if e.getCause != null =>
-        throw e.getCause
+      case e: CompletionException if e.getCause != null => throw e.getCause
     }
 
-  /** Bind, register the endpoints, and start on a FIXED REQUEST POOL
-    * instead of the JDK's serial default dispatcher. Safe by construction:
-    * every tier reads its per-generation state through ONE volatile
-    * holder per request (the ADVICE r16 discipline), so concurrent
-    * handlers can never observe torn cross-field state — and a slow
-    * request (a cold-tier Spark read, a cross-instance scatter) no
-    * longer serializes the ~2 ms hot point reads queued behind it,
-    * which is what a real serving replica needs under concurrent load
-    * (measured: ServingBench `hot_rps_c1` vs `hot_rps_c8`). Reload
-    * concurrency is the same story — a reload builds aside and swaps
-    * one reference; in-flight requests read the old generation or the
-    * new one, never a mix (ServingSpec's concurrent golden pins
-    * body↔stamp consistency under a mid-flight reload). */
-  protected def serve(bindPort: Int)(register: => Unit): Int = {
+  /** Bind 127.0.0.1:`bindPort` (0 for an ephemeral port), register
+    * `endpoints`, and start on the request pool; returns the port.
+    * Handlers run concurrently, so each reads its generation's state
+    * through one volatile holder per request. */
+  protected def serve(bindPort: Int)(endpoints: => Unit): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", bindPort), 0)
-    register
-    startPooled()
-    port
-  }
-
-  protected def startPooled(): Unit = {
+    endpoints
     pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     server.setExecutor(pool)
     server.start()
+    port
   }
 
   /** Bound port after `start` (pass port 0 for an ephemeral one). */
   def port: Int = server.getAddress.getPort
-
-  private val NotFound = (404, """{"error":"not found"}""", HttpJsonServer.NoHeaders)
-
-  /** Serve exactly `path`: JDK contexts match string prefixes, so a longer
-    * path is a 404 here, never a silent match. */
-  protected def endpoint(path: String)(
-      f: Map[String, String] => (Int, String, Map[String, String])): Unit =
-    server.createContext(path, handlerQH((p, q) => if (p == path) f(q) else NotFound))
-
-  /** [[endpoint]] whose body runs on the ops pool ([[handlerQHAsync]]):
-    * for bodies that block on peers. */
-  protected def endpointAsync(path: String)(
-      f: Map[String, String] => (Int, String, Map[String, String])): Unit =
-    server.createContext(path, handlerQHAsync((p, q) => if (p == path) f(q) else NotFound))
-
-  /** [[endpoint]] answered by a future ([[handlerQHFuture]]). */
-  protected def endpointFuture(path: String)(f: Map[String, String] =>
-      java.util.concurrent.CompletableFuture[(Int, String, Map[String, String])]): Unit =
-    server.createContext(path, handlerQHFuture((p, q) =>
-      if (p == path) f(q) else HttpJsonServer.done(NotFound)))
-
-  /** Serve every path under `prefix`; `f` gets the rest of the path. */
-  protected def endpointUnder(prefix: String)(
-      f: (String, Map[String, String]) => (Int, String, Map[String, String])): Unit =
-    server.createContext(prefix, handlerQH((p, q) => f(p.stripPrefix(prefix), q)))
 
   def stop(): Unit = {
     if (server != null) server.stop(0)
     if (pool != null) pool.shutdown()
   }
 
-  protected def handler(f: String => (Int, String)): com.sun.net.httpserver.HttpHandler =
-    handlerQ { (path, _) => f(path) }
+  /** Serve exactly `path`, on the request pool. */
+  protected def endpoint(path: String)(f: Map[String, String] => Reply): Unit =
+    register(path, exact = true, onOps = false)((_, q) => CompletableFuture.completedFuture(f(q)))
 
-  /** [[handlerQ]] with response HEADERS — the generation-stamp variant:
-    * a handler that read a generational holder returns THAT holder's
-    * fingerprint (not whatever the field holds at write time, which a
-    * concurrent reload could have swapped). */
-  protected def handlerQH(
-      f: (String, Map[String, String]) => (Int, String, Map[String, String]))
-      : com.sun.net.httpserver.HttpHandler =
-    (exchange: HttpExchange) => runQH(f, exchange)
+  /** [[endpoint]] whose body runs on the ops pool: for bodies that block. */
+  protected def endpointAsync(path: String)(f: Map[String, String] => Reply): Unit =
+    register(path, exact = true, onOps = true)((_, q) => CompletableFuture.completedFuture(f(q)))
 
-  /** [[handlerQH]] dispatched to the shared [[HttpJsonServer.scatterPool]]
-    * (ADVICE r17 #1): for endpoints whose body BLOCKS — on peer HTTP
-    * (scatter-gather, fleet reload, federated probes) or on Spark index
-    * rebuilds (reloads). The request-pool thread hands the exchange off
-    * and returns immediately, so the fixed pool only ever runs fast
-    * local reads; the response is written from the ops thread (the JDK
-    * server supports responding after handle() returns — the exchange
-    * stays open until closed). Local-serving capacity is therefore
-    * independent of in-flight blocking work on EVERY instance, which
-    * breaks the fleet-wide stall cycle (instance A's pool waiting on
-    * instance B's pool waiting on A's). */
-  protected def handlerQHAsync(
-      f: (String, Map[String, String]) => (Int, String, Map[String, String]))
-      : com.sun.net.httpserver.HttpHandler =
-    (exchange: HttpExchange) =>
-      HttpJsonServer.scatterPool.execute(() =>
-        try runQH(f, exchange)
-        catch { case t: Throwable =>
-          // runQH catches Exception itself; what reaches here is a write
-          // failure or an Error (OOM, stack overflow). The synchronous
-          // path surfaced these through the JDK server's logging — the
-          // async wrapper must not swallow them silently (review r18 #6)
-          System.err.println(s"[graft] async handler failure: $t")
-          try respond(exchange, 500, """{"error":"internal error"}""")
-          catch { case _: Throwable => () }
-          finally exchange.close()
-        })
+  /** [[endpoint]] answered by a future. */
+  protected def endpointFuture(path: String)(
+      f: Map[String, String] => CompletableFuture[Reply]): Unit =
+    register(path, exact = true, onOps = false)((_, q) => f(q))
+
+  /** Serve every path under `prefix`; `f` gets the rest of the path. */
+  protected def endpointUnder(prefix: String)(
+      f: (String, Map[String, String]) => Reply): Unit =
+    register(prefix, exact = false, onOps = false)((rest, q) =>
+      CompletableFuture.completedFuture(f(rest, q)))
+
+  private val NotFound: Reply = (404, """{"error":"not found"}""", NoHeaders)
+
+  private val onThisThread: java.util.concurrent.Executor = _.run()
+
+  /** The one registration: path guard, query parsing and dispatch. A
+    * throw from the body is answered as is; a failed future is answered
+    * by its cause. */
+  private def register(path: String, exact: Boolean, onOps: Boolean)(
+      f: (String, Map[String, String]) => CompletableFuture[Reply]): Unit =
+    server.createContext(path, (exchange: HttpExchange) => {
+      val run: Runnable = () =>
+        try {
+          val p = exchange.getRequestURI.getPath
+          val q = parsedQuery(exchange)
+          val fut =
+            if (exact && p != path) CompletableFuture.completedFuture(NotFound)
+            else f(p.stripPrefix(path), q)
+          fut.whenCompleteAsync((r: Reply, err: Throwable) => reply(exchange, r, err match {
+            case e: CompletionException if e.getCause != null => e.getCause
+            case e => e
+          }), if (fut.isDone) onThisThread else scatterPool)
+        } catch { case t: Throwable => reply(exchange, null, t) }
+      if (onOps) scatterPool.execute(run) else run.run()
+    })
 
   private def parsedQuery(exchange: HttpExchange): Map[String, String] =
     Option(exchange.getRequestURI.getRawQuery).getOrElse("")
       .split("&").filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        // a malformed %-escape is the CALLER's fault: decode's bare
-        // IllegalArgumentException must map to 400, not ride the
-        // server-fault arm to a 500 (review r18 #2)
+        // a malformed %-escape is the caller's fault
         k -> (try java.net.URLDecoder.decode(v, "UTF-8")
           catch { case e: IllegalArgumentException =>
             throw new ClientError("malformed percent-encoding in " +
               s"query parameter $k", e) })
       }.toMap
 
-  // ONLY the dedicated client-error type maps to 400 (ADVICE r17 #2):
-  // param validation raises ClientError explicitly; a bare
-  // IllegalArgumentException can come from server-side code (a reload
-  // hitting buildIndex's dim%PqM require after a corpus rewrite,
-  // Spark-internal requires mid-query) and must report as the 500 it
-  // is, not as the caller's mistake
-  private def errorResponse(e: Exception): (Int, String, Map[String, String]) = {
-    val status = e match { case _: ClientError => 400; case _ => 500 }
-    (status, s"""{"error":"${
-      HttpJsonServer.quoteSafe(String.valueOf(e.getMessage).take(100))}"}""",
-      HttpJsonServer.NoHeaders)
-  }
-
-  private def runQH(
-      f: (String, Map[String, String]) => (Int, String, Map[String, String]),
-      exchange: HttpExchange): Unit = {
-      val (status, body, hdrs) =
-        try f(exchange.getRequestURI.getPath, parsedQuery(exchange))
-        catch { case e: Exception => errorResponse(e) }
-      hdrs.foreach { case (k, v) => exchange.getResponseHeaders.set(k, v) }
-      respond(exchange, status, body)
-  }
-
-  /** FUTURE-composing handler (ADVICE r18 #2): for endpoints whose
-    * answer is a continuation of async work (a reload riding the
-    * per-instance rebuild future) — the request-pool thread registers
-    * the completion callback and returns, so the request HOLDS NO
-    * THREAD while the work runs: a burst of N reload requests parks
-    * zero waiters (the rebuild itself is the one ops thread). The
-    * response — or the same 400/500 error mapping every synchronous
-    * handler gets — is written by whichever thread completes the
-    * future. */
-  protected def handlerQHFuture(
-      f: (String, Map[String, String]) => java.util.concurrent.CompletableFuture[
-        (Int, String, Map[String, String])])
-      : com.sun.net.httpserver.HttpHandler =
-    (exchange: HttpExchange) => {
-      val fut =
-        try f(exchange.getRequestURI.getPath, parsedQuery(exchange))
-        catch { case e: Exception =>
-          java.util.concurrent.CompletableFuture
-            .failedFuture[(Int, String, Map[String, String])](e) }
-      // ASYNC completion (review r19 #4): riders of one rebuild future
-      // complete on the rebuilder's thread — writing their responses
-      // there serially would let ONE stalled client block every other
-      // waiter's 200; each response write gets its own (short-lived)
-      // ops-pool task instead, the same isolation the synchronous
-      // handlers get from the request pool.
-      fut.whenCompleteAsync({ (res, err) =>
-        try {
-          val (status, body, hdrs) =
-            if (err == null) res
-            else {
-              val cause = err match {
-                case e: java.util.concurrent.CompletionException
-                  if e.getCause != null => e.getCause
-                case e => e
-              }
-              cause match {
-                case e: Exception => errorResponse(e)
-                case t => // an Error (OOM, stack overflow): log loudly,
-                  // answer the generic 500 (the async-dispatch rule)
-                  System.err.println(s"[graft] future handler failure: $t")
-                  (500, """{"error":"internal error"}""",
-                    Map.empty[String, String])
-              }
-            }
-          hdrs.foreach { case (k, v) => exchange.getResponseHeaders.set(k, v) }
-          respond(exchange, status, body)
-        } catch { case t: Throwable =>
-          System.err.println(s"[graft] future response write failure: $t")
-          try exchange.close() catch { case _: Throwable => () }
-        }
-      }, HttpJsonServer.scatterPool)
-      ()
-    }
-
-  /** Parse a positive int param (optionally bounded); Left(400) on junk
-    * — shared so every tier pair (hot/cold) enforces the SAME contract
-    * (ADVICE r15 #1: take(k) vs limit(k) silently diverged on k ≤ 0). */
-  protected def intParam(q: Map[String, String], name: String, default: Int,
-      max: Int = Int.MaxValue): Either[(Int, String), Int] =
-    q.get(name) match {
-      case None => Right(default)
-      case Some(v) => v.toIntOption.filter(_ > 0) match {
-        case None =>
-          Left((400, s"""{"error":"$name must be a positive integer"}"""))
-        case Some(i) if i > max =>
-          Left((400, s"""{"error":"$name must be at most $max"}"""))
-        case Some(i) => Right(i)
+  /** The one response writer: `r`, or the reply `err` maps to (see the
+    * trait's error rule). A failed write is logged and the exchange
+    * closed. */
+  private def reply(exchange: HttpExchange, r: Reply, err: Throwable): Unit =
+    try {
+      val (status, body, headers) = if (err == null) r else failure(err)
+      headers.foreach { case (k, v) => exchange.getResponseHeaders.set(k, v) }
+      if (status == 307) {
+        exchange.getResponseHeaders.set("Location", body)
+        exchange.sendResponseHeaders(307, -1)
+        exchange.close()
+      } else {
+        val bytes = body.getBytes(StandardCharsets.UTF_8)
+        exchange.getResponseHeaders.set("Content-Type", "application/json")
+        exchange.sendResponseHeaders(status, bytes.length)
+        val os = exchange.getResponseBody
+        os.write(bytes); os.close()
       }
+    } catch { case t: Throwable =>
+      System.err.println(s"[graft] response write failure: $t")
+      try exchange.close() catch { case _: Throwable => () }
     }
 
-  protected def handlerQ(
-      f: (String, Map[String, String]) => (Int, String)): com.sun.net.httpserver.HttpHandler =
-    handlerQH { (path, q) => val (s, b) = f(path, q); (s, b, Map.empty) }
-
-  /** Write one JSON response. A 307's "body" is the redirect TARGET —
-    * every federated tier (KV, term, dedup) routes with it — so the
-    * trait translates it into a real Location header here. */
-  protected def respond(exchange: HttpExchange, status: Int, body: String): Unit =
-    if (status == 307) {
-      exchange.getResponseHeaders.set("Location", body)
-      exchange.sendResponseHeaders(307, -1)
-      exchange.close()
-    } else {
-      val bytes = body.getBytes(StandardCharsets.UTF_8)
-      exchange.getResponseHeaders.set("Content-Type", "application/json")
-      exchange.sendResponseHeaders(status, bytes.length)
-      val os = exchange.getResponseBody
-      os.write(bytes); os.close()
-    }
+  private def failure(t: Throwable): Reply = t match {
+    case e: Exception =>
+      (if (e.isInstanceOf[ClientError]) 400 else 500, s"""{"error":"${
+        HttpJsonServer.quoteSafe(String.valueOf(e.getMessage).take(100))}"}""", NoHeaders)
+    case _ =>
+      System.err.println(s"[graft] request failure: $t")
+      (500, """{"error":"internal error"}""", NoHeaders)
+  }
 }

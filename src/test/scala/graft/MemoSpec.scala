@@ -72,4 +72,22 @@ class MemoSpec extends SparkSpec {
     Memo.invalidate(evens)
     assert((ids & persisted).isEmpty, s"orphaned checkpoints still pinned: ${ids & persisted}")
   }
+
+  test("IVF builds release their own checkpoints: clusteredness and ivfPqIndexOf " +
+      "pin nothing once their memos are invalidated") {
+    val artifacts = spark.conf.get("spark.graft.artifacts.enabled", "false")
+    spark.conf.set("spark.graft.artifacts.enabled", "false") // build, never read
+    try {
+      Memo(spark, sf001, new Memo.Tag[Int])(0) // sf001 is the current frame
+      Similarity.invalidateIvfPqIndex()
+      Similarity.invalidatePqIndex()
+      val before = persisted
+      Similarity.clusteredness(spark, sf001)
+      Similarity.ivfPqIndexOf(spark, sf001)
+      Similarity.invalidateIvfPqIndex()
+      Similarity.invalidatePqIndex()
+      val pinned = persisted -- before
+      assert(pinned.isEmpty, s"IVF build checkpoints still pinned: $pinned")
+    } finally spark.conf.set("spark.graft.artifacts.enabled", artifacts)
+  }
 }

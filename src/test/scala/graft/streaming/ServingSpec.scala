@@ -333,6 +333,37 @@ class ServingSpec extends SparkSpec {
     } finally { a.stop(); b.stop() }
   }
 
+  test("fleet cold top-k: peer rows whose string values hold '},{' merge intact — " +
+      "a two-instance /state/topk equals the one-host answer") {
+    import spark.implicits._
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    val n = 8
+    val hosts = Seq("instance-a", "instance-b")
+    val path = Files.createTempDirectory("graft-topk-braces").toString
+    Serving.writePartitionedStore(
+      (1L to 60L).map(k => (k, k * 10, s"a},{b$k")).toDF("k", "v", "s"), "k", n, path)
+    val one = new RestServing(spark, path, "k", n, hosts)
+    val a = new RestServing(spark, path, "k", n, hosts, "instance-a")
+    val b = new RestServing(spark.newSession(), path, "k", n, hosts, "instance-b")
+    val ports = Seq(one.start(), a.start(), b.start())
+    val urls = Map("instance-a" -> s"http://127.0.0.1:${ports(1)}",
+      "instance-b" -> s"http://127.0.0.1:${ports(2)}")
+    a.peerUrls = urls; b.peerUrls = urls
+    try {
+      val client = HttpClient.newHttpClient()
+      def get(port: Int, u: String): (Int, String) = {
+        val r = client.send(HttpRequest.newBuilder(java.net.URI.create(
+          s"http://127.0.0.1:$port$u")).GET().build(), HttpResponse.BodyHandlers.ofString())
+        (r.statusCode(), r.body())
+      }
+      val whole = get(ports(0), "/state/topk?value=v&k=5")
+      assert(whole === ((200, (60 to 56 by -1).map(k =>
+        s"""{"k":$k,"v":${k * 10},"s":"a},{b$k"}""").mkString("[", ",", "]"))))
+      for (port <- ports.tail)
+        assert(get(port, "/state/topk?value=v&k=5") === whole, s"coordinator on $port")
+    } finally { one.stop(); a.stop(); b.stop() }
+  }
+
   test("federated hot top-k over FLOAT and DECIMAL sort columns: peer-parsed " +
       "partials rank and render byte-identically to the cold scatter (review " +
       "r19 — float canon widening, decimal scale/precision, raw row slices)") {
@@ -1014,6 +1045,42 @@ class ServingSpec extends SparkSpec {
       assert(get("/state/all") === (200,
         """[{"word":"hello","cnt":3},{"word":"world","cnt":1}]"""))
     } finally { rest.stop(); quiesceAndStop(q) }
+  }
+
+  test("LIVE path guard: /state/topk and /state/all answer only their exact " +
+      "path; the prefix endpoints answer as before") {
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    val table = Seq(("hi", 2L, 1, ts), ("yo", 1L, 1, ts)).toDF("word", "cnt", "pos", "ts")
+      .withColumn("window", struct(col("ts").as("start"), col("ts").as("end"))).drop("ts")
+    table.createOrReplaceTempView("live_guard")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.toJSON.collect().mkString("[", ",", "]")
+    val hi = rows(table.where(col("word") === "hi"))
+    val rest = new LiveRestServing(spark, "live_guard", "word")
+    val port = rest.start()
+    try {
+      val client = java.net.http.HttpClient.newHttpClient()
+      def get(p: String): (Int, String) = {
+        val resp = client.send(
+          java.net.http.HttpRequest.newBuilder(
+            java.net.URI.create(s"http://127.0.0.1:$port$p")).GET().build(),
+          java.net.http.HttpResponse.BodyHandlers.ofString())
+        (resp.statusCode(), resp.body())
+      }
+      val notFound = (404, """{"error":"not found"}""")
+      for (u <- Seq("/state/topkx", "/state/topk/x", "/state/allx", "/state/all/x"))
+        assert(get(u) === notFound, u)
+      assert(get("/state/topk?value=cnt&k=1") === ((200, hi)))
+      assert(get("/state/all") === ((200, rows(table.orderBy(col("word"))))))
+      assert(get("/state/keyvalue/hi") === ((200, hi)))
+      assert(get("/state/keyvalue/nope") === ((404, """{"error":"key not found"}""")))
+      assert(get("/state/chart/hi?k=3") === ((200, hi)))
+      assert(get("/state/chart/nope") === ((404, """{"error":"group not found"}""")))
+      assert(get(s"/state/windowed/hi?from=${ts.getTime}&to=${ts.getTime}") ===
+        ((200, s"""[{"word":"hi","cnt":2,"pos":1,"window_start":${ts.getTime}}]""")))
+      assert(get("/state/windowed/hi?from=junk")._1 === 400)
+      assert(get("/state/chart/hi?k=0")._1 === 400)
+    } finally rest.stop()
   }
 
   test("LIVE windowed fetch over HTTP: key + window-start range (windowedByKey)") {
@@ -1773,18 +1840,13 @@ class ServingSpec extends SparkSpec {
     val latch = new java.util.concurrent.CountDownLatch(1)
     val parked = new java.util.concurrent.atomic.AtomicInteger(0)
     class BlockingServer extends HttpJsonServer {
-      def start(): Int = {
-        server = com.sun.net.httpserver.HttpServer.create(
-          new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-        server.createContext("/slow", handlerQHAsync { (_, _) =>
+      def start(): Int = serve(0) {
+        endpointAsync("/slow") { _ =>
           parked.incrementAndGet()
           latch.await()
           (200, """{"done":true}""", Map.empty)
-        })
-        server.createContext("/fast", handlerQH { (_, _) =>
-          (200, """{"hot":true}""", Map.empty) })
-        startPooled()
-        port
+        }
+        endpoint("/fast") { _ => (200, """{"hot":true}""", Map.empty) }
       }
     }
     val srv = new BlockingServer
@@ -1927,33 +1989,52 @@ class ServingSpec extends SparkSpec {
       "code (a reload require, a Spark-internal require) answers 500") {
     // a minimal tier with one endpoint per fault class
     class FaultServer extends HttpJsonServer {
-      def start(): Int = {
-        server = com.sun.net.httpserver.HttpServer.create(
-          new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+      def start(): Int = serve(0) {
         // server-side fault: the shape of buildIndex's dim%PqM require
         // reached through /ann/reload — an operator error, NOT the caller's
-        server.createContext("/boom", handlerQ { (_, _) =>
-          throw new IllegalArgumentException("requirement failed: dim % PqM") })
+        endpoint("/boom") { _ =>
+          throw new IllegalArgumentException("requirement failed: dim % PqM") }
         // client fault: what param validation raises
-        server.createContext("/bad", handlerQ { (_, _) =>
-          HttpJsonServer.clientError("k must be a positive integer") })
-        startPooled()
-        port
+        endpoint("/bad") { _ => HttpJsonServer.clientError("k must be a positive integer") }
+        // an Error (the shape of an OOM or a stack overflow) in a sync body
+        endpoint("/error") { _ => throw new AssertionError("invariant broken") }
       }
     }
     val srv = new FaultServer
     val port = srv.start()
+    val client = java.net.http.HttpClient.newHttpClient()
+    // bounded: an unanswered exchange must fail the test, not hang it
+    def send(url: String) = client.send(
+      java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
+        .timeout(java.time.Duration.ofSeconds(30)).GET().build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString())
     try {
-      val client = java.net.http.HttpClient.newHttpClient()
-      def get(p: String): Int = client.send(
-        java.net.http.HttpRequest.newBuilder(
-          java.net.URI.create(s"http://127.0.0.1:$port$p")).GET().build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString()).statusCode()
+      def get(p: String): Int = send(s"http://127.0.0.1:$port$p").statusCode()
       assert(get("/boom") === 500,
         "a server-side IllegalArgumentException must report as a server fault")
       assert(get("/bad") === 400,
         "a ClientError must report as the caller's mistake")
+      assert(get("/error") === 500, "an Error in a sync body must answer 500")
     } finally srv.stop()
+    // one /ann/topk request shape: a junk k and a junk vec both answer the
+    // caller's 400 with their own message, and neither reply is stamped
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft-clienterr").toString + "/emb.parquet"
+    (0 until 40).map(id => (id.toLong, Seq.tabulate(8)(i => (math.sin(id * 1.3 + i) + 2).toFloat)))
+      .toDF("vec_id", "embedding").write.parquet(path)
+    val ann = new VectorRestServing(spark, path)
+    val annPort = ann.start(0, stride = 6, lloydIters = 1)
+    try {
+      val q = Seq.fill(8)(1.0).mkString(",")
+      for ((u, body) <- Seq(
+          s"/ann/topk?vec=$q&k=abc" -> """{"error":"k must be a positive integer"}""",
+          "/ann/topk?vec=a,b,c&k=5" -> """{"error":"vec components must be numbers"}""")) {
+        val r = send(s"http://127.0.0.1:$annPort$u")
+        assert((r.statusCode(), r.body()) === ((400, body)), u)
+        assert(HttpJsonServer.generationOf(r) === "", s"$u: an error reply is never stamped")
+      }
+      assert(send(s"http://127.0.0.1:$annPort/ann/topk?vec=$q&k=3").statusCode() === 200)
+    } finally ann.stop()
   }
 
   test("/ann/plan stride parity (ADVICE r17 #3): the regime signal is measured " +
