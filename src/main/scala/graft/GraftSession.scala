@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
+
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
 /** The library's session entrypoint: one place for the configuration a
@@ -16,7 +21,19 @@ import org.apache.spark.sql.SparkSession
   *   expressions too;
   * - AQE stays at Spark's default (ON) — skew-join splitting and
   *   partition coalescing are part of the 100 TB story.
-  */
+  *
+  * Two settings keep a streaming commit free of subprocesses. Without
+  * libhadoop, Hadoop's stock local filesystem runs `chmod` for every
+  * permission it sets, and the `FileContext` rename runs `readlink`. A
+  * stateful micro-batch writes a dozen checkpoint files (state deltas
+  * with their `.crc` sidecars and checksum files, `offsets/`,
+  * `commits/`), so that is about 90 process starts per batch.
+  * - `spark.hadoop.fs.file.impl` is [[NioLocalFileSystem]]: the same
+  *   checksummed local filesystem, with permission bits set in-process;
+  * - `spark.sql.streaming.checkpointFileManagerClass` is Spark's
+  *   `FileSystemBasedCheckpointFileManager`, whose rename goes through
+  *   that filesystem instead of `RawLocalFs`.
+  * Hadoop's CRCs and Spark's state checksum files stay on. */
 object GraftSession {
 
   def create(master: String, shufflePartitions: Int,
@@ -27,6 +44,9 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     functions.GraftExtensions.register(s)
@@ -37,19 +57,33 @@ object GraftSession {
     * partitions = cpus (BASELINE.md's judged configuration). */
   def local(cpus: Int): SparkSession = create(s"local[$cpus]", cpus)
 
-  /** Session tuned for small-trigger STATEFUL STREAMING: state
-    * partitions default to 8, not core count. A streaming query fixes
-    * its state partitioning at the first checkpoint, and the
-    * per-micro-batch store commit is linear in that count while
-    * per-row operator work is nowhere near saturating the cores at
-    * typical trigger sizes — the round-9 sweep (BASELINE.md,
-    * `STREAMSWEEP_r09.json`) measured 1.6-2.6× at 500k rows/batch for
-    * 4-8 partitions vs the batch default of one-per-core. Size this to
-    * state volume + skew headroom; raise it only when triggers are
-    * large enough that per-row compute, not the commit, is the bound
-    * (at 2M rows/batch the knob is mostly flat). Batch jobs should
-    * keep [[local]]: partitions = cores is the right rule for
-    * shuffle-heavy batch plans. */
+  /** Session for small-trigger stateful streaming: `local[cpus]` with
+    * `statePartitions` shuffle partitions (default 8), which is also the
+    * state partition count of every stateful query it starts. A query
+    * fixes that count at its first checkpoint, so a restart keeps it
+    * whatever the session says. Each micro-batch commits one state store
+    * per partition, so the per-batch commit grows with the count while
+    * per-row work is spread over it; size it to state volume and skew,
+    * not to cores. Batch jobs use [[local]] (partitions = cores). */
   def localStreaming(cpus: Int, statePartitions: Int = 8): SparkSession =
     create(s"local[$cpus]", statePartitions, appName = "graft-streaming")
+}
+
+/** Hadoop's local filesystem (checksummed: `.crc` sidecars, and a
+  * `LocalFileSystem`, so `FileSystem.getLocal` still casts) over
+  * [[NioRawLocalFileSystem]]. Registered as `fs.file.impl` by
+  * [[GraftSession.create]]. */
+class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
+
+/** `RawLocalFileSystem` that sets permission bits with
+  * `Files.setPosixFilePermissions` instead of a `chmod` process. The
+  * sticky bit has no NIO form, so such a permission (and a filesystem
+  * without POSIX attributes) goes to Hadoop's own path. */
+class NioRawLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit =
+    if (permission.getStickyBit) super.setPermission(p, permission)
+    else try Files.setPosixFilePermissions(pathToFile(p).toPath,
+      PosixFilePermissions.fromString(permission.getUserAction.SYMBOL +
+        permission.getGroupAction.SYMBOL + permission.getOtherAction.SYMBOL))
+    catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
 
+import scala.jdk.CollectionConverters._
+
 /** Source/sink wiring (SURVEY.md §2.1, S1–S10).
   *
   * The Kafka connector jar isn't present in this environment, so the
@@ -131,50 +133,81 @@ object Sources {
       mode: String = "complete"): DataStreamWriter[Row] =
     df.writeStream.format("memory").queryName(name).outputMode(mode)
 
-  /** §2.10 LIVE state-store materialization of an UPDATE-mode changelog:
-    * each micro-batch REPLACES the served rows of every key it touches
-    * (anti-join out the stale rows, union in the batch) and republishes
-    * the store as temp view `name` — the KTable/state-store upsert the
-    * memory sink cannot do (its update mode APPENDS, so stale chart rows
-    * would accumulate). This is how KafkaMusic's `MusicPlaysRestService`
-    * reads a LIVE chart: the store always holds exactly the latest rows
-    * per key, bounded by state size (top-k × groups), never by stream
-    * length. The new store is localCheckpointed each batch so lineage
-    * stays one batch deep and HTTP reads scan a materialized
-    * aggregate-sized table. Multi-row keys are the point: a key's rows
-    * (e.g. a group's whole chart) are swapped atomically as a unit.
+  /** §2.10 LIVE state-store materialization of an UPDATE-mode changelog,
+    * served as the global temp view `name` (read it from any session as
+    * `global_temp.<name>`). This is the KTable/state-store upsert the
+    * memory sink cannot do (its update mode appends, so stale rows would
+    * accumulate), and how KafkaMusic's `MusicPlaysRestService` reads a
+    * live chart.
     *
-    * `isTombstone`: an operator whose key becomes EMPTY has nothing to
-    * emit, so its stale rows would be served forever — unless it emits an
-    * explicit per-key deletion marker (e.g. [[StreamOps.incrementalTopN]]
-    * with emitEmpty=true: pos=0). A marker row counts for the stale-row
-    * anti-join (the key WAS touched) but is filtered out of the store, so
-    * the key's serving presence ends with its state.
+    * Contract:
+    *  - The view holds, for every key (the values of `keyCols`), the rows
+    *    of that key's latest emission: a batch that emits a key replaces
+    *    all of its rows as a unit, so a multi-row key (a group's whole
+    *    chart) never mixes two emissions. Keys the batch does not emit
+    *    keep their rows.
+    *  - A NULL key is one key: its latest emission replaces its old rows
+    *    like any other key's.
+    *  - `isTombstone`: a row for which it is true (or NULL) counts as an
+    *    emission of its key but is not served, so a key whose emission is
+    *    only markers leaves the view (e.g. [[StreamOps.incrementalTopN]]
+    *    with emitEmpty=true, `pos = 0`). A marker for a key that is not
+    *    served changes nothing.
+    *  - A batch that emits no row leaves the view as it is; the first
+    *    batch of a query publishes the view even when it is empty.
     *
-    * Restart semantics (documented limitation): the store is an in-memory
-    * global temp view, so after a QUERY RESTART it starts empty and a
-    * recovered key reappears only when its next emission arrives —
-    * exactly a Kafka Streams app rebuilding its serving layer before
-    * restoration finishes. A production deployment would bootstrap the
-    * view from a persisted snapshot (writeStream to parquet + read back)
-    * or run the chart in complete mode; within one process lifetime the
-    * store is exact. */
+    * Mechanism: the driver holds the served rows as an immutable
+    * snapshot, key → rows. Each batch runs one job, a `collect` of its
+    * own rows with the tombstone flag, folds them into the snapshot and
+    * republishes the view as a local relation over it. Nothing is cached
+    * or checkpointed, so a batch costs its rows plus one republish of
+    * the snapshot, and the snapshot is bounded by state size (keys ×
+    * rows per key), never by stream length. A read never sees a half-
+    * applied batch: the view is swapped whole.
+    *
+    * Restart: the snapshot is derived state. A writer's first batch seeds
+    * it from an existing `global_temp.<name>` view, so a query restarted
+    * in the same process continues from what was served, and a recovered
+    * key is updated by its next emission. In a new process the view
+    * starts empty and a key reappears with its next emission — a Kafka
+    * Streams app rebuilding its serving layer. */
   def serveUpserted(df: DataFrame, name: String, keyCols: Seq[String],
-      isTombstone: Option[org.apache.spark.sql.Column] = None): DataStreamWriter[Row] =
+      isTombstone: Option[org.apache.spark.sql.Column] = None): DataStreamWriter[Row] = {
+    val tombstone = "__graft_tombstone"
+    var served: Option[Map[Row, Vector[Row]]] = None
     df.writeStream.outputMode("update")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // foreachBatch executes on the stream's CLONED session, whose temp
         // views the serving session cannot see — a GLOBAL temp view is the
-        // cross-session handle (read it as `global_temp.<name>`)
+        // cross-session handle
         val s = batch.sparkSession
-        val gname = "global_temp." + name
-        val b = batch.localCheckpoint()
-        val keep = isTombstone.map(t => b.filter(!t)).getOrElse(b)
-        val next =
-          if (!s.catalog.tableExists(gname)) keep
-          else s.table(gname)
-            .join(b.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-            .unionByName(keep)
-        next.localCheckpoint().createOrReplaceGlobalTempView(name)
+        val schema = batch.schema
+        val keyAt = keyCols.map(schema.fieldIndex)
+        // binary values compare by content, as the key columns do in SQL
+        def keyOf(r: Row): Row = Row.fromSeq(keyAt.map(i => r.get(i) match {
+          case b: Array[Byte] => b.toSeq
+          case v => v
+        }))
+        val first = served.isEmpty
+        val before = served.getOrElse {
+          val gname = "global_temp." + name
+          if (!s.catalog.tableExists(gname)) Map.empty[Row, Vector[Row]]
+          else {
+            val old = s.table(gname)
+            val at = schema.fieldNames.map(old.schema.fieldIndex)
+            old.collect().toVector.map(r => Row.fromSeq(at.map(r.get))).groupBy(keyOf)
+          }
+        }
+        val rows = batch.withColumn(tombstone,
+          isTombstone.fold(lit(false))(t => coalesce(t, lit(true)))).collect()
+        val next = rows.toVector.groupBy(keyOf).foldLeft(before) { case (m, (k, rs)) =>
+          val live = rs.filterNot(_.getBoolean(schema.length)).map(r => Row.fromSeq(r.toSeq.init))
+          if (live.isEmpty) m - k else m.updated(k, live)
+        }
+        served = Some(next)
+        if (first || rows.nonEmpty)
+          s.createDataFrame(next.valuesIterator.flatten.toSeq.asJava, schema)
+            .createOrReplaceGlobalTempView(name)
       }
+  }
 }

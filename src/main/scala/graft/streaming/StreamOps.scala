@@ -784,7 +784,8 @@ object StreamOps {
     * stale chart forever. With emitEmpty=true the group emits ONE
     * deletion marker instead — `pos = 0` (real chart rows are 1-based),
     * id = -1, value = 0 — the explicit per-key "empty chart" record
-    * [[Sources.serveUpserted]]'s `isTombstone` filter anti-joins on.
+    * that, flagged by [[Sources.serveUpserted]]'s `isTombstone`, removes
+    * the group from the served view.
     * The group's state entry is removed either way (no leak). */
   def incrementalTopN(updates: Dataset[ChangelogEntry], n: Int,
       margin: Int = 8, emitEmpty: Boolean = false): Dataset[ChartRow] = {

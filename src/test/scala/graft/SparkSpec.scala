@@ -6,14 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all specs (one per JVM; tests fork once). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    // the library's session contract (GraftSession.create): shuffle
+    // partitions, UTC, graft's native functions and the subprocess-free
+    // checkpoint commit path
+    val s = GraftSession.create("local[4]", 4, "graft-test")
     // RocksDB changelog checkpointing (the production-recommended RocksDB
     // config): per-batch commit uploads a small changelog instead of a
     // full snapshot zip, so the commit critical section shrinks from
@@ -24,9 +20,6 @@ object SparkSpec {
     // thread, where shutdown races log warnings, not task failures.
     s.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    // the shared test session mirrors GraftSession's contract: graft's
-    // native functions (graft_cosine / graft_dot) are always registered
-    functions.GraftExtensions.register(s)
     s
   }
 }
