@@ -28,6 +28,37 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   val sf001 = "/root/testdata/sf0.001"
 
+  /** The number of Spark jobs `body` starts. A marker job closes each
+    * end of the window: the listener bus delivers events in order, so
+    * once the closing marker's start is seen, every job `body` started
+    * has been counted. */
+  protected def jobsRunBy(body: => Unit): Int = {
+    val group = "graft-job-count-marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markers = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .contains(group)) markers.incrementAndGet()
+        else jobs.incrementAndGet()
+    }
+    def marker(expect: Int): Unit = {
+      spark.sparkContext.setJobGroup(group, "listener window marker")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+      while (markers.get < expect && System.nanoTime < deadline) Thread.sleep(10)
+      assert(markers.get >= expect, s"listener bus never delivered marker $expect")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      marker(1)
+      jobs.set(0) // anything queued before the window opened
+      body
+      marker(2)
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   /** Stop a streaming query WITHOUT interrupting an in-flight
     * micro-batch's state commit. `stop()` cancels the job group
     * immediately; if a trigger is mid-flight (e.g. a timer/no-data batch

@@ -121,26 +121,17 @@ class LivePathSpec extends SparkSpec {
     import spark.implicits._
     val in = MemoryStream[(Long, Long)]
     val q = Sources.serveUpserted(in.toDF().toDF("k", "v"), "upsert_pins", Seq("k")).start()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     try {
       in.addData((0L, 0L)); q.processAllAvailable()
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      spark.sparkContext.addSparkListener(listener)
-      (1 to 5).foreach { b =>
-        in.addData((0L until 50L).map(k => (k, b.toLong))); q.processAllAvailable()
+      val jobs = jobsRunBy {
+        (1 to 5).foreach { b =>
+          in.addData((0L until 50L).map(k => (k, b.toLong))); q.processAllAvailable()
+        }
       }
-      // listener events arrive asynchronously: wait for five, then for strays
-      val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
-      while (jobs.get < 5 && System.nanoTime < deadline) Thread.sleep(10)
-      Thread.sleep(500)
-      spark.sparkContext.removeSparkListener(listener)
       val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
       assert(pinned.isEmpty, s"pinned RDDs ${pinned.toSeq.sorted}")
-      assert(jobs.get === 5)
+      assert(jobs === 5)
       assert(spark.table("global_temp.upsert_pins").where(col("v") === 5).count() === 50)
     } finally quiesceAndStop(q)
   }

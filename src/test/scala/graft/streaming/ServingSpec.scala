@@ -1444,34 +1444,9 @@ class ServingSpec extends SparkSpec {
           java.net.http.HttpResponse.BodyHandlers.ofString())
         (resp.statusCode(), resp.body())
       }
-      // Count every job that is not one of our marker flush jobs. The
-      // listener bus is an ordered queue per listener, so once marker
-      // k's JobStart is observed, every event posted before it (i.e.
-      // any job a request might have run) has been delivered too —
-      // no sleeps, no races.
-      val stray = new java.util.concurrent.atomic.AtomicInteger(0)
-      @volatile var markers = 0
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(js.properties)
-              .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-              .contains("graft-flush")) markers += 1
-          else stray.incrementAndGet()
-      }
-      def flush(expect: Int): Unit = {
-        spark.sparkContext.setJobGroup("graft-flush", "listener window marker")
-        try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
-        val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-        while (markers < expect && System.nanoTime < deadline) Thread.sleep(10)
-        assert(markers >= expect, s"listener bus never delivered marker $expect")
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        flush(1)
-        stray.set(0) // discard anything queued before the window opened
-        // exact hit, near hit, miss — 4 texts × 3 rounds, first request
-        // included (the zero-jobs property is per-request, not warm-only)
+      // exact hit, near hit, miss — 4 texts × 3 rounds, first request
+      // included (the zero-jobs property is per-request, not warm-only)
+      val stray = jobsRunBy {
         (1 to 3).foreach { _ =>
           assert(check("the quick brown fox jumps over the lazy dog")._2
             .contains("\"verdict\":\"exact\""))
@@ -1481,11 +1456,10 @@ class ServingSpec extends SparkSpec {
             .contains("\"verdict\":\"new\""))
           assert(check("pack my box with five dozen liquor jugs")._1 === 200)
         }
-        flush(2)
-        assert(stray.get() === 0,
-          s"request path ran ${stray.get()} Spark job(s); " +
-            "the dedup tier must stay driver-side (LocalTableScan fold)")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      }
+      assert(stray === 0,
+        s"request path ran $stray Spark job(s); " +
+          "the dedup tier must stay driver-side (LocalTableScan fold)")
     } finally rest.stop()
   }
 
@@ -2149,43 +2123,16 @@ class ServingSpec extends SparkSpec {
       // job-count evidence that a reload through the artifact skips the
       // codebook learn: reload b on the artifact path, then force the
       // inline path on the same instance — strictly more jobs
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      @volatile var markers = 0
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(js.properties)
-              .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-              .contains("graft-pq-flush")) markers += 1
-          else jobs.incrementAndGet()
+      val artifactJobs = jobsRunBy {
+        assert(getR(s"${urls("instance-b")}/ann/reload").statusCode() === 200)
       }
-      // the listener-bus drain marker (the dedup zero-jobs test's trick):
-      // a marker job AFTER the window guarantees everything before it
-      // was delivered
-      def flush(expect: Int): Unit = {
-        spark.sparkContext.setJobGroup("graft-pq-flush", "listener marker")
-        try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
-        val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-        while (markers < expect && System.nanoTime < deadline) Thread.sleep(10)
-        assert(markers >= expect, s"listener bus never delivered marker $expect")
+      assert(b.lastPqSource === "artifact")
+      assert(b.lastIvfSource === "artifact",
+        s"a reload with fresh artifacts must not re-run k-means: ${b.lastIvfSource}")
+      sparkB.conf.set("spark.graft.artifacts.enabled", "false")
+      val inlineJobs = jobsRunBy {
+        assert(getR(s"${urls("instance-b")}/ann/reload").statusCode() === 200)
       }
-      spark.sparkContext.addSparkListener(listener)
-      val (artifactJobs, inlineJobs) =
-        try {
-          flush(1)
-          jobs.set(0)
-          assert(getR(s"${urls("instance-b")}/ann/reload").statusCode() === 200)
-          flush(2)
-          val aj = jobs.get()
-          assert(b.lastPqSource === "artifact")
-          assert(b.lastIvfSource === "artifact",
-            s"a reload with fresh artifacts must not re-run k-means: ${b.lastIvfSource}")
-          sparkB.conf.set("spark.graft.artifacts.enabled", "false")
-          jobs.set(0)
-          assert(getR(s"${urls("instance-b")}/ann/reload").statusCode() === 200)
-          flush(3)
-          (aj, jobs.get())
-        } finally spark.sparkContext.removeSparkListener(listener)
       assert(b.lastPqSource === "inline")
       assert(b.lastIvfSource === "inline")
       assert(artifactJobs < inlineJobs,
