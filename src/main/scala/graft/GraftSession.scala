@@ -40,7 +40,17 @@ import org.apache.spark.sql.SparkSession
   *   reads as a long ([[Tables.events]] truncates it to micros).
   * - `spark.sql.codegen.cache.maxEntries` is [[CodegenCacheEntries]], so
   *   a warm query finds every class it compiled before instead of
-  *   compiling it again. */
+  *   compiling it again.
+  * - `spark.sql.icu.caseMappings.enabled` is off: `upper` and `lower`
+  *   map case with the JVM's `String.toUpperCase`/`toLowerCase`, as
+  *   Spark 3.x did, instead of ICU. ASCII text maps identically on both
+  *   paths. Non-ASCII text follows the JVM's Unicode version and default
+  *   locale (ICU 77 knows letters added after the JDK's Unicode
+  *   version, such as U+2C2F). ICU's first case mapping in a JVM builds
+  *   a title-case table over all 1,114,112 code points, in whichever
+  *   query first runs `upper` or `lower`: on 4 cores, a one-row `upper`
+  *   in a fresh JVM took 1.66–1.97 s of process CPU with ICU and
+  *   0.24–0.28 s without (3 JVMs each). */
 object GraftSession {
 
   /** Capacity of Spark's generated-class cache, a static conf: one cache
@@ -77,6 +87,7 @@ object GraftSession {
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.icu.caseMappings.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     functions.GraftExtensions.register(s)

@@ -21,7 +21,7 @@ object OracleSql {
 
   // ---- shared SQL fragments -----------------------------------------
 
-  /** Lowercase word tokens of documents.text (same regex as Dedup.tokens). */
+  /** Lowercase word tokens of documents.text (the tokens of TextAnalysis.tokens). */
   private val tokensSql =
     "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), y -> length(y) > 0)"
 

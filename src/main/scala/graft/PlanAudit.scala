@@ -97,7 +97,7 @@ object PlanAudit {
       ("t14_boilerplate_ngrams", "the df table derives FROM the checkpointed (doc,ngram) occurrence counts (ExistingRDD — the tokenize+explode ran once), so the boilerplate join re-reads the materialization, never the corpus; no all-pairs anywhere",
         Seq("ExistingRDD"),
         Seq("FileScan parquet", "CartesianProduct", "BroadcastNestedLoopJoin")),
-      ("t15_scrub_numeric", "field scrubbing is pure codegen'd column work — regexp_replace/extract projections with no shuffle beyond the single-split fan-out, no aggregation, no UDF",
+      ("t15_scrub_numeric", "field scrubbing is pure codegen'd column work — regexp_replace/extract projections with no shuffle beyond the loader's key-hash fan-out of a single-file table, no aggregation, no UDF",
         Seq("regexp_replace"),
         Seq("), ENSURE_REQUIREMENTS", "HashAggregate", "BatchEvalPython")),
       ("t16_lm_support", "the corpus-LM support score keeps t14's stats shape: ONE tokenize+explode into the checkpointed occurrence table (ExistingRDD), both count tables derive FROM the materialization (zero parquet re-scans), joins stay keyed — no all-pairs",

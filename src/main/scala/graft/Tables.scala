@@ -2,6 +2,9 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -14,19 +17,39 @@ import graft.ops.Artifacts
   * to exactly what each query touches; callers should still `.select` the
   * columns they need as early as possible.
   *
-  * Each table path is resolved once: the first load infers its Parquet
-  * schema (one Spark job over the footers) and every later load reads
-  * with that schema given, so building a query runs no job. The resolved
-  * schema is kept with the table's file inventory (name, length and
-  * modification time of each file, as [[Artifacts.fingerprint]] folds
-  * them); a load whose inventory differs, because the table was
+  * Each table path is resolved once. The first load lists the table's
+  * files, infers its Parquet schema (one Spark job over the footers) and
+  * sums the row counts in its footers. Every later load reads with that
+  * schema given, so building a query runs no job and reads no footer.
+  * The resolution is kept with the table's file inventory (name, length
+  * and modification time of each file, as [[Artifacts.fingerprint]]
+  * folds them); a load whose inventory differs, because the table was
   * rewritten or a part file was appended, resolves it again. The store
-  * holds one schema per path and no data, so it is kept apart from the
+  * holds one entry per path and no data, so it is kept apart from the
   * per-dir [[ops.Memo]] frame and survives a dir switch. Every call
   * returns a fresh `Dataset` with its own attribute ids, so a table
   * joined with itself resolves as two relations. Schemas are inferred
   * under the [[GraftSession.create]] contract, whose
   * `spark.sql.legacy.parquet.nanosAsLong` decides how `events.ts` reads.
+  *
+  * The fact tables (orders, lineitem, events, documents, embeddings)
+  * fan out: a table of at least [[FanOutMinRows]] rows, read as fewer
+  * files than `defaultParallelism`, is hash-partitioned on its primary
+  * key into `defaultParallelism` partitions. The driver's testdata files
+  * are single-row-group, so Spark scans each as one split, which would
+  * run every CPU-heavy per-row pipeline (tokenize, shingle, hash,
+  * cosine) on one core. A smaller table, or one with enough files, is
+  * returned as read: below the threshold the shuffle's extra stage, job
+  * and AQE re-plan cost more than the parallel work saves. The rule
+  * reads only the resolution (file count and footer row count), so a
+  * table rewritten across the threshold is decided again.
+  *
+  * The partitioning hashes a unique key rather than round-robin: a
+  * keyless `repartition(n)` sorts its whole input first so that retried
+  * tasks place rows alike (SPARK-23207), and on a single-split scan that
+  * sort runs on one core. A hash of a deterministic key places each row
+  * by its value alone, and later operations on the same key reuse the
+  * exchange.
   */
 object Tables {
   def region(s: SparkSession, dir: String): DataFrame    = load(s, s"$dir/region.parquet")
@@ -35,91 +58,106 @@ object Tables {
   def supplier(s: SparkSession, dir: String): DataFrame  = load(s, s"$dir/supplier.parquet")
   def part(s: SparkSession, dir: String): DataFrame      = load(s, s"$dir/part.parquet")
   def orders(s: SparkSession, dir: String): DataFrame    =
-    fanOut(s, load(s, s"$dir/orders.parquet"), Seq("o_orderkey"))
+    fanOut(s, s"$dir/orders.parquet", Seq("o_orderkey"))
   def lineitem(s: SparkSession, dir: String): DataFrame  =
-    fanOut(s, load(s, s"$dir/lineitem.parquet"), Seq("l_orderkey", "l_linenumber"))
+    fanOut(s, s"$dir/lineitem.parquet", Seq("l_orderkey", "l_linenumber"))
   /** events.ts has shipped as either TIMESTAMP(MICROS) (readable directly)
     * or INT64 TIMESTAMP(NANOS), which the session reads as a long; in the
     * nanos generation, truncate it to micros (exactly what DuckDB does
     * natively, so the oracle sees identical values). Integer `div` keeps
     * full precision — a double division would corrupt 2024-epoch nanos
     * (≈1.7e18 > 2^53). The branch is taken on the resolved schema. */
-  def events(s: SparkSession, dir: String): DataFrame = {
-    val raw = load(s, s"$dir/events.parquet")
-    val fixed = raw.schema("ts").dataType match {
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ => raw // already TIMESTAMP(MICROS)
-    }
-    fanOut(s, fixed, Seq("event_id"))
-  }
+  def events(s: SparkSession, dir: String): DataFrame =
+    fanOut(s, s"$dir/events.parquet", Seq("event_id"), raw =>
+      raw.schema("ts").dataType match {
+        case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+        case _ => raw // already TIMESTAMP(MICROS)
+      })
   def documents(s: SparkSession, dir: String): DataFrame =
-    fanOut(s, load(s, s"$dir/documents.parquet"), Seq("doc_id"))
+    fanOut(s, s"$dir/documents.parquet", Seq("doc_id"))
   def embeddings(s: SparkSession, dir: String): DataFrame =
-    fanOut(s, load(s, s"$dir/embeddings.parquet"), Seq("vec_id"))
+    fanOut(s, s"$dir/embeddings.parquet", Seq("vec_id"))
 
-  /** Table path -> (file inventory, schema resolved from it). */
-  private val resolved = new ConcurrentHashMap[String, (String, StructType)]
+  /** What a load knows of a table: the file inventory it was resolved
+    * from, and the schema, data file count and footer row count read
+    * from that inventory. */
+  private case class Resolved(inventory: String, schema: StructType, files: Int, rows: Long)
+
+  /** Table path -> its resolution. */
+  private val resolved = new ConcurrentHashMap[String, Resolved]
 
   private def load(s: SparkSession, path: String): DataFrame =
-    s.read.schema(schemaOf(s, path)).parquet(path)
+    s.read.schema(resolve(s, path).schema).parquet(path)
 
-  /** The table's schema, inferred again only when its inventory moved.
-    * Two racing first loads may both infer; they store the same schema. */
-  private def schemaOf(s: SparkSession, path: String): StructType = {
-    val inventory = Artifacts.fingerprint(s, path)
-    Option(resolved.get(path)).collect { case (`inventory`, schema) => schema }
-      .getOrElse {
-        val schema = s.read.parquet(path).schema
-        resolved.put(path, (inventory, schema))
-        schema
+  /** The table's resolution, made again only when its inventory moved.
+    * Two racing first loads may both resolve; they store the same entry.
+    * A data file is one Spark reads: no name segment starts with `_` or
+    * `.` (so `_SUCCESS` and `.crc` sidecars are not counted). */
+  private def resolve(s: SparkSession, path: String): Resolved = {
+    val files = Artifacts.inventory(s, path)
+    val inventory = Artifacts.fingerprintOf(files)
+    Option(resolved.get(path)).filter(_.inventory == inventory).getOrElse {
+      val data = files.getOrElse(Nil).collect {
+        case (name, f) if name.split('/').forall(n => !n.startsWith("_") && !n.startsWith(".")) =>
+          f.getPath
       }
+      val r = Resolved(inventory, s.read.parquet(path).schema, data.size,
+        footerRows(s, data))
+      resolved.put(path, r)
+      r
+    }
   }
 
-  /** A table read as fewer files than the cluster's parallelism is
-    * hash-partitioned on its primary key into `defaultParallelism`
-    * partitions; a table with at least that many files is returned as
-    * read.
+  /** Fewest rows at which a single-split table is hash-partitioned.
     *
-    * The testdata files are single-row-group, so Spark scans each as one
-    * split, which would serialize every CPU-heavy per-row pipeline
-    * (tokenize, shingle, hash, cosine) on one core. Production inputs
-    * (thousands of files) skip the shuffle. The decision reads the file
-    * listing only, no footer and no plan.
+    * Measured on 4 cores with `graft.Bench` (best of 5 reps, best of 3
+    * runs) on samples cut from sf0.1: the first N rows of `documents`
+    * and `embeddings` (embeddings past its 2,000 rows extended with
+    * negated and reversed copies under new ids), every other table as
+    * at sf0.1. Milliseconds with / without the fan-out:
     *
-    * The partitioning hashes a unique key rather than round-robin: a
-    * keyless `repartition(n)` sorts its whole input first so that retried
-    * tasks place rows alike (SPARK-23207), and on a single-split scan that
-    * sort runs on one core. A hash of a deterministic key places each row
-    * by its value alone, and later operations on the same key reuse the
-    * exchange. */
-  private def fanOut(s: SparkSession, df: DataFrame,
-      keys: Seq[String]): DataFrame = {
+    * {{{
+    * rows   d3_minhash_sig  t26_pii_scrub  c6_prep_chunked  s4_native_cosine  sum
+    * 1,000  125 / 160       124 / 111      128 / 114        102 /  84         479 /   469
+    * 1,500  146 / 200       131 / 132      144 / 118         81 /  74         502 /   524
+    * 2,000  170 / 240       156 / 157      153 / 131         86 /  89         565 /   617
+    * 4,000  207 / 378       216 / 245      174 / 162         93 /  85         690 /   870
+    * 5,000  229 / 446       236 / 293      196 / 197         96 /  80         757 / 1,016
+    * }}}
+    *
+    * The four together cross over between 1,000 and 1,500 rows; 1,500
+    * is the first measured size at which the fan-out wins. d3 gains from
+    * 1,000 rows, t26 from 4,000, c6 only ties at 5,000, and s4 gains
+    * nothing beyond run-to-run spread. sf0.001 `events` (1,000 rows), `documents` and `embeddings`
+    * (500) are read as they are; sf0.1 `documents` (5,000) and
+    * `embeddings` (2,000) still fan out. */
+  private[graft] val FanOutMinRows = 1500L
+
+  /** The table at `path`, hash-partitioned on `keys` when it has at
+    * least [[FanOutMinRows]] rows in fewer files than
+    * `defaultParallelism`; `fix` is applied to the scan first. */
+  private def fanOut(s: SparkSession, path: String, keys: Seq[String],
+      fix: DataFrame => DataFrame = identity): DataFrame = {
+    val t = resolve(s, path)
+    val df = fix(s.read.schema(t.schema).parquet(path))
     val target = s.sparkContext.defaultParallelism
-    if (df.inputFiles.length < target) df.repartition(target, keys.map(col): _*)
+    if (t.rows >= FanOutMinRows && t.files < target) df.repartition(target, keys.map(col): _*)
     else df
   }
 
-  /** Exact table row count from parquet FOOTER metadata — no data scan,
-    * no Spark job: footers already store per-row-group counts, which is
-    * how a 100 TB index build should learn n (a `count()` action there
-    * is a full extra pass over the corpus). Handles both the driver's
-    * single-file tables and Spark-written part-file directories. */
-  def parquetRowCount(s: SparkSession, path: String): Long = {
+  /** Exact row count of `files` from their Parquet FOOTER metadata: no
+    * data scan and no Spark job, since footers already store per-row-group
+    * counts. That is how a 100 TB index build should learn n (a `count()`
+    * there is a full extra pass over the corpus). */
+  private def footerRows(s: SparkSession, files: Seq[Path]): Long = {
     val conf = s.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val files =
-      if (fs.getFileStatus(root).isDirectory)
-        fs.listStatus(root).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-      else Array(root)
     files.map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
       try r.getRecordCount finally r.close()
     }.sum
   }
 
+  /** Row count of the embeddings table, from its resolution. */
   def embeddingsRowCount(s: SparkSession, dir: String): Long =
-    parquetRowCount(s, s"$dir/embeddings.parquet")
+    resolve(s, s"$dir/embeddings.parquet").rows
 }

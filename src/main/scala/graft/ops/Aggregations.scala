@@ -39,8 +39,7 @@ object Aggregations {
     * The shuffle keys on `word`; partial counts combine map-side. */
   def wordCount(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
-      .select(explode(split(lower(col("text")), "[^a-z0-9]+")).as("word"))
-      .filter(length(col("word")) > 0)
+      .select(explode(TextAnalysis.tokens).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
 
   /** TPC-H Q1-style pricing summary (reduce + aggregate over lineitem). */

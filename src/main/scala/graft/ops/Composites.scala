@@ -90,14 +90,13 @@ object Composites {
     * pre-group and taking min_by is exact). */
   def prepChunkedFunnel(s: SparkSession, dir: String): DataFrame = {
     val nWords = size(split(trim(col("text")), TextAnalysis.Ws + "+"))
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
     val stride = TextAnalysis.ChunkSize - TextAnalysis.ChunkOverlap
     val overlap = TextAnalysis.ChunkOverlap
     val deduped = Tables.documents(s, dir)
       .withColumn("n_words", nWords)
       .filter(col("n_words") >= 20 && col("n_words") <= 2000)
       .select(md5(col("text")).as("h"), col("doc_id"), col("lang"),
-        size(toks).cast(LongType).as("n"))
+        size(TextAnalysis.tokens).cast(LongType).as("n"))
       .groupBy(col("h"))
       .agg(min_by(struct(col("doc_id"), col("lang"), col("n")), col("doc_id")).as("d"))
       .select(col("d.lang").as("lang"), col("d.n").as("n"))
@@ -364,7 +363,8 @@ object Composites {
       // added a pass and a join for what one projection computes — and
       // only survivors pay it now. collapsedTokens keeps the expression
       // shared with t13, so the two cannot drift.
-      .withColumn("n_kept", TextAnalysis.keptCountCol)
+      .withColumn("t", TextAnalysis.tokens)
+      .withColumn("n_kept", size(TextAnalysis.collapsedTokens(col("t"))))
       .select(col("doc_id"), col("lang"), col("boiler_ratio"), col("n_kept"))
   }
 
@@ -661,9 +661,8 @@ object Composites {
     * un-partitioned window ever sees an unbounded-cardinality histogram)
     * and fold in as one-row broadcasts; one map-side-combined rollup. */
   def qualityReport(s: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
     val base = Tables.documents(s, dir)
-      .select(col("doc_id"), col("lang"), toks.as("t"))
+      .select(col("doc_id"), col("lang"), TextAnalysis.tokens.as("t"))
       .select(col("doc_id"), col("lang"), size(col("t")).as("n_tokens"),
         round(lit(1.0) - size(array_distinct(col("t"))).cast("double") /
           greatest(size(col("t")), lit(1)), 6).as("rep_ratio"))
@@ -719,8 +718,7 @@ object Composites {
   def leakageSplit(s: SparkSession, dir: String): DataFrame =
     leakageSplitFrom(Dedup.clusterLabels(s, dir),
       Tables.documents(s, dir).select(col("doc_id"), col("lang"),
-        size(filter(split(lower(col("text")), "[^a-z0-9]+"),
-          w => length(w) > 0)).as("n_tokens")))
+        size(TextAnalysis.tokens).as("n_tokens")))
 
   /** The leakage-safety rule itself, in ONE place (shared by c13 and
     * c14): gid = the doc's dedup-cluster label (its own id when

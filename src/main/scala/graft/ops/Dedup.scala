@@ -20,10 +20,7 @@ import org.apache.spark.sql.types._
   * dropDuplicates + watermark; its batch form is `exactById`.
   */
 object Dedup {
-
-  /** Tokenize to lowercase words. */
-  private[graft] val tokens: Column =
-    filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
+  import TextAnalysis.tokens
 
   /** §2.8 event-id dedup, batch form: first occurrence per id wins. */
   def exactById(s: SparkSession, dir: String): DataFrame =
@@ -43,18 +40,24 @@ object Dedup {
   val NumPerms = 16
   val Bands = 4 // 4 bands × 4 rows
 
-  /** n-word shingles of the document text, built by zipping n staggered
-    * slices of the token array — the tokenizer expression is evaluated a
-    * constant number of times per row. (A transform+slice-per-index form
-    * re-evaluates the whole tokenize pipeline per shingle: O(len²) per
-    * document.) */
-  private def shingleCol(n: Int): Column = {
-    val m = size(tokens) - (n - 1)
-    val shingles = (1 to n).map(k => slice(tokens, lit(k), m))
+  /** n-word shingles of the token array `t`, built by zipping n
+    * staggered slices of it. `t` is a projected column, so the tokenizer
+    * runs once per row whatever reads the shingles. (A
+    * transform+slice-per-index form re-evaluates its input per shingle:
+    * O(len²) per document.) */
+  private def shingleCol(n: Int, t: Column): Column = {
+    val m = size(t) - (n - 1)
+    val shingles = (1 to n).map(k => slice(t, lit(k), m))
       .reduce((acc, s) => zip_with(acc, s, (a, b) => concat(a, lit(" "), b)))
-    when(size(tokens) >= n, array_distinct(shingles))
-      .otherwise(array(array_join(tokens, " ")))
+    when(size(t) >= n, array_distinct(shingles))
+      .otherwise(array(array_join(t, " ")))
   }
+
+  /** (doc_id, sh): one row per distinct 3-word shingle of each
+    * document, from the projected tokens. */
+  private def shingled(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id"), tokens.as("t"))
+      .select(col("doc_id"), explode(shingleCol(3, col("t"))).as("sh"))
 
   /** Mersenne prime 2^31−1: modulus of the affine permutation family. */
   val MinhashPrime = 2147483647L
@@ -84,8 +87,7 @@ object Dedup {
 
   /** Frame-level form of [[minhashSignatures]] — any (doc_id, text). */
   def minhashSigFrameOf(documents: DataFrame): DataFrame =
-    documents
-      .select(col("doc_id"), explode(shingleCol(3)).as("sh"))
+    shingled(documents)
       .select(col("doc_id"),
         (conv(substring(md5(col("sh")), 1, 15), 16, 10).cast(LongType)
           % MinhashPrime).as("h"))
@@ -105,8 +107,8 @@ object Dedup {
     * affine family); the explode form remains the BATCH path because
     * there the per-shingle hash must be computed once, map-side-combined
     * (see the [[minhashSignatures]] scaladoc). */
-  private[graft] def minhashSigArray: Column = {
-    val hs = transform(shingleCol(3), sh =>
+  private[graft] def minhashSigArray(t: Column): Column = {
+    val hs = transform(shingleCol(3, t), sh =>
       conv(substring(md5(sh), 1, 15), 16, 10).cast(LongType) % MinhashPrime)
     array(minhashPerms.map { case (a, b) =>
       array_min(transform(hs, h => (h * a + b) % MinhashPrime))
@@ -276,12 +278,11 @@ object Dedup {
     * The benchmark shingle set is small by construction → broadcast join;
     * the per-doc ratio is one groupBy. Emits docs with ≥ 30% overlap. */
   def contamination(s: SparkSession, dir: String): DataFrame = {
-    val shingled = Tables.documents(s, dir)
-      .select(col("doc_id"), explode(array_distinct(shingleCol(3))).as("sh"))
-    val bench = shingled.filter(col("doc_id") < 10)
+    val sh = shingled(Tables.documents(s, dir))
+    val bench = sh.filter(col("doc_id") < 10)
       .select(col("sh")).distinct()
       .withColumn("hit", lit(1))
-    shingled.filter(col("doc_id") >= 10)
+    sh.filter(col("doc_id") >= 10)
       .join(broadcast(bench), Seq("sh"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),
@@ -313,9 +314,7 @@ object Dedup {
     // round 19: the persisted d4 candidate list, not a re-run of the
     // signature pipeline (the d17-over-d6 discipline at the MinHash grain)
     val pairs = lshPairsMemo(s, dir).select(col("doc_a"), col("doc_b"))
-    val sh = Tables.documents(s, dir)
-      .select(col("doc_id"), explode(shingleCol(3)).as("sh"))
-      .localCheckpoint()
+    val sh = shingled(Tables.documents(s, dir)).localCheckpoint()
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val a = sh.select(col("doc_id").as("doc_a"), col("sh"))
     val b = sh.select(col("doc_id").as("doc_b"), col("sh"))
@@ -355,12 +354,11 @@ object Dedup {
     * shuffle keys on (train, bench) pairs, whose cardinality is bounded
     * by real contamination, not corpus size. */
   def decontamAttribution(s: SparkSession, dir: String): DataFrame = {
-    val shingled = Tables.documents(s, dir)
-      .select(col("doc_id"), explode(shingleCol(3)).as("sh"))
-    val bench = shingled.filter(col("doc_id") < 10)
+    val sh = shingled(Tables.documents(s, dir))
+    val bench = sh.filter(col("doc_id") < 10)
       .withColumnRenamed("doc_id", "bench_id")
     val bsize = bench.groupBy(col("bench_id")).agg(count(lit(1)).as("n_bench"))
-    shingled.filter(col("doc_id") >= 10)
+    sh.filter(col("doc_id") >= 10)
       .join(broadcast(bench), Seq("sh"))
       .groupBy(col("doc_id"), col("bench_id"))
       .agg(count(lit(1)).as("overlap"))

@@ -1025,7 +1025,7 @@ object Similarity {
   /** The production IVF configuration (`s13_ivf_scaled`): stride ≈ √n so
     * C ≈ √n centroids — build n√n, probe NProbe·√n, both sub-quadratic at
     * any corpus size (the [[ivfTopKWith]] scale rule). n comes from
-    * parquet FOOTER metadata ([[Tables.parquetRowCount]]) — no count()
+    * parquet FOOTER metadata ([[Tables.embeddingsRowCount]]) — no count()
     * job, no data scan; the DuckDB oracle derives the identical stride
     * as floor(sqrt(count(*))). */
   def ivfTopKScaled(s: SparkSession, dir: String): DataFrame = {

@@ -58,8 +58,7 @@ object Stateless {
   def flatMapWords(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .filter(col("doc_id") % 10 === 0)
-      .select(col("doc_id"), explode(split(lower(col("text")), "[^a-z0-9]+")).as("word"))
-      .filter(length(col("word")) > 0)
+      .select(col("doc_id"), explode(TextAnalysis.tokens).as("word"))
 
   /** O6 `filter` on a stream: predicate on key+value. */
   def filterStream(s: SparkSession, dir: String): DataFrame =

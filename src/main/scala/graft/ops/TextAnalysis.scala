@@ -21,6 +21,22 @@ object TextAnalysis {
   val WsChars = " \\t\\n\\f\\r"
   val Ws: String = "[" + WsChars + "]"
 
+  /** The word pattern of [[tokens]]. */
+  private[graft] val TokenPattern = "[a-z0-9]+"
+
+  /** The word tokenizer every text operator shares: the maximal
+    * `[a-z0-9]` runs of the lowercased `text`, in order. NULL text gives
+    * NULL; text with no such run gives an empty array. These are the
+    * tokens of splitting on `[^a-z0-9]+` and dropping empty pieces, the
+    * oracle's form (`OracleSql`). The expression is code-generated, and
+    * its pattern is compiled once per task, not once per row.
+    *
+    * Project it once (`tokens.as("t")`) before a higher-order function
+    * or a generator reads it: an expression nested in a lambda, or in a
+    * generator that falls back to interpreted evaluation, is evaluated
+    * again at every reference. */
+  val tokens: Column = regexp_extract_all(lower(col("text")), lit(TokenPattern), lit(0))
+
   /** Marker words per language for the n-gram language-ID heuristic. */
   val markers: Seq[(String, Seq[String])] = Seq(
     "de" -> Seq("der", "und", "die", "nicht"),
@@ -99,16 +115,16 @@ object TextAnalysis {
     * the vocabulary/statistics pass of a training-data pipeline. Explode +
     * count combines map-side; the only shuffle keys on the bigram. */
   def ngramCounts(s: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
-    // Bigrams as two staggered slices zipped: the tokenizer expression is
-    // evaluated a CONSTANT number of times per row. (The previous
-    // transform+element_at form re-ran the whole tokenize pipeline per
-    // element access — O(len²) per document, the round-1 bench hog.)
+    // Bigrams as two staggered slices of the projected tokens, zipped.
+    // (A transform+element_at form re-ran the whole tokenize pipeline
+    // per element access — O(len²) per document, the round-1 bench hog.)
+    val toks = col("t")
     val bigrams = when(size(toks) >= 2,
         zip_with(slice(toks, lit(1), size(toks) - 1), slice(toks, lit(2), size(toks) - 1),
           (a, b) => concat(a, lit(" "), b)))
       .otherwise(array().cast("array<string>"))
     Tables.documents(s, dir)
+      .select(tokens.as("t"))
       .select(explode(bigrams).as("bigram"))
       .groupBy(col("bigram")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= 5)
@@ -118,9 +134,8 @@ object TextAnalysis {
     * standard boilerplate/low-quality signal (high ratio = the document
     * repeats itself). Pure per-row arithmetic, no shuffle. */
   def repetitionScore(s: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
     Tables.documents(s, dir)
-      .select(col("doc_id"), toks.as("t"))
+      .select(col("doc_id"), tokens.as("t"))
       .select(col("doc_id"), size(col("t")).as("n_tokens"),
         size(array_distinct(col("t"))).as("n_distinct"))
       .withColumn("rep_ratio",
@@ -169,13 +184,14 @@ object TextAnalysis {
     * — lets the bench warm the REAL operator's codegen shapes on a
     * bounded slice instead of a drift-prone inline copy. */
   def tfidfFrame(documents: DataFrame): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
+    val toks = col("t")
     // ONE tokenize+explode+shuffle: doc_len rides along as size(toks) (a
     // per-doc constant in the group key — no window re-shuffle), and the
     // df table derives FROM the materialized tf rather than from a second
     // explode subtree (Catalyst would recompute, round-1 finding). tf is
     // (doc, term) — vocabulary-bounded, the natural table to persist.
     val tf = documents
+      .select(col("doc_id"), tokens.as("t"))
       .select(col("doc_id"), size(toks).as("doc_len"), explode(toks).as("term"))
       .groupBy(col("doc_id"), col("doc_len"), col("term"))
       .agg(count(lit(1)).as("n"))
@@ -244,7 +260,7 @@ object TextAnalysis {
     * — lets specs drive the real operator with constructed documents. */
   def chunkFrame(documents: DataFrame): DataFrame = {
     val stride = ChunkSize - ChunkOverlap
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
+    val toks = col("t")
     // chunk count = max(ceil((n - overlap) / stride), 1); exact in double
     // for any realistic token count
     val nChunks = greatest(
@@ -260,6 +276,7 @@ object TextAnalysis {
           least(k1 - 1, lastChunk))),
       x => x.isNotNull))
     documents
+      .select(col("doc_id"), tokens.as("t"))
       .select(col("doc_id"), size(toks).as("n_toks"),
         posexplode(toks).as(Seq("pos", "tok")))
       .select(col("doc_id"), col("pos"), col("tok"),
@@ -298,19 +315,12 @@ object TextAnalysis {
     when(size(t) <= 1, t).otherwise(concat(slice(t, 1, 1), tail))
   }
 
-  /** Per-row kept-token count over a raw `text` column — t13's `n_kept`
-    * as one inline expression (tokenizer + [[collapsedTokens]] + size). */
-  private[graft] def keptCountCol: Column =
-    size(collapsedTokens(
-      filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)))
-
   /** Frame-level form of [[collapseRepeats]] — any frame with
     * (doc_id, text); specs drive it with constructed/generated corpora. */
   def collapseFrame(documents: DataFrame): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
     val t = col("t")
     documents
-      .select(col("doc_id"), toks.as("t"))
+      .select(col("doc_id"), tokens.as("t"))
       .withColumn("k", collapsedTokens(t))
       .select(col("doc_id"), size(t).as("n_tokens"), size(col("k")).as("n_kept"),
         md5(concat_ws(" ", col("k"))).as("clean_hash"),
@@ -341,7 +351,6 @@ object TextAnalysis {
     * raw n-gram so the DuckDB comparison is collision-free by
     * construction. */
   def boilerplateNgrams(s: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
     val t = col("t")
     val m = size(t) - (NgramN - 1)
     val ngrams = when(size(t) >= NgramN,
@@ -350,7 +359,7 @@ object TextAnalysis {
         slice(t, lit(3), m), (ab, c) => concat(ab, lit(" "), c)))
       .otherwise(array().cast("array<string>"))
     val occ = Tables.documents(s, dir)
-      .select(col("doc_id"), toks.as("t"))
+      .select(col("doc_id"), tokens.as("t"))
       .select(col("doc_id"), explode(ngrams).as("ng"))
       .groupBy(col("doc_id"), col("ng"))
       .agg(count(lit(1)).as("n"))
@@ -394,7 +403,6 @@ object TextAnalysis {
 
   /** Frame-level form of [[lmSupport]]. */
   def lmSupportFrame(documents: DataFrame): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
     val t = col("t")
     val m = size(t) - 1
     val pairs = when(size(t) >= 2,
@@ -402,7 +410,7 @@ object TextAnalysis {
         (a, b) => struct(a.as("w1"), concat(a, lit(" "), b).as("bg"))))
       .otherwise(array().cast("array<struct<w1:string,bg:string>>"))
     val occ = documents
-      .select(col("doc_id"), toks.as("t"))
+      .select(col("doc_id"), tokens.as("t"))
       .select(col("doc_id"), explode(pairs).as("p"))
       .groupBy(col("doc_id"), col("p.w1").as("w1"), col("p.bg").as("bg"))
       .agg(count(lit(1)).as("m"))
@@ -442,7 +450,6 @@ object TextAnalysis {
     * their direct pipelines. */
   private[graft] def boilerTaggedOccMemo(s: SparkSession, dir: String): DataFrame =
     Memo(s, dir, TaggedOccMemo) {
-      val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
       val t = col("t")
       val m = size(t) - (NgramN - 1)
       val ngrams = when(size(t) >= NgramN,
@@ -453,7 +460,7 @@ object TextAnalysis {
       val fallback = when(size(t) >= NgramN, array().cast("array<string>"))
         .otherwise(array(array_join(t, " ")))
       Tables.documents(s, dir)
-        .select(col("doc_id"), toks.as("t"))
+        .select(col("doc_id"), tokens.as("t"))
         .select(col("doc_id"), explode(concat(
           transform(ngrams, g => struct(lit("t").as("tag"), g.as("g"))),
           transform(fallback, g => struct(lit("d").as("tag"), g.as("g"))))).as("e"))
@@ -574,9 +581,8 @@ object TextAnalysis {
     *-partition window before broadcasting back. No corpus-grain global
     * sort anywhere. */
   def sequencePack(s: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
     packedBins(Tables.documents(s, dir)
-      .select(col("doc_id"), size(toks).cast("long").as("n")))
+      .select(col("doc_id"), size(tokens).cast("long").as("n")))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n")).cast("long").as("total_tokens"),
@@ -638,10 +644,9 @@ object TextAnalysis {
 
   /** Frame-level form of [[domainBalance]] — any (doc_id, source, text). */
   def domainBalanceFrame(documents: DataFrame): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
     val bucket = conv(substring(md5(col("text")), 1, 4), 16, 10).cast("long")
     val d = documents
-      .select(col("doc_id"), col("source"), size(toks).cast("long").as("n"),
+      .select(col("doc_id"), col("source"), size(tokens).cast("long").as("n"),
         bucket.as("bucket"))
     val totals = d.groupBy(col("source")).agg(sum(col("n")).as("t_s"))
     val tmin = totals.agg(min(col("t_s")).as("t_min"))
@@ -696,9 +701,8 @@ object TextAnalysis {
     * from it would drop). This is the frozen artifact
     * [[graft.streaming.StreamOps.mixtureGateStream]] joins. */
   def alphaRatesFrame(documents: DataFrame, alpha: Double): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
     val totals = documents
-      .select(col("source"), size(toks).cast("long").as("n"))
+      .select(col("source"), size(tokens).cast("long").as("n"))
       .groupBy(col("source")).agg(sum(col("n")).as("t_s"))
       .withColumn("pw", pow(col("t_s").cast("double"), alpha))
     val scalars = totals
@@ -724,10 +728,9 @@ object TextAnalysis {
 
   /** Frame-level form of [[alphaMixture]] — any (doc_id, source, text). */
   def alphaMixtureFrame(documents: DataFrame, alpha: Double): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
     val bucket = conv(substring(md5(col("text")), 1, 4), 16, 10).cast("long")
     val d = documents
-      .select(col("doc_id"), col("source"), size(toks).cast("long").as("n"),
+      .select(col("doc_id"), col("source"), size(tokens).cast("long").as("n"),
         bucket.as("bucket"))
     d.join(broadcast(alphaRatesFrame(documents, alpha)), Seq("source"))
       .filter(col("bucket") * 1000000L < col("rate_ppm") * 65536L)
@@ -813,9 +816,8 @@ object TextAnalysis {
     * a pipeline writes and the one the serving layer reads.
     * Un-checkpointed: callers materialize per their own lifecycle. */
   def postingsFrame(documents: DataFrame): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
     documents
-      .select(col("doc_id"), posexplode(toks).as(Seq("pos", "term")))
+      .select(col("doc_id"), posexplode(tokens).as(Seq("pos", "term")))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"), (min(col("pos")) + 1L).as("first_pos"))
   }
@@ -917,7 +919,7 @@ object TextAnalysis {
 
   /** Frame-level form of [[pmiPairs]] — any (doc_id, text). */
   def pmiPairsFrame(documents: DataFrame): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
+    val toks = col("t")
     val bigrams = when(size(toks) >= 2,
         zip_with(slice(toks, lit(1), size(toks) - 1), slice(toks, lit(2), size(toks) - 1),
           (a, b) => concat(a, lit(" "), b)))
@@ -926,6 +928,7 @@ object TextAnalysis {
       transform(toks, t => struct(lit("u").as("tag"), t.as("gram"))),
       transform(bigrams, b => struct(lit("b").as("tag"), b.as("gram"))))
     val counts = documents
+      .select(tokens.as("t"))
       .select(explode(tagged).as("x"))
       .select(col("x.tag").as("tag"), col("x.gram").as("gram"))
       .groupBy(col("tag"), col("gram"))
@@ -977,8 +980,7 @@ object TextAnalysis {
 
   /** Frame-level form of [[vocabGrowth]] — any (doc_id, text). */
   def vocabGrowthFrame(documents: DataFrame): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
-    val d = documents.select(col("doc_id"), toks.as("t"))
+    val d = documents.select(col("doc_id"), tokens.as("t"))
     // slices partition the doc_id VALUE range (ingest order — the
     // Heaps-law x-axis a pipeline actually has): min/max fold in as a
     // one-row broadcast and the slice is an interpolation — no rank, no
@@ -1185,7 +1187,6 @@ object TextAnalysis {
     * folds in as a single broadcast row on a non-foldable zero key. */
   private[graft] def bpeEncodedRendering(documents: DataFrame,
       merges: DataFrame): DataFrame = {
-    val toks0 = filter(split(lower(col("text")), BpeTokenSplit), w => length(w) > 0)
     // one row: the merges as (round, x, y) structs sorted by rank — the
     // application order of greedy BPE — broadcast on the zero key
     val mrow = merges
@@ -1194,7 +1195,7 @@ object TextAnalysis {
         split(col("pair"), " ").getItem(1).as("y")))).as("ms"))
       .withColumn("jk", pmod(size(col("ms")), lit(1)))
     documents
-      .select(col("doc_id"), toks0.as("t"))
+      .select(col("doc_id"), tokens.as("t"))
       .withColumn("s", when(size(col("t")) > 0,
         concat(lit("||"), array_join(col("t"), "||"), lit("||")))
         .otherwise(lit("")))
@@ -1242,25 +1243,18 @@ object TextAnalysis {
     * encoded corpus), so `element_at` never nulls. `id_hash` = md5 of
     * the comma-joined decimal ids — the oracle proves the exact id
     * SEQUENCE, not just counts. */
-  /** THE BPE tokenizer's word-split regex, in ONE place (ADVICE r15
-    * #3): [[bpeMergesFrame]] induces over it, [[bpeEncodedRendering]]
-    * encodes with it, and [[BpeVocabArtifact]] folds it into the vocab
-    * artifact's version — a tokenizer change here re-versions the
-    * artifact BY CONSTRUCTION, never via a hand-copied literal that
-    * could drift. */
-  private[graft] val BpeTokenSplit = "[^a-z0-9]+"
-
   /** Tokenizer code/config version folded into the vocab artifact NAME
     * (ADVICE r14 #5): the artifact manifest fingerprints only the
-    * CORPUS, so a [[MergeRounds]] or tokenizer-regex change would leave
-    * a stale `bpe_vocab` looking fresh — with the version in the name,
-    * a code change addresses a different artifact and rebuilds. The
-    * hashed config IS the shared [[BpeTokenSplit]] constant the
-    * tokenizer runs (ADVICE r15 #3 — the two cannot drift apart). */
+    * CORPUS, so a [[MergeRounds]] or tokenizer change would leave a
+    * stale `bpe_vocab` looking fresh — with the version in the name, a
+    * code change addresses a different artifact and rebuilds. The hashed
+    * config is the [[TokenPattern]] that [[bpeMergesFrame]] induces over
+    * and [[bpeEncodedRendering]] encodes with, so the two cannot drift
+    * apart. */
   private[graft] val BpeVocabArtifact =
     s"bpe_vocab_m${MergeRounds}_" + java.security.MessageDigest
       .getInstance("MD5")
-      .digest(s"split(lower(text), $BpeTokenSplit)".getBytes("UTF-8"))
+      .digest(s"regexp_extract_all(lower(text), $TokenPattern)".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(8)
 
   /** Build-or-read the versioned vocab artifact, sweeping SUPERSEDED
@@ -1373,9 +1367,8 @@ object TextAnalysis {
     * materializations. Merge application (literal replace, checkpointed
     * per round) is unchanged. */
   def bpeMergesFrame(documents: DataFrame): DataFrame = {
-    val toks0 = filter(split(lower(col("text")), BpeTokenSplit), w => length(w) > 0)
     var corpus = documents
-      .select(toks0.as("t")).filter(size(col("t")) > 0)
+      .select(tokens.as("t")).filter(size(col("t")) > 0)
       .select(concat(lit("||"), array_join(col("t"), "||"), lit("||")).as("s"))
       .localCheckpoint()
     // one corpus pass: split once (narrow projection), emit pairs+tokens
@@ -1531,17 +1524,9 @@ object TextAnalysis {
 
   /** Frame-level form of [[lmQuality]] — any (doc_id, text). */
   def lmQualityFrame(documents: DataFrame): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
-    // staggered-slice zip: bigram list without re-evaluating the
-    // tokenizer per index (the shingleCol lesson from Dedup); docs under
-    // 2 tokens have no bigram evidence — empty list, they drop out
-    val bigrams = when(size(toks) >= 2, zip_with(
-        slice(toks, lit(1), size(toks) - 1),
-        slice(toks, lit(2), size(toks) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2"))))
-      .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
     val tb = documents
-      .select(col("doc_id"), explode(bigrams).as("bg"))
+      .select(col("doc_id"), tokens.as("t"))
+      .select(col("doc_id"), explode(bigramPairs(col("t"))).as("bg"))
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .groupBy(col("doc_id"), col("w1"), col("w2"))
       .agg(count(lit(1)).as("n"))
@@ -1593,18 +1578,23 @@ object TextAnalysis {
     lmModelFromCounts(cb)
   }
 
-  private def lmCountsFrame(documents: DataFrame): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
-    val bigrams = when(size(toks) >= 2, zip_with(
-        slice(toks, lit(1), size(toks) - 1),
-        slice(toks, lit(2), size(toks) - 1),
+  /** The (w1, w2) bigram structs of the token array `t`, as a staggered
+    * slice zip over a projected column (the shingleCol lesson from
+    * Dedup). A document under 2 tokens has no bigram evidence: an empty
+    * list, so it drops out. */
+  private[graft] def bigramPairs(t: Column): Column =
+    when(size(t) >= 2, zip_with(
+        slice(t, lit(1), size(t) - 1),
+        slice(t, lit(2), size(t) - 1),
         (a, b) => struct(a.as("w1"), b.as("w2"))))
       .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
+
+  private def lmCountsFrame(documents: DataFrame): DataFrame =
     documents
-      .select(explode(bigrams).as("bg"))
+      .select(tokens.as("t"))
+      .select(explode(bigramPairs(col("t"))).as("bg"))
       .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cnt"))
-  }
 
   private def lmModelFromCounts(cb: DataFrame): LmModel =
     LmModel(cb,
@@ -1646,15 +1636,10 @@ object TextAnalysis {
   /** Frame-level form of [[dsirWeights]]: any (doc_id, text, …) frame
     * and any boolean target predicate over its columns. */
   def dsirWeightsFrame(documents: DataFrame, target: Column): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
-    val bigrams = when(size(toks) >= 2, zip_with(
-        slice(toks, lit(1), size(toks) - 1),
-        slice(toks, lit(2), size(toks) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2"))))
-      .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
     // the target flag rides the one tokenize+explode (no second scan)
     val tb = documents
-      .select(col("doc_id"), target.cast("int").as("tgt"), explode(bigrams).as("bg"))
+      .select(col("doc_id"), target.cast("int").as("tgt"), tokens.as("t"))
+      .select(col("doc_id"), col("tgt"), explode(bigramPairs(col("t"))).as("bg"))
       .select(col("doc_id"), col("tgt"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .groupBy(col("doc_id"), col("tgt"), col("w1"), col("w2"))
       .agg(count(lit(1)).as("n"))
@@ -1768,12 +1753,11 @@ object TextAnalysis {
 
   /** Frame-level form of [[repetitionRules]] — any (doc_id, text). */
   def repetitionRulesFrame(documents: DataFrame): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
     val base = documents.select(
       col("doc_id"),
       split(col("text"), "\n").as("lines"),
       split(col("text"), "\n\n").as("paras"),
-      toks.as("t"))
+      tokens.as("t"))
     val rowStats = base.select(
       col("doc_id"),
       size(col("lines")).cast("long").as("n_lines"),

@@ -1160,7 +1160,8 @@ private[streaming] final class DedupSignature(spark: SparkSession) {
   private val layers: Seq[UnsafeProjection] = {
     import spark.implicits._
     val template = Seq("").toDF("text")
-      .select(md5(col("text")).as("ch"), Dedup.minhashSigArray.as("sig"))
+      .select(md5(col("text")).as("ch"), graft.ops.TextAnalysis.tokens.as("t"))
+      .select(col("ch"), Dedup.minhashSigArray(col("t")).as("sig"))
       .select(col("ch"), col("sig"), Dedup.bandBuckets(col("sig")).as("bbs"))
     val analyzed = template.queryExecution.analyzed
     val leafOut = analyzed.collectLeaves().head.output

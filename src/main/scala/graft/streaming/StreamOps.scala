@@ -501,8 +501,8 @@ object StreamOps {
     import docs.sparkSession.implicits._
     import org.apache.spark.sql.streaming.TimeMode
     docs.toDF()
-      .select(col("doc_id"), col("ts"),
-        posexplode(graft.ops.Dedup.anchorGramsOf(graft.ops.Dedup.tokens)))
+      .select(col("doc_id"), col("ts"), graft.ops.TextAnalysis.tokens.as("t"))
+      .select(col("doc_id"), col("ts"), posexplode(graft.ops.Dedup.anchorGramsOf(col("t"))))
       .select(col("col").as("g"), col("doc_id"), col("pos").cast("int").as("pos"),
         col("ts"))
       .as[AnchorHit]
@@ -534,7 +534,8 @@ object StreamOps {
     val cand = docs.toDF()
       .withWatermark("ts", "10 seconds")
       .withColumn("ch", md5(col("text")))
-      .withColumn("sig", graft.ops.Dedup.minhashSigArray)
+      .withColumn("t", graft.ops.TextAnalysis.tokens)
+      .withColumn("sig", graft.ops.Dedup.minhashSigArray(col("t")))
       .join(corpusHashes, Seq("ch"), "left")
       .select(col("doc_id"), col("ts"), col("sig"), col("exact_partner"),
         explode(graft.ops.Dedup.bandBuckets(col("sig"))).as("bb"))
@@ -622,16 +623,11 @@ object StreamOps {
       lm: graft.ops.TextAnalysis.LmModel,
       keepPpl: Double = graft.ops.TextAnalysis.LmKeepPpl): DataFrame = {
     val a = graft.ops.TextAnalysis.LmAlpha
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"),
-      w => length(w) > 0)
-    val bigrams = when(size(toks) >= 2, zip_with(
-        slice(toks, lit(1), size(toks) - 1),
-        slice(toks, lit(2), size(toks) - 1),
-        (x, y) => struct(x.as("w1"), y.as("w2"))))
-      .otherwise(array().cast("array<struct<w1:string,w2:string>>"))
     docs.toDF()
       .withWatermark("ts", "10 seconds")
-      .select(col("doc_id"), col("ts"), explode(bigrams).as("bg"))
+      .select(col("doc_id"), col("ts"), graft.ops.TextAnalysis.tokens.as("t"))
+      .select(col("doc_id"), col("ts"),
+        explode(graft.ops.TextAnalysis.bigramPairs(col("t"))).as("bg"))
       .select(col("doc_id"), col("ts"),
         col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .join(lm.counts, Seq("w1", "w2"), "left")
@@ -713,8 +709,9 @@ object StreamOps {
       margin: Int = 8): Dataset[IndexHead] = {
     import docs.sparkSession.implicits._
     import org.apache.spark.sql.streaming.TimeMode
-    val toks = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
+    val toks = col("toks")
     docs.toDF()
+      .select(col("doc_id"), graft.ops.TextAnalysis.tokens.as("toks"))
       .select(col("doc_id"), explode(transform(array_distinct(toks),
         t => struct(t.as("term"),
           size(filter(toks, x => x === t)).cast("long").as("tf")))).as("p"))

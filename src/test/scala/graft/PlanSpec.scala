@@ -10,8 +10,23 @@ package graft
   * at sf0.01 so AQE's final plan — the one a cluster would execute — is
   * what gets asserted.
   */
-class PlanSpec extends SparkSpec {
+class PlanSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
   private val sf001dir = "/root/testdata/sf0.01"
+
+  test("d3's executed plan tokenizes once: one tokenizer expression in the tree") {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, RegExpExtractAll, StringSplit}
+    val d3 = SparkEntry.queries("d3_minhash_sig")(spark, sf001dir)
+    d3.queryExecution.toRdd.count()
+    // the shared tokenizer, or the split form it replaced
+    val tokenizers = flatMap(d3.queryExecution.executedPlan)(_.expressions.flatMap(_.collect {
+      case e @ RegExpExtractAll(_, Literal(p, _), _)
+          if String.valueOf(p) == graft.ops.TextAnalysis.TokenPattern => e
+      case e @ StringSplit(_, Literal(p, _), _) if String.valueOf(p) == "[^a-z0-9]+" => e
+    }))
+    assert(tokenizers.size === 1, s"${tokenizers.size} tokenizer expressions:\n" +
+      tokenizers.mkString("\n"))
+  }
 
   PlanAudit.checks.foreach { case (name, claim, must, mustNot) =>
     test(s"plan check: $name") {

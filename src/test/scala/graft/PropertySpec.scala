@@ -641,4 +641,58 @@ class PropertySpec extends SparkSpec {
     val wSum = got.values.map(_.getLong(3)).sum
     assert(wSum <= 1000000L && wSum >= 1000000L - 3)
   }
+
+  /** Text pieces for the tokenizer: words, digits, separator runs and
+    * non-ASCII letters, including ones whose lowercase is longer (U+0130
+    * becomes `i` and a combining dot; U+1E9E becomes `ß`), the Kelvin
+    * sign (lowercases to ASCII `k`) and a surrogate pair. */
+  private val piece: Gen[String] = Gen.oneOf(
+    "Data", "spark", "X1", "42", "007", "a", " ", "  ", "\t", "\n", "-", "__",
+    "...", ",", "é", "Éclair", "straße", "\u1E9E", "\u0130", "İstanbul",
+    "\u212A", "ΣΟΦΙΑ", "Жук", "的", "\uD83D\uDE00", "\uFB01")
+
+  test("property: the shared tokenizer equals filter(split(lower(text))) on generated text") {
+    import spark.implicits._
+    val legacy = filter(split(lower(col("text")), "[^a-z0-9]+"), w => length(w) > 0)
+    (1 to 4).foreach { k =>
+      val texts = Gen.listOfN(200, Gen.listOf(piece).map(_.mkString))
+        .pureApply(Gen.Parameters.default, Seed(700 + k))
+      val rows = (None +: Some("") +: Some(" -- ") +: Some("--a--b--") +:
+        texts.map(Some(_))).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      // an RDD-backed frame, so the projection runs in a task and is not
+      // folded into a local relation on the driver
+      val got = spark.sparkContext.parallelize(rows, 2).toDF("id", "text")
+        .select(col("id"), legacy.as("old"), TextAnalysis.tokens.as("new"))
+        .as[(Long, Option[Seq[String]], Option[Seq[String]])].collect()
+      assert(got.length === rows.length)
+      got.foreach { case (id, old, now) =>
+        assert(old === now, s"seed ${700 + k}, text ${rows(id.toInt)._2}")
+      }
+      assert(got.exists(_._3.isEmpty), "NULL text must give NULL")
+      assert(got.exists(_._3.exists(_.isEmpty)), "no-token text must give []")
+    }
+  }
+
+  test("upper and lower map case as the JVM does, code-generated and interpreted") {
+    import spark.implicits._
+    // U+2C2F and U+1C89 are letters newer than the JDK's Unicode version
+    // that ICU maps; the rest map alike under both.
+    val samples = Seq("hello WORLD 42", "straße", "\u0130stanbul", "ΟΔΟΣ",
+      "\u01C5emal", "\u212A", "\u2C2F", "\u1C89", "ＡＢＣ")
+    assert(samples.exists(t => com.ibm.icu.lang.UCharacter.toLowerCase(t) != t.toLowerCase ||
+      com.ibm.icu.lang.UCharacter.toUpperCase(t) != t.toUpperCase),
+      "no sample tells ICU's case mapping from the JVM's")
+    val df = spark.sparkContext.parallelize(samples, 2).toDF("s")
+    val expected = samples.map(t => (t, t.toLowerCase, t.toUpperCase)).toSet
+    val coded = df.select(col("s"), lower(col("s")), upper(col("s")))
+    // a higher-order function is evaluated interpreted, and so is every
+    // expression inside its lambda
+    val interpreted = df.select(col("s"),
+      transform(array(col("s")), x => lower(x)).getItem(0),
+      transform(array(col("s")), x => upper(x)).getItem(0))
+    assert(coded.queryExecution.executedPlan.find(
+      _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]).nonEmpty)
+    assert(coded.as[(String, String, String)].collect().toSet === expected)
+    assert(interpreted.as[(String, String, String)].collect().toSet === expected)
+  }
 }
