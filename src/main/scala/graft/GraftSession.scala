@@ -16,9 +16,15 @@ import org.apache.spark.sql.SparkSession
   *   enable AQE coalescing to let runtime stats shrink it);
   * - UTC session timezone: every timestamp comparison in the oracle and
   *   the calendar-window math is TZ-sensitive;
-  * - native function registration (`graft_cosine`) via
-  *   [[functions.GraftExtensions]] so SQL users get the codegen'd
-  *   expressions too;
+  * - [[functions.GraftExtensions]] as a session extension: the native
+  *   functions (`graft_cosine`, `graft_dot`, `graft_minhash`), so SQL
+  *   users get the codegen'd expressions too, and the query-stage rule
+  *   [[functions.SinglePartitionShuffle]], which drops a shuffle that
+  *   `EnsureRequirements` adds over a one-partition child when only
+  *   single-child operators read its output (a small table's groupBy,
+  *   window or join then runs as one job). A session built elsewhere
+  *   gets the functions from `GraftExtensions.register` and keeps
+  *   Spark's plans; the rule changes no result;
   * - AQE stays at Spark's default (ON) — skew-join splitting and
   *   partition coalescing are part of the 100 TB story.
   *
@@ -77,6 +83,7 @@ object GraftSession {
   def create(master: String, shufflePartitions: Int,
       appName: String = "graft"): SparkSession = {
     val s = SparkSession.builder()
+      .withExtensions(new functions.GraftExtensions)
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -90,6 +97,7 @@ object GraftSession {
       .config("spark.sql.icu.caseMappings.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // a session that already existed was built without the extension
     functions.GraftExtensions.register(s)
     s
   }

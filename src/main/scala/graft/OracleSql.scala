@@ -88,10 +88,10 @@ object OracleSql {
   /** minhash signature CTEs: tok -> sh -> sig with columns mh0..mh{n-1}.
     * Same affine family as Dedup.minhashSignatures: one md5 per shingle
     * (first 15 hex chars → 60-bit int mod 2^31−1), then (a·h + b) mod p
-    * with the (a, b) constants shared via Dedup.minhashPerms. */
+    * with the (a, b) constants shared via MinHashExpr.perms. */
   private def minhashCtesWith(pre: String): String = {
-    val p = Dedup.MinhashPrime
-    val mhCols = Dedup.minhashPerms.zipWithIndex
+    val p = graft.functions.MinHashExpr.Prime
+    val mhCols = graft.functions.MinHashExpr.perms.zipWithIndex
       .map { case ((a, b), i) => s"min((h * $a + $b) % $p) AS mh$i" }
       .mkString(", ")
     s"""${pre}tok AS (SELECT doc_id, $tokensSql AS t FROM documents),

@@ -39,13 +39,13 @@ object PlanAudit {
         Seq("ExistingRDD"), Seq("BroadcastNestedLoopJoin", "CartesianProduct")),
       ("s13_ivf_scaled", "the √n-stride production IVF keeps s8's shape: EQUALITY join on cell id over the checkpointed index (ExistingRDD), broadcast query side — the n×C build (now n√n) is confined inside the checkpoint",
         Seq("ExistingRDD", "BroadcastHashJoin"), Seq("CartesianProduct")),
-      ("s7_multiprobe_topk", "multi-probe fan-out stays on the broadcast query side; candidates via BroadcastHashJoin, never all-pairs; the per-query top-k plans WindowGroupLimit (partial top-k per partition before the q_id shuffle)",
+      ("s7_multiprobe_topk", "multi-probe fan-out stays on the broadcast query side; candidates via BroadcastHashJoin, never all-pairs; the per-query top-k plans WindowGroupLimit (partial top-k per partition before any q_id shuffle)",
         Seq("BroadcastHashJoin", "WindowGroupLimit"), Seq("BroadcastNestedLoopJoin", "CartesianProduct")),
       ("s1_brute_topk", "the exact baseline scans the corpus once against broadcast queries and its per-query top-k plans WindowGroupLimit — even the brute-force path never shuffles all n×q scored rows to the rank step",
         Seq("WindowGroupLimit"), Seq("SortMergeJoin")),
       ("o18_avro_roundtrip", "the Avro encode/decode stages are narrow (mapPartitions): the only exchange is the final aggregation's",
         Seq("MapPartitions"), Seq()),
-      ("a2_wordcount", "partial aggregation before the word shuffle (map-side combine)",
+      ("a2_wordcount", "partial aggregation (map-side combine) before any word shuffle (a corpus read as one partition, as at sf0.01, needs none)",
         Seq("HashAggregate"), Seq()),
       ("o17_order_limit", "global sort+limit plans TakeOrderedAndProject (per-partition top-k), not a full sort",
         Seq("TakeOrderedAndProject"), Seq()),
@@ -59,7 +59,7 @@ object PlanAudit {
         Seq("ExistingRDD"), Seq()),
       ("s8_ivf_topk", "IVF search is an EQUALITY join on cell id over the checkpointed index (ExistingRDD) — the n×C scoring is confined to the index build, whose per-vector top-1 cell is a map-side-combining max_by aggregate (asserted by SimilaritySpec, invisible here because the checkpoint consumes the build plan)",
         Seq("ExistingRDD", "BroadcastHashJoin"), Seq("CartesianProduct")),
-      ("t12_lang_balanced", "the per-language cap plans WindowGroupLimit: partial top-K per partition before the shuffle, never a full corpus sort",
+      ("t12_lang_balanced", "the per-language cap plans WindowGroupLimit: partial top-K per partition before any shuffle, never a full corpus sort",
         Seq("WindowGroupLimit"), Seq()),
       ("w5_late_data", "the batch watermark is a two-level prefix scan: the row-grain running max is a Window PARTITIONED by bucket, the bucket summary (rows/4096, map-side partial_max) broadcasts back — the only global-order window runs at bucket grain",
         Seq("Window", "partial_max", "BroadcastHashJoin"), Seq()),
@@ -74,7 +74,7 @@ object PlanAudit {
         Seq("Generate explode")),
       ("s3_embedding_neardup", "the exact-cosine audit joins a FIXED-SIZE sample: the corpus-size-independent vec_id cap is pushed down to the parquet scan, so the quadratic pair count cannot grow with the corpus",
         Seq(s"LessThan(vec_id,${graft.ops.Similarity.AuditCap})"), Seq()),
-      ("c6_prep_chunked", "the chunk rollup is the chunker's CLOSED FORM (round 19): one corpus scan into the md5-keyed dedup aggregate — which shuffles (hash, doc_id, lang, n_toks), never the text bytes — then per-doc ceil arithmetic and the lang rollup; the chunk EXPANSION (posexplode into owning chunks, collect_list hashing) no longer appears because the funnel needs counts, not chunk rows (t11 keeps the expansion under oracle proof) — two keyed exchanges total, no explode, no re-scan",
+      ("c6_prep_chunked", "the chunk rollup is the chunker's CLOSED FORM (round 19): one corpus scan into the md5-keyed dedup aggregate — keyed on (hash, doc_id, lang, n_toks), so a shuffle of it carries those, never the text bytes — then per-doc ceil arithmetic and the lang rollup; the chunk EXPANSION (posexplode into owning chunks, collect_list hashing) no longer appears because the funnel needs counts, not chunk rows (t11 keeps the expansion under oracle proof) — at most two keyed exchanges (none over a corpus read as one partition, as at sf0.01), no explode, no re-scan",
         Seq(), Seq("PosExplode", "collect_list", "Generate")),
       ("d7_ngram_jaccard", "the exact-Jaccard audit reads a FIXED-SIZE sample: the corpus-size-independent doc_id cap is pushed to the parquet scan, so the audit's pair output cannot grow with the corpus",
         Seq(s"LessThan(doc_id,${graft.ops.Dedup.JaccardAuditCap})"), Seq()),
@@ -143,7 +143,7 @@ object PlanAudit {
       ("c24_filtered_epochs", "the filtered planner keeps c23's shape exactly — the Gopher keep predicate rides the corpus pass INSIDE the checkpoint (one filtered scan), the final plan is source-grain arithmetic over ExistingRDD plus the zero-key scalar broadcast",
         Seq("ExistingRDD", "BroadcastHashJoin"),
         Seq("FileScan parquet", "CartesianProduct", "BroadcastNestedLoopJoin")),
-      ("t32_repetition_rules", "repetition signals are per-row array expressions on one corpus scan; only the modal-bigram count shuffles, keyed at (doc_id, bigram) grain with map-side combine (partial_count) then a doc-grain partial_max — no corpus-grain sort, no window, no all-pairs",
+      ("t32_repetition_rules", "repetition signals are per-row array expressions on one corpus scan; only the modal-bigram count may shuffle (not over a corpus read as one partition), keyed at (doc_id, bigram) grain with map-side combine (partial_count) then a doc-grain partial_max — no corpus-grain sort, no window, no all-pairs",
         Seq("partial_count", "partial_max"),
         Seq("CartesianProduct", "BroadcastNestedLoopJoin", "Window")),
       ("d17_crosssource_dup", "cross-source attribution runs at PAIR grain over the MATERIALIZED near-dup pair list (ExistingRDD — the session pairs memo, round 19: the banding pipeline ran once, in d6's phase, not again here), the two doc_id→source joins see only the pair list (AQE picks broadcast vs shuffled-hash), and the rollup is a source-pair-grain hash aggregate — no all-pairs, no corpus-grain shuffle",
@@ -209,7 +209,7 @@ object PlanAudit {
       ("s25_ivfpq_rerank_deep", "the deep-short-list rerank (R=100, the clustered-regime knob from BASELINE's measured curve) must plan IDENTICALLY to s24 — only the WindowGroupLimit bound changes: same pruned code-only short-list stage, same bounded R·Q full-vector primary-key fetch, same exact-cosine top-5; deepening R may never change the plan's shape, only its candidate row count",
         Seq("ExistingRDD", "BroadcastHashJoin", "WindowGroupLimit"),
         Seq("CartesianProduct")),
-      ("t26_pii_scrub", "PII scrub is one narrow codegen'd projection pipeline over the corpus scan — four regexp counts and the nested redaction chain per row, zero shuffles, zero joins, no UDFs; the per-doc report filter is pushed into the same stage",
+      ("t26_pii_scrub", "PII scrub is one narrow codegen'd pipeline over the corpus scan — the per-doc report filter is one match of the four patterns as an alternation, then four regexp counts and the nested redaction chain per reported row, zero shuffles, zero joins, no UDFs",
         Seq("FileScan parquet"),
         Seq("), ENSURE_REQUIREMENTS", "Window", "CartesianProduct",
           "BroadcastNestedLoopJoin")),
@@ -371,6 +371,12 @@ object PlanAudit {
     (plan, must.filter(m => !plan.contains(m)), mustNot.filter(m => plan.contains(m)))
   }
 
+  /** A plan line without the numbers that change whenever any plan
+    * before it in the session gains or loses a node: expression ids
+    * (`name#123`, `name#123L`) and exchange `plan_id`s. */
+  private def stable(line: String): String =
+    line.replaceAll("(?<=\\w)#\\d+L?\\b", "").replaceAll(", \\[plan_id=\\d+\\]", "")
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "PLANS.md"
@@ -391,7 +397,7 @@ object PlanAudit {
       val interesting = plan.linesIterator.filter(l =>
         l.contains("Join") || l.contains("Exchange") || l.contains("FileScan") ||
         l.contains("HashAggregate") || l.contains("Window"))
-        .map(_.trim.take(160)).take(12)
+        .map(l => stable(l.trim).take(160)).take(12)
       sb.append("```\n").append(interesting.mkString("\n")).append("\n```\n")
     }
     sb.append("\n# Forced-broadcast hint audit (analyzed plans)\n")

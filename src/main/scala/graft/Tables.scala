@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, StructType}
 
@@ -18,31 +19,45 @@ import graft.ops.Artifacts
   * columns they need as early as possible.
   *
   * Each table path is resolved once. The first load lists the table's
-  * files, infers its Parquet schema (one Spark job over the footers) and
-  * sums the row counts in its footers. Every later load reads with that
-  * schema given, so building a query runs no job and reads no footer.
-  * The resolution is kept with the table's file inventory (name, length
-  * and modification time of each file, as [[Artifacts.fingerprint]]
-  * folds them); a load whose inventory differs, because the table was
-  * rewritten or a part file was appended, resolves it again. The store
-  * holds one entry per path and no data, so it is kept apart from the
-  * per-dir [[ops.Memo]] frame and survives a dir switch. Every call
+  * files, infers its Parquet schema (one Spark job over the footers),
+  * sums the row counts in its footers and builds the table's
+  * `HadoopFsRelation` (its file index, listed once, and that schema).
+  * Every later load is `baseRelationToDataFrame` of that relation: it
+  * runs no data source resolution, lists no file, reads no footer and
+  * starts no job. The resolution is kept with the table's file inventory
+  * (name, length and modification time of each file, as
+  * [[Artifacts.fingerprint]] folds them); a load whose inventory
+  * differs, because the table was rewritten or a part file was
+  * appended, resolves it again, and a load in another session builds
+  * the relation again (a relation belongs to its session). The store
+  * holds one entry per path and no data (a relation holds its file
+  * listing and its session, until the path loads in another session),
+  * so it is kept apart from the per-dir [[ops.Memo]] frame and
+  * survives a dir switch. Every call
   * returns a fresh `Dataset` with its own attribute ids, so a table
   * joined with itself resolves as two relations. Schemas are inferred
   * under the [[GraftSession.create]] contract, whose
   * `spark.sql.legacy.parquet.nanosAsLong` decides how `events.ts` reads.
   *
   * The fact tables (orders, lineitem, events, documents, embeddings)
-  * fan out: a table of at least [[FanOutMinRows]] rows, read as fewer
-  * files than `defaultParallelism`, is hash-partitioned on its primary
-  * key into `defaultParallelism` partitions. The driver's testdata files
-  * are single-row-group, so Spark scans each as one split, which would
-  * run every CPU-heavy per-row pipeline (tokenize, shingle, hash,
-  * cosine) on one core. A smaller table, or one with enough files, is
-  * returned as read: below the threshold the shuffle's extra stage, job
-  * and AQE re-plan cost more than the parallel work saves. The rule
-  * reads only the resolution (file count and footer row count), so a
-  * table rewritten across the threshold is decided again.
+  * are partitioned by their row count:
+  *  - fewer than [[FanOutMinRows]] rows: one partition (`coalesce(1)`,
+  *    however many files). The plan reports `SinglePartition`, which
+  *    satisfies every distribution, so a groupBy, window or join over
+  *    the table plans no exchange: the query runs as one job, with no
+  *    shuffle stage and no AQE re-plan. (`CoalesceExec` ends its
+  *    whole-stage codegen stage, a few milliseconds at these sizes.)
+  *  - at least [[FanOutMinRows]] rows in fewer files than
+  *    `defaultParallelism`: hash-partitioned on the primary key into
+  *    `defaultParallelism` partitions. The generated testdata files are
+  *    single-row-group, so Spark scans each as one split, which would
+  *    run every CPU-heavy per-row pipeline (tokenize, shingle, hash,
+  *    cosine) on one core.
+  *  - otherwise as read.
+  * Below the threshold the shuffle's extra stage, job and AQE re-plan
+  * cost more than the parallel work saves. The rule reads only the
+  * resolution (file count and footer row count), so a table rewritten
+  * across the threshold is decided again.
   *
   * The partitioning hashes a unique key rather than round-robin: a
   * keyless `repartition(n)` sorts its whole input first so that retried
@@ -79,34 +94,48 @@ object Tables {
     fanOut(s, s"$dir/embeddings.parquet", Seq("vec_id"))
 
   /** What a load knows of a table: the file inventory it was resolved
-    * from, and the schema, data file count and footer row count read
-    * from that inventory. */
-  private case class Resolved(inventory: String, schema: StructType, files: Int, rows: Long)
+    * from, the schema, data file count and footer row count read from
+    * that inventory, and the relation those resolve to (its session, its
+    * file index over that inventory, the schema). */
+  private case class Resolved(inventory: String, schema: StructType, files: Int, rows: Long,
+      relation: HadoopFsRelation)
 
   /** Table path -> its resolution. */
   private val resolved = new ConcurrentHashMap[String, Resolved]
 
   private def load(s: SparkSession, path: String): DataFrame =
-    s.read.schema(resolve(s, path).schema).parquet(path)
+    s.baseRelationToDataFrame(resolve(s, path).relation)
 
-  /** The table's resolution, made again only when its inventory moved.
-    * Two racing first loads may both resolve; they store the same entry.
-    * A data file is one Spark reads: no name segment starts with `_` or
-    * `.` (so `_SUCCESS` and `.crc` sidecars are not counted). */
+  /** The table's resolution, made again only when its inventory moved;
+    * its relation is built again also for another session. Two racing
+    * first loads may both resolve; they store equivalent entries. A data file
+    * is one Spark reads: no name segment starts with `_` or `.` (so
+    * `_SUCCESS` and `.crc` sidecars are not counted). */
   private def resolve(s: SparkSession, path: String): Resolved = {
     val files = Artifacts.inventory(s, path)
     val inventory = Artifacts.fingerprintOf(files)
-    Option(resolved.get(path)).filter(_.inventory == inventory).getOrElse {
-      val data = files.getOrElse(Nil).collect {
-        case (name, f) if name.split('/').forall(n => !n.startsWith("_") && !n.startsWith(".")) =>
-          f.getPath
-      }
-      val r = Resolved(inventory, s.read.parquet(path).schema, data.size,
-        footerRows(s, data))
-      resolved.put(path, r)
-      r
+    Option(resolved.get(path)).filter(_.inventory == inventory) match {
+      case Some(r) if r.relation.sparkSession eq s => r
+      case known =>
+        val (schema, count, rows) = known.fold {
+          val data = files.getOrElse(Nil).collect {
+            case (name, f) if name.split('/').forall(n => !n.startsWith("_") && !n.startsWith(".")) =>
+              f.getPath
+          }
+          (s.read.parquet(path).schema, data.size, footerRows(s, data))
+        }(r => (r.schema, r.files, r.rows))
+        val r = Resolved(inventory, schema, count, rows, relationOf(s, path, schema))
+        resolved.put(path, r)
+        r
     }
   }
+
+  /** The file relation a read of `path` with `schema` resolves to. */
+  private def relationOf(s: SparkSession, path: String, schema: StructType): HadoopFsRelation =
+    s.read.schema(schema).parquet(path).queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    }.collect { case r: HadoopFsRelation => r }
+      .getOrElse(throw new IllegalStateException(s"$path does not read as a file relation"))
 
   /** Fewest rows at which a single-split table is hash-partitioned.
     *
@@ -133,15 +162,16 @@ object Tables {
     * `embeddings` (2,000) still fan out. */
   private[graft] val FanOutMinRows = 1500L
 
-  /** The table at `path`, hash-partitioned on `keys` when it has at
-    * least [[FanOutMinRows]] rows in fewer files than
-    * `defaultParallelism`; `fix` is applied to the scan first. */
+  /** The table at `path`: one partition below [[FanOutMinRows]] rows,
+    * hash-partitioned on `keys` from that size when it is in fewer files
+    * than `defaultParallelism`; `fix` is applied to the scan first. */
   private def fanOut(s: SparkSession, path: String, keys: Seq[String],
       fix: DataFrame => DataFrame = identity): DataFrame = {
     val t = resolve(s, path)
-    val df = fix(s.read.schema(t.schema).parquet(path))
+    val df = fix(s.baseRelationToDataFrame(t.relation))
     val target = s.sparkContext.defaultParallelism
-    if (t.rows >= FanOutMinRows && t.files < target) df.repartition(target, keys.map(col): _*)
+    if (t.rows < FanOutMinRows) df.coalesce(1)
+    else if (t.files < target) df.repartition(target, keys.map(col): _*)
     else df
   }
 

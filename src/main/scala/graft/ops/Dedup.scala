@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.{GraftExtensions, MinHashExpr}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -37,7 +38,7 @@ object Dedup {
 
   // ---- MinHash + LSH -------------------------------------------------
 
-  val NumPerms = 16
+  val NumPerms: Int = MinHashExpr.NumPerms
   val Bands = 4 // 4 bands × 4 rows
 
   /** n-word shingles of the token array `t`, built by zipping n
@@ -59,61 +60,28 @@ object Dedup {
     documents.select(col("doc_id"), tokens.as("t"))
       .select(col("doc_id"), explode(shingleCol(3, col("t"))).as("sh"))
 
-  /** Mersenne prime 2^31−1: modulus of the affine permutation family. */
-  val MinhashPrime = 2147483647L
-
-  /** Deterministic (a, b) pairs for h_i(x) = (a·x + b) mod p. Seeded so
-    * the DuckDB oracle (OracleSql) derives the identical family. */
-  lazy val minhashPerms: Array[(Long, Long)] = {
-    val rnd = new scala.util.Random(7)
-    Array.fill(NumPerms)(
-      (rnd.nextInt(Int.MaxValue - 1).toLong + 1L, rnd.nextInt(Int.MaxValue).toLong))
-  }
-
-  /** MinHash signatures per document: ONE md5 per shingle (first 15 hex
-    * chars → 60-bit int, reduced mod 2^31−1), then NumPerms affine
-    * permutations `(a·h + b) mod p` — pure 64-bit arithmetic, exact and
-    * identical in any engine, 16× less hashing than an md5-per-perm
-    * scheme.
-    *
-    * Computed by exploding shingles and min-aggregating per doc rather
-    * than as array expressions over a shingle column: CollapseProject
-    * would inline the tokenize+shingle pipeline into every permutation
-    * expression, whereas the explode shape hashes each shingle exactly
-    * once and the min() combines map-side before the one doc_id shuffle —
-    * the shape that survives a 100× scale-up. */
+  /** MinHash signatures per document, one column `mh0`…`mh15` per
+    * permutation: [[minhashSigArray]] of each row, min-combined per
+    * `doc_id` (the minimum over the union of a doc's rows' shingles). */
   def minhashSignatures(s: SparkSession, dir: String): DataFrame =
     minhashSigFrameOf(Tables.documents(s, dir))
 
   /** Frame-level form of [[minhashSignatures]] — any (doc_id, text). */
-  def minhashSigFrameOf(documents: DataFrame): DataFrame =
-    shingled(documents)
-      .select(col("doc_id"),
-        (conv(substring(md5(col("sh")), 1, 15), 16, 10).cast(LongType)
-          % MinhashPrime).as("h"))
+  def minhashSigFrameOf(documents: DataFrame): DataFrame = {
+    GraftExtensions.register(documents.sparkSession)
+    documents.select(col("doc_id"), minhashSigArray(tokens).as("sig"))
       .groupBy(col("doc_id"))
-      .agg(
-        min((col("h") * minhashPerms(0)._1 + minhashPerms(0)._2) % MinhashPrime).as("mh0"),
-        (1 until NumPerms).map { i =>
-          val (a, b) = minhashPerms(i)
-          min((col("h") * a + b) % MinhashPrime).as(s"mh$i")
-        }: _*)
-
-  /** The SAME signature as one per-row ARRAY expression over `text` —
-    * the streaming-ingest form: an arriving document is a single row, so
-    * the signature needs no explode+groupBy (and a streaming scrub stage
-    * stays stateless). Identical values to [[minhashSignatures]] by
-    * construction (same shingles, same md5→60-bit→mod-p hash, same
-    * affine family); the explode form remains the BATCH path because
-    * there the per-shingle hash must be computed once, map-side-combined
-    * (see the [[minhashSignatures]] scaladoc). */
-  private[graft] def minhashSigArray(t: Column): Column = {
-    val hs = transform(shingleCol(3, t), sh =>
-      conv(substring(md5(sh), 1, 15), 16, 10).cast(LongType) % MinhashPrime)
-    array(minhashPerms.map { case (a, b) =>
-      array_min(transform(hs, h => (h * a + b) % MinhashPrime))
-    }: _*)
+      .agg(min(col("sig").getItem(0)).as("mh0"),
+        (1 until NumPerms).map(i => min(col("sig").getItem(i)).as(s"mh$i")): _*)
   }
+
+  /** The signature of the token array `t` as one per-row array: the
+    * code-generated [[MinHashExpr]] kernel (one MD5 per 3-word shingle,
+    * its first 60 bits mod p, [[NumPerms]] affine minimums). The one
+    * definition of the signature for the batch, streaming and serving
+    * forms. It resolves as SQL function `graft_minhash`: the session
+    * needs graft's functions ([[GraftExtensions]]). */
+  private[graft] def minhashSigArray(t: Column): Column = call_function("graft_minhash", t)
 
   /** The [[Bands]] (band, bucket) structs of a signature array column —
     * shared by the batch banding and the streaming ingest join key. */

@@ -1159,6 +1159,7 @@ private[streaming] final class DedupSignature(spark: SparkSession) {
 
   private val layers: Seq[UnsafeProjection] = {
     import spark.implicits._
+    graft.functions.GraftExtensions.register(spark) // graft_minhash
     val template = Seq("").toDF("text")
       .select(md5(col("text")).as("ch"), graft.ops.TextAnalysis.tokens.as("t"))
       .select(col("ch"), Dedup.minhashSigArray(col("t")).as("sig"))

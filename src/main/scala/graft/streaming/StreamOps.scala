@@ -531,6 +531,7 @@ object StreamOps {
   def deltaDedupStream(docs: Dataset[DocStreamEvent],
       corpusBanded: DataFrame, corpusHashes: DataFrame): DataFrame = {
     val nPerms = graft.ops.Dedup.NumPerms
+    graft.functions.GraftExtensions.register(docs.sparkSession) // graft_minhash
     val cand = docs.toDF()
       .withWatermark("ts", "10 seconds")
       .withColumn("ch", md5(col("text")))

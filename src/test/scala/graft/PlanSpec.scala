@@ -28,6 +28,53 @@ class PlanSpec extends SparkSpec
       tokenizers.mkString("\n"))
   }
 
+  test("t26 matches the four PII patterns once per doc, in one alternation, before counting") {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, RegExpExtractAll, RLike}
+    import graft.ops.TextAnalysis.{PiiCardRe, PiiEmailRe, PiiIpRe, PiiPhoneRe}
+    val t26 = SparkEntry.queries("t26_pii_scrub")(spark, sf001dir)
+    t26.queryExecution.toRdd.count()
+    val pii = Set(PiiEmailRe, PiiCardRe, PiiIpRe, PiiPhoneRe)
+    // the expressions the stages evaluate (a scan lists its filters too)
+    val exprs = flatMap(t26.queryExecution.executedPlan) {
+      case _: org.apache.spark.sql.execution.DataSourceScanExec => Nil
+      case p => p.expressions
+    }
+    // regexp_count plans as size(regexp_extract_all(…))
+    val counts = exprs.flatMap(_.collect {
+      case e @ RegExpExtractAll(_, Literal(p, _), _) if pii(String.valueOf(p)) => e
+    })
+    val matches = exprs.flatMap(_.collect { case e: RLike => e })
+    assert(counts.size === 4, s"${counts.size} regexp counts:\n${counts.mkString("\n")}")
+    assert(matches.size === 1, s"${matches.size} rlike filters:\n${matches.mkString("\n")}")
+  }
+
+  /** The shuffles of a materialized frame's final plan. */
+  private def shuffles(df: org.apache.spark.sql.DataFrame) = {
+    df.queryExecution.toRdd.count()
+    collect(df.queryExecution.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+  }
+
+  test("a shuffle over one partition is dropped under an aggregate, and kept under a join") {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    // a full outer sort-merge join of two one-partition inputs reports
+    // UnknownPartitioning(1), which satisfies no clustered distribution
+    def one(name: String) = spark.range(0, 40, 1, 1).select((col("id") % 10).as("k"),
+      col("id").as(name)).coalesce(1)
+    val outer = one("a").hint("merge").join(one("b"), Seq("k"), "full_outer")
+    val grouped = outer.groupBy(col("k")).agg(count(lit(1)).as("n"))
+    assert(shuffles(grouped).isEmpty, "the aggregate's one-partition shuffle stayed")
+    assert(grouped.collect().map(_.getLong(1)).sum === 160)
+    // negative control: a sort-merge join with one one-partition side
+    // keeps both exchanges (its other side is shuffled to the same count)
+    val wide = spark.range(0, 40, 1, 4).select((col("id") % 10).as("k"), col("id").as("c"))
+    val joined = outer.hint("merge").join(wide, Seq("k"))
+    val kept = shuffles(joined)
+    assert(kept.size === 2, s"${kept.size} shuffles:\n${kept.mkString("\n")}")
+    assert(joined.count() === 640)
+  }
+
   PlanAudit.checks.foreach { case (name, claim, must, mustNot) =>
     test(s"plan check: $name") {
       val (plan, missing, present) = PlanAudit.evaluate(spark, sf001dir, name, must, mustNot)

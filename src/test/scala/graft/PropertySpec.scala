@@ -695,4 +695,141 @@ class PropertySpec extends SparkSpec {
     assert(coded.as[(String, String, String)].collect().toSet === expected)
     assert(interpreted.as[(String, String, String)].collect().toSet === expected)
   }
+
+  /** The MinHash signature as it was computed before the kernel: 3-word
+    * shingles by a staggered-slice zip (the whole token list joined for
+    * fewer than 3 tokens), each hashed as the first 15 hex digits of its
+    * `md5` through `conv`, mod p. */
+  private object MinHashReference {
+    import graft.functions.MinHashExpr.{NumPerms, Prime => MinhashPrime, perms => minhashPerms}
+    import org.apache.spark.sql.{Column, DataFrame}
+
+    def shingles(t: Column): Column = {
+      val m = size(t) - 2
+      val zipped = (1 to 3).map(k => slice(t, lit(k), m))
+        .reduce((acc, s) => zip_with(acc, s, (a, b) => concat(a, lit(" "), b)))
+      when(size(t) >= 3, array_distinct(zipped)).otherwise(array(array_join(t, " ")))
+    }
+    def hash(sh: Column): Column =
+      conv(substring(md5(sh), 1, 15), 16, 10).cast("long") % MinhashPrime
+
+    /** The batch form: explode the shingles, min-aggregate per doc_id. */
+    def exploded(docs: DataFrame): DataFrame =
+      docs.select(col("doc_id"), TextAnalysis.tokens.as("t"))
+        .select(col("doc_id"), explode(shingles(col("t"))).as("sh"))
+        .select(col("doc_id"), hash(col("sh")).as("h"))
+        .groupBy(col("doc_id"))
+        .agg(min((col("h") * minhashPerms(0)._1 + minhashPerms(0)._2) % MinhashPrime).as("mh0"),
+          (1 until NumPerms).map { i =>
+            val (a, b) = minhashPerms(i)
+            min((col("h") * a + b) % MinhashPrime).as(s"mh$i")
+          }: _*)
+
+    /** The per-row form: higher-order functions over the shingle array. */
+    def perRow(t: Column): Column = {
+      val hs = transform(shingles(t), hash(_))
+      array(minhashPerms.map { case (a, b) =>
+        array_min(transform(hs, h => (h * a + b) % MinhashPrime))
+      }: _*)
+    }
+
+    /** Plain Scala, for words already split: the same shingles and hash. */
+    def of(words: Seq[String]): Seq[Long] = {
+      val sh = if (words.size >= 3) words.sliding(3).map(_.mkString(" ")).toSeq
+        else Seq(words.mkString(" "))
+      val hs = sh.map { x =>
+        val hex = java.security.MessageDigest.getInstance("MD5")
+          .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
+        java.lang.Long.parseLong(hex.take(15), 16) % MinhashPrime
+      }
+      minhashPerms.toSeq.map { case (a, b) => hs.map(h => (h * a + b) % MinhashPrime).min }
+    }
+  }
+
+  /** doc_id -> its 16 minimums (None for NULL), from columns mh0…mh15. */
+  private def signatures(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Option[Long]]] =
+    df.collect().map { r =>
+      val id = r.getLong(r.fieldIndex("doc_id"))
+      id -> (0 until graft.ops.Dedup.NumPerms).map { i =>
+        val j = r.fieldIndex(s"mh$i")
+        if (r.isNullAt(j)) None else Some(r.getLong(j))
+      }
+    }.toMap
+
+  private def longs(r: org.apache.spark.sql.Row, i: Int): Seq[Option[Long]] =
+    r.getSeq[java.lang.Long](i).map(v => Option(v).map(_.longValue))
+
+  test("property: graft_minhash equals the exploded md5 signature and the per-row HOF form") {
+    import spark.implicits._
+    import graft.ops.Dedup
+    val crafted: Seq[(Long, Option[String])] = Seq(
+      (1L, None), (2L, Some("")), (3L, Some(" -- ")), (4L, Some("one")),
+      (5L, Some("one two")), (6L, Some("One, two; THREE")),
+      (7L, Some("a b a b a b a b")), (8L, Some("\u00C9clair stra\u00DFe \u212Aelvin x1 x1 x1")),
+      // one doc_id on two rows: the minimum over the union of their shingles
+      (9L, Some("alpha beta gamma")), (9L, Some("delta epsilon zeta eta")),
+      (10L, None), (10L, Some("only row with text")))
+    val oracle = Map(
+      1L -> Seq.fill(Dedup.NumPerms)(None),
+      2L -> MinHashReference.of(Nil).map(Some(_)),
+      3L -> MinHashReference.of(Nil).map(Some(_)),
+      4L -> MinHashReference.of(Seq("one")).map(Some(_)),
+      5L -> MinHashReference.of(Seq("one", "two")).map(Some(_)),
+      6L -> MinHashReference.of(Seq("one", "two", "three")).map(Some(_)),
+      7L -> MinHashReference.of(Seq("a", "b", "a")).zip(MinHashReference.of(Seq("b", "a", "b")))
+        .map { case (x, y) => Some(x min y) },
+      9L -> MinHashReference.of(Seq("alpha", "beta", "gamma"))
+        .zip(MinHashReference.of(Seq("delta", "epsilon", "zeta", "eta")))
+        .map { case (x, y) => Some(x min y) },
+      10L -> MinHashReference.of(Seq("only", "row", "with", "text")).map(Some(_)))
+    (1 to 3).foreach { k =>
+      val rows = crafted ++ corpus(900 + k, 150).map { case (id, t) => (id + 1000, Some(t)) }
+      // RDD-backed, so the signature runs in tasks, not folded on the driver
+      val docs = spark.sparkContext.parallelize(rows, 3).toDF("doc_id", "text")
+      val got = signatures(Dedup.minhashSigFrameOf(docs))
+      assert(got === signatures(MinHashReference.exploded(docs)), s"seed ${900 + k}")
+      assert(got.size === rows.map(_._1).distinct.size, "a doc lost its row")
+      oracle.foreach { case (id, sig) => assert(got(id) === sig, s"doc $id") }
+      docs.select(col("doc_id"), TextAnalysis.tokens.as("t"))
+        .select(col("doc_id"), Dedup.minhashSigArray(col("t")), MinHashReference.perRow(col("t")))
+        .collect().foreach { r =>
+          assert(longs(r, 1) === longs(r, 2), s"seed ${900 + k}, doc ${r.getLong(0)}")
+        }
+    }
+  }
+
+  test("graft_minhash and the tokenizer are code-generated: a plain RDD action maps case as the JVM does") {
+    import spark.implicits._
+    import graft.ops.Dedup
+    // tasks of `queryExecution.toRdd` get no SQL conf: an expression
+    // evaluated interpreted there maps case with ICU, which knows
+    // U+2C2F and U+1C89 and builds its title-case table on first use
+    val samples = Seq("Word \u2C2F one two", "\u1C89 Ab cd EF", "plain ascii text here",
+      "\u2C2F\u1C89 x")
+    assert(samples.exists(t => com.ibm.icu.lang.UCharacter.toLowerCase(t) != t.toLowerCase),
+      "no sample tells ICU's case mapping from the JVM's")
+    val df = spark.sparkContext.parallelize(samples, 2).toDF("text")
+      .select(col("text"), lower(col("text")), TextAnalysis.tokens.as("t"),
+        // case-mapped words, non-ASCII kept, so the signature sees the mapping
+        Dedup.minhashSigArray(split(lower(col("text")), " ")),
+        Dedup.minhashSigArray(TextAnalysis.tokens))
+    assert(df.queryExecution.executedPlan.find(
+      _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]).nonEmpty)
+    // a stage whose generated code does not compile would run interpreted
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    val got = try df.queryExecution.toRdd.map { r =>
+      (r.getUTF8String(0).toString, r.getUTF8String(1).toString,
+        r.getArray(2).toSeq[org.apache.spark.unsafe.types.UTF8String](
+          org.apache.spark.sql.types.StringType).map(_.toString),
+        r.getArray(3).toLongArray.toSeq, r.getArray(4).toLongArray.toSeq)
+    }.collect() finally spark.conf.unset("spark.sql.codegen.fallback")
+    assert(got.length === samples.length)
+    got.foreach { case (text, lowered, t, mapped, sig) =>
+      val words = text.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty).toSeq
+      assert(lowered === text.toLowerCase, text)
+      assert(t === words, text)
+      assert(mapped === MinHashReference.of(text.toLowerCase.split(" ").toSeq), text)
+      assert(sig === MinHashReference.of(words), text)
+    }
+  }
 }

@@ -3,16 +3,17 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.FileSystem
-import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.metrics.source.{CodegenMetrics, HiveCatalogMetrics}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions.{col, lit}
 
-/** `Tables` resolves each table once, fans out only a table with enough
-  * rows, and a warm query neither infers a schema, reads a footer, nor
+/** `Tables` resolves each table once, reads a small table as one
+  * partition and fans out only a table with enough rows, and a warm
+  * query neither infers a schema, reads a footer, lists a file, nor
   * compiles a class it compiled before. */
 class TablesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -61,6 +62,53 @@ class TablesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       buildFloor()
     }
     assert(read === 0, s"$read byte(s) read for 10 loads and 8 query builds")
+  }
+
+  test("a resolved table loads, and the floor queries build, without listing a file") {
+    def listed(body: => Unit): Long = {
+      val before = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+      body
+      HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - before
+    }
+    val corpus = java.nio.file.Files.createTempDirectory("graft-listing").toString
+    spark.range(10).select(col("id").as("doc_id"), lit("a b").as("text"))
+      .write.parquet(s"$corpus/documents.parquet")
+    assert(listed(Tables.documents(spark, corpus)) > 0, "a first load lists the table's files")
+    loaders.foreach(_(spark, sf001))
+    buildFloor()
+    val n = listed {
+      loaders.foreach(_(spark, sf001))
+      buildFloor()
+    }
+    assert(n === 0, s"$n file(s) listed for 10 loads and 8 query builds")
+  }
+
+  /** The final plan, out of its adaptive wrapper. */
+  private def finalPlan(df: DataFrame) = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
+  }
+
+  test("a table of fewer than FanOutMinRows rows reads as one partition, and a groupBy over it shuffles nothing") {
+    val corpus = java.nio.file.Files.createTempDirectory("graft-single").toString
+    // two files, so the scan alone would read two splits
+    spark.range(Tables.FanOutMinRows - 1)
+      .select(col("id").as("doc_id"), (col("id") % 7).cast("string").as("text"))
+      .repartition(2).write.parquet(s"$corpus/documents.parquet")
+    val docs = Tables.documents(spark, corpus)
+    assert(finalPlan(docs).outputPartitioning === SinglePartition)
+    assert(docs.rdd.getNumPartitions === 1)
+    val grouped = docs.groupBy(col("text")).count()
+    assert(grouped.collect().map(_.getLong(1)).sum === Tables.FanOutMinRows - 1)
+    val exchanges = collect(grouped.queryExecution.executedPlan) { case e: Exchange => e }
+    assert(exchanges.isEmpty, s"a groupBy over one partition shuffled:\n$exchanges")
+  }
+
+  test("j6 runs as one job") {
+    val j6 = SparkEntry.queries("j6_windowed_outer")
+    j6(spark, sf001).queryExecution.toRdd.count()
+    val jobs = jobsRunBy(j6(spark, sf001).queryExecution.toRdd.count())
+    assert(jobs === 1, s"j6 ran $jobs jobs")
   }
 
   test("a table fans out from FanOutMinRows rows, and a rewrite across it is decided again") {
