@@ -73,6 +73,11 @@ object Bench {
     // the load-robust number BASELINE.md's round-7 re-baseline keys off
     // (this box's external load contaminates single-shot totals by up to
     // 2×; the per-query min of two back-to-back reps sheds most bursts).
+    // Every entry is a prepared query (SparkEntry): the first rep builds,
+    // analyzes, optimizes and plans it, and a later rep of an entry whose
+    // plans were kept is a prepared call that reuses them. So "value"
+    // includes each query's build, and "queries_best" is a prepared call
+    // for the kept entries.
     // (Default stays 2 deliberately: BASELINE.md's round-7 comparison rule
     // keys off the best-of-2 totals, and the driver capture must carry
     // them. A driver with a hard runtime ceiling sets

@@ -209,7 +209,7 @@ object PlanAudit {
       ("s25_ivfpq_rerank_deep", "the deep-short-list rerank (R=100, the clustered-regime knob from BASELINE's measured curve) must plan IDENTICALLY to s24 — only the WindowGroupLimit bound changes: same pruned code-only short-list stage, same bounded R·Q full-vector primary-key fetch, same exact-cosine top-5; deepening R may never change the plan's shape, only its candidate row count",
         Seq("ExistingRDD", "BroadcastHashJoin", "WindowGroupLimit"),
         Seq("CartesianProduct")),
-      ("t26_pii_scrub", "PII scrub is one narrow codegen'd pipeline over the corpus scan — the per-doc report filter is one match of the four patterns as an alternation, then four regexp counts and the nested redaction chain per reported row, zero shuffles, zero joins, no UDFs",
+      ("t26_pii_scrub", "PII scrub is one narrow codegen'd pipeline over the corpus scan — each doc's text is built once, the per-doc report is one match of the four patterns as an alternation (an explode that yields a matching doc's text once), then four regexp counts and the nested redaction chain per reported row, zero shuffles, zero joins, no UDFs",
         Seq("FileScan parquet"),
         Seq("), ENSURE_REQUIREMENTS", "Window", "CartesianProduct",
           "BroadcastNestedLoopJoin")),

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, StructType}
 
-import graft.ops.Artifacts
+import graft.ops.{Artifacts, Prepared}
 
 /** Loaders for the driver-generated parquet star schema (TESTDATA.md).
   *
@@ -114,6 +114,7 @@ object Tables {
   private def resolve(s: SparkSession, path: String): Resolved = {
     val files = Artifacts.inventory(s, path)
     val inventory = Artifacts.fingerprintOf(files)
+    Prepared.resolved(path, inventory)
     Option(resolved.get(path)).filter(_.inventory == inventory) match {
       case Some(r) if r.relation.sparkSession eq s => r
       case known =>

@@ -95,8 +95,11 @@ object Artifacts {
     * an md5: a regenerated table changes length or mtime, so dependent
     * artifacts miss. No data is read — this is a directory listing, the
     * same cost class as the footer-metadata row counts. */
-  def fingerprint(s: SparkSession, dir: String): String =
-    fingerprintOf(inventory(s, dir))
+  def fingerprint(s: SparkSession, dir: String): String = {
+    val fp = fingerprintOf(inventory(s, dir))
+    Prepared.resolved(dir, fp)
+    fp
+  }
 
   /** The listing a [[fingerprint]] folds: each file of `dir` (`dir`
     * itself when it is a file) and of its immediate subdirectories, with
@@ -248,8 +251,11 @@ object Artifacts {
     } catch { case _: java.io.FileNotFoundException => () }
   }
 
-  def read(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(path(s, dir, name))
+  def read(s: SparkSession, dir: String, name: String): DataFrame = {
+    val p = path(s, dir, name)
+    fingerprint(s, p) // a prepared query that reads the artifact is keyed on it
+    s.read.parquet(p)
+  }
 
   /** The store-first read: artifact if enabled + present + FRESH
     * (manifest fingerprint matches the corpus — a mutated corpus is a

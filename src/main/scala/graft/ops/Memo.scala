@@ -30,7 +30,14 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    and the next get builds again.
   *
   * Values are a `DataFrame`, a case class of `DataFrame`s, or a plain
-  * value such as a `Double` (which holds no blocks). */
+  * value such as a `Double` (which holds no blocks).
+  *
+  * The frame also holds one [[Prepared]] tag per `SparkEntry.queries`
+  * entry: that entry's kept analyzed, optimized and physical plans. A
+  * dir or context switch drops them with the rest of the frame. They
+  * hold no blocks: a get during a prepared query's build marks the
+  * build as one never to keep, so no kept plan reads a memo's
+  * checkpoint. */
 object Memo {
 
   /** A memo slot holding a value of type `V`; compared by identity. */
@@ -48,8 +55,10 @@ object Memo {
   private var dir: String = _
   private val cells = scala.collection.mutable.HashMap.empty[Tag[_], Cell]
 
-  def apply[V](s: SparkSession, dir: String, tag: Tag[V])(build: => V): V =
+  def apply[V](s: SparkSession, dir: String, tag: Tag[V])(build: => V): V = {
+    Prepared.readMemo()
     cellFor(s.sparkContext, dir, tag).get(build).asInstanceOf[V]
+  }
 
   private def cellFor(sc: SparkContext, d: String, tag: Tag[_]): Cell = synchronized {
     if (!(context eq sc) || dir != d) {

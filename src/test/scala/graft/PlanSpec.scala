@@ -48,6 +48,20 @@ class PlanSpec extends SparkSpec
     assert(matches.size === 1, s"${matches.size} rlike filters:\n${matches.mkString("\n")}")
   }
 
+  test("t26 builds each document's text once: one piiSynth concat in the tree") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Concat}
+    val t26 = SparkEntry.queries("t26_pii_scrub")(spark, sf001dir)
+    t26.queryExecution.toRdd.count()
+    // the concat that appends the planted PII to a document's text
+    val synth = flatMap(t26.queryExecution.executedPlan) {
+      case _: org.apache.spark.sql.execution.DataSourceScanExec => Nil
+      case p => p.expressions
+    }.flatMap(_.collect {
+      case e @ Concat((a: AttributeReference) +: _) if a.name == "text" => e
+    })
+    assert(synth.size === 1, s"${synth.size} piiSynth concats:\n${synth.mkString("\n")}")
+  }
+
   /** The shuffles of a materialized frame's final plan. */
   private def shuffles(df: org.apache.spark.sql.DataFrame) = {
     df.queryExecution.toRdd.count()
